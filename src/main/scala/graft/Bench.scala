@@ -1,5 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Timed run of the query registry: warm-up, then each query min-of-2,
+  * one JSON line to stdout and BENCH_LOCAL.json. Query names as args
+  * restrict the run to those queries (stdout only), e.g.
+  *   SPARK_GRAFT_CPUS=32 runMain graft.Bench q189_prefix_join [q...] */
 object Bench {
   private def readLoadavg: String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -7,6 +12,8 @@ object Bench {
     catch { case _: Throwable => "" }
 
   def main(args: Array[String]): Unit = {
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // sampled BEFORE the session spins up 32 threads: this is the
@@ -27,14 +34,13 @@ object Bench {
     def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
         session: org.apache.spark.sql.SparkSession = spark): Double = {
       val t0 = System.nanoTime()
-      val ok = try { fn(session, sfDir).count(); true }
+      // the query's cached relations live and die in its own scope, so
+      // queries don't degrade each other through leftover storage memory
+      val ok = try { graft.ops.TextKit.withCacheScope(fn(session, sfDir).count()); true }
         catch { case t: Throwable =>
           System.err.println(s"bench query failed: ${t.getClass.getName}: ${t.getMessage}")
           false }
       val dt = (System.nanoTime() - t0) / 1e9
-      // release per-query persisted relations so queries don't degrade
-      // each other through leftover storage memory
-      spark.catalog.clearCache()
       if (ok) dt else -1.0
     }
     // The host VM shows multi-x run-to-run noise (see BASELINE.md):
@@ -51,7 +57,9 @@ object Bench {
     // session (spark.newSession(): same executors/JIT, empty catalog and
     // memo) — both measurements are honest cold source->lake->view runs.
     val freshSession = Set("q35_ta_pipeline")
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (name, _) => args.isEmpty || args.contains(name) }
+        .map { case (name, fn) =>
       val first = once(fn)
       val second =
         if (first < 0) first
@@ -76,7 +84,7 @@ object Bench {
     // repo (snapshot-committed per round).
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","loadavg_start":"$loadavgStart","loadavg_end":"$readLoadavg"}"""
     println(line)
-    try java.nio.file.Files.writeString(
+    if (args.isEmpty) try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
     catch { case t: Throwable =>
       System.err.println(s"BENCH_LOCAL.json write failed: ${t.getMessage}") }

@@ -101,12 +101,12 @@ object ScaleSmoke {
       val t2 = System.nanoTime()
       graft.ops.Similarity.searchIvfPq(ix, nQueries = 20).count()
       val tSearch = (System.nanoTime() - t2) / 1e9
-      graft.ops.Dedup.releaseCaches()
+      graft.ops.TextKit.releaseCaches()
       val t1 = System.nanoTime()
       val nSem = graft.ops.Similarity
         .semanticDedup(emb, nCells = cells, trainSampleMod = 4).count()
       val tSem = (System.nanoTime() - t1) / 1e9
-      graft.ops.Dedup.releaseCaches()
+      graft.ops.TextKit.releaseCaches()
       spark.catalog.clearCache()
       // only the embedding base is read again after this point
       embBase.cache(); embBase.count()
@@ -144,7 +144,7 @@ object ScaleSmoke {
         graft.ops.Similarity.lshTopK(emb, nQueries = 10, k = 10,
           tables = 8), exact)
       exact.unpersist()
-      graft.ops.Dedup.releaseCaches()
+      graft.ops.TextKit.releaseCaches()
       spark.catalog.clearCache()
       embBase.cache(); embBase.count()
       println(f"""{"experiment":"$label","rows":${ne * times},""" +
@@ -178,7 +178,7 @@ object ScaleSmoke {
       val t1 = System.nanoTime()
       val nEnc = ix.encoded.count()
       val tEnc = (System.nanoTime() - t1) / 1e9
-      graft.ops.Dedup.releaseCaches()
+      graft.ops.TextKit.releaseCaches()
       spark.catalog.clearCache()
       embBase.cache(); embBase.count()
       if (!silent)
@@ -265,7 +265,7 @@ object ScaleSmoke {
         val n = graft.ops.Similarity
           .semanticClusters(emb, nCells = cells).count()
         val t = (System.nanoTime() - t0) / 1e9
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache()
         embBase.cache(); embBase.count()
         println(f"""{"experiment":"$label","rows":${ne * times},""" +
@@ -400,7 +400,7 @@ object ScaleSmoke {
       val t1 = System.nanoTime()
       val nR = graft.ops.Similarity.searchIvfPq(buildOn(corpus)).count()
       val tRebuild = (System.nanoTime() - t1) / 1e9
-      graft.ops.Dedup.releaseCaches()
+      graft.ops.TextKit.releaseCaches()
       spark.catalog.clearCache()
       println(f"""{"experiment":"append_${k}x","rows":${ne * k},""" +
         f""""batch_rows":${ne},"append_topk":$nA,"rebuild_topk":$nR,""" +
@@ -715,7 +715,7 @@ object ScaleSmoke {
         val members = graft.ops.Centrality.canonicalByRank(pairs).count()
         val sec = (System.nanoTime() - t0) / 1e9
         pairs.unpersist()
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); base.cache(); base.count()
         if (!silent)
           println(f"""{"experiment":"$label","rows":${n * times},""" +
@@ -798,7 +798,7 @@ object ScaleSmoke {
         val sec = (System.nanoTime() - t0) / 1e9
         val nCand = graft.ops.Dedup.lastCandidatePairs
         graft.ops.Dedup.instrument = false
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); base.cache(); base.count()
         if (!silent)
           println(f"""{"experiment":"$label","rows":${n * times},""" +
@@ -856,7 +856,7 @@ object ScaleSmoke {
         val corpus = replicate(times, perturb = true)
         val idx0 = graft.ops.Dedup.bandIndexRaw(corpus).persist()
         idx0.count() // the prebuilt index is not part of either window
-        graft.ops.Dedup.releaseCaches() // drop shingle-build scaffolding
+        graft.ops.TextKit.releaseCaches() // drop shingle-build scaffolding
         val del = corpus.filter(col("doc_id") % lit(500L * times) === 0)
         val ins = replicate(1, perturb = true)
           .filter(col("doc_id") % 500 === 250)
@@ -870,14 +870,14 @@ object ScaleSmoke {
         val nM = graft.ops.Dedup
           .applyFeedToBandIndex(idx0, ins, del, head).count()
         val tM = (System.nanoTime() - t0) / 1e9
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         val t1 = System.nanoTime()
         val nR = graft.ops.Dedup.bandIndexRaw(head).count()
         val tR = (System.nanoTime() - t1) / 1e9
         require(nM == nR,
           s"maintained/rebuild bucket counts differ: $nM vs $nR")
         idx0.unpersist()
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); base.cache(); base.count()
         if (!silent)
           println(f"""{"experiment":"$label","rows":${n * times},""" +
@@ -922,7 +922,7 @@ object ScaleSmoke {
         require(nM == nR,
           s"maintained/rebuilt encoded counts differ: $nM vs $nR")
         pin.foreach(_.unpersist())
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); embBase.cache(); embBase.count()
         if (!silent)
           println(f"""{"experiment":"$label","rows":${ne * times},""" +
@@ -967,7 +967,7 @@ object ScaleSmoke {
           .maxSimRerank(cvs, emb, nQueries = 5).count()
         val tRr = (System.nanoTime() - t1) / 1e9
         cvs.unpersist()
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); base.cache(); base.count()
         embBase.cache(); embBase.count()
         if (!silent)
@@ -992,7 +992,7 @@ object ScaleSmoke {
           .prefixFilterPairs(base, tau = 0.5, suffixVerify = suffix)
           .count()
         val t = (System.nanoTime() - t0) / 1e9
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); base.cache(); base.count()
         if (!silent)
           println(f"""{"experiment":"$label","rows":$n,""" +
@@ -1117,7 +1117,7 @@ object ScaleSmoke {
           .count()
         val t = (System.nanoTime() - t0) / 1e9
         fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
         spark.catalog.clearCache(); base.cache(); base.count()
         if (!silent)
           println(f"""{"experiment":"$label","commits":$commits,""" +

@@ -2,7 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -14,8 +13,10 @@ import java.util.concurrent.atomic.AtomicInteger
   * query registry already guarantees — every shared fixture is built
   * under ConcurrentHashMap.computeIfAbsent (second arrival blocks until
   * built), catalog-mutating queries isolate in their own newSession(),
-  * and every sampled/salted operator is hash-based, never rand() — so
-  * a mid-flight cache clear can only recompute, never change, a result.
+  * and every sampled/salted operator is hash-based, never rand(). Each
+  * query builds and writes inside its own cache scope
+  * (graft.ops.TextKit.CacheScope), which frees exactly the relations
+  * that query cached once its result is written.
   * FAIR scheduler mode + a per-query pool keeps one long query from
   * starving the rest of the task slots.
   */
@@ -42,7 +43,6 @@ object Verify {
     val todo = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .toSeq.sortBy(_._1)
-    val done = new AtomicInteger(0)
     val pool = Executors.newFixedThreadPool(par)
     todo.foreach { case (name, fn) =>
       pool.execute { () =>
@@ -50,21 +50,12 @@ object Verify {
         // in-flight query gets an even share of the task slots
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
         System.err.println(s"[verify] running $name")
-        try fn(spark, sfDir).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try graft.ops.TextKit.withCacheScope {
+          fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        finally {
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-          // hygiene only — every cached intermediate is deterministic,
-          // so clearing under a concurrent query merely recomputes.
-          // Clearing after EVERY query (the old serial behavior) would
-          // trigger recompute storms across the pool; every `par`-th
-          // completion bounds resident cache without that.
-          if (done.incrementAndGet() % (par * 4) == 0)
-            spark.catalog.clearCache()
-        }
+        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
       }
     }
     pool.shutdown()

@@ -293,17 +293,16 @@ object Bpe {
           }
         }
         // apply the pass's accepted merges in rank order — one state
-        // update per pass instead of per merge. localCheckpoint (not
-        // persist) TRUNCATES the lineage: a persisted state's plan
+        // update per pass instead of per merge. trackedLeaf (not
+        // tracked) TRUNCATES the lineage: a persisted state's plan
         // still embeds every earlier pass's cached plan, so explain
         // strings and analyzer work grow quadratically with passes —
         // at nMerges=64 the SQL listener's explainString alone OOMs
-        // the driver. The checkpointed state is a leaf; register() so
-        // releaseCaches can free it.
-        state = register(state.withColumn("sym",
+        // the driver. Unlike localCheckpoint, the truncated leaf stays
+        // in the CacheManager, so the owning cache scope frees it.
+        state = trackedLeaf(state.withColumn("sym",
           merges.drop(before).foldLeft(col("sym"))((c, m) =>
-            applyMerge(c, m.lhs, m.rhs)))
-          .localCheckpoint(true))
+            applyMerge(c, m.lhs, m.rhs))))
       }
     }
     (merges.toSeq, state)

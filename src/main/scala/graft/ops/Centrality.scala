@@ -65,10 +65,8 @@ object Centrality {
     // cache entry only short-circuits execution — Catalyst still
     // re-analyzes the full generator subtree at every action (for q133
     // the LSH chain under 3 unrolled iterations analyzed as a 2.5 MB
-    // plan; truncation collapses it to one LogicalRDD leaf). register()
-    // keeps releaseCaches() able to free the blocks.
-    val p = TextKit.register(Components.truncated(
-      pairs.select(col("doc_a"), col("doc_b"))))
+    // plan; truncation collapses it to one LogicalRDD leaf).
+    val p = TextKit.trackedLeaf(pairs.select(col("doc_a"), col("doc_b")))
     // cached: consumed by the canonical aggregation AND the final join —
     // uncached it would re-run the whole CC + PageRank chain per
     // consumer (measured 14.5 s -> ~7 s at sf0.1 for q133)

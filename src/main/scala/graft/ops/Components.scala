@@ -130,8 +130,8 @@ object Components {
       s"connectedComponents did not converge in $maxIters rounds")
     // the returned frame reads the still-persisted labels cache (callers
     // usually aggregate over it repeatedly); the CACHED frame itself is
-    // registered so TextKit.releaseCaches() frees it like every other
-    // ops-layer cache (a projection would not match the cache entry)
+    // registered so its cache scope frees it like every other ops-layer
+    // cache (a projection would not match the cache entry)
     TextKit.register(labels)
     labels.select(col("id").as("doc_id"), col("label").as("component_id"))
   }

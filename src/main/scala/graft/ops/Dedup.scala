@@ -23,10 +23,6 @@ import TextKit._
   */
 object Dedup {
 
-  /** Unpersist every relation cached by prior ops calls (delegates to the
-    * shared TextKit tracker; kept here for API continuity). */
-  def releaseCaches(): Unit = TextKit.releaseCaches()
-
   /** Exact dedup: one canonical row (min doc_id) per distinct text, with
     * the duplicate count. Hash-groupBy on the FULL 128-bit md5(text) digest
     * (hex) — birthday-collision probability stays negligible at 100 TB row

@@ -70,7 +70,7 @@ object Embeddings {
       (id, c)
     }
     cxDs.persist()
-    TextKit.register(cxDs.toDF()) // same logical plan -> releaseCaches frees it
+    TextKit.register(cxDs.toDF()) // same logical plan -> its scope frees it
     // power iteration: v <- normInf(sum_rows (cx.v >> 20) * cx); Long
     // `/` truncates toward zero exactly as Spark `div` / BigInt `/` did
     var v = Array.fill(dim)(VScale)

@@ -425,9 +425,15 @@ object Similarity {
     * ordered by cent_id — k x dim longs, the same bounded state
     * [[kmeansCentroids]] already holds. Used where only the stored
     * DataFrame form exists (a persisted index read back from parquet). */
-  private def centArr(cent: DataFrame): Seq[Array[Long]] =
-    cent.orderBy(col("cent_id")).select(col("cqv")).collect()
-      .map(_.getSeq[Long](0).toArray).toSeq
+  private def centArr(cent: DataFrame): Seq[Array[Long]] = {
+    val rows = cent.orderBy(col("cent_id")).select(col("cent_id"), col("cqv"))
+      .collect()
+    // cells index the array positionally: a gapped id would mis-index
+    val ids = rows.map(_.getLong(0)).toSeq
+    require(ids == ids.indices.map(_.toLong),
+      s"centroid ids must be exactly 0 until ${ids.size}, got ${ids.mkString(",")}")
+    rows.map(_.getSeq[Long](1).toArray).toSeq
+  }
 
   /** The k (squared-L2 distance, cent_id) structs of a vector against a
     * LITERAL centroid set — row-local codegen arithmetic, no join, no
@@ -841,6 +847,9 @@ object Similarity {
   private def refineCodebook(vecs: DataFrame, vecCol: String,
       init: Seq[(Int, Long, Seq[Long])], iters: Int, m: Int,
       subDim: Int, sampleMod: Int = 1): Seq[(Int, Long, Seq[Long])] = {
+    // empty codebook (empty training corpus): nothing to train — the
+    // same totality contract as encodeCodes/adcTables
+    if (init.isEmpty) return init
     val train =
       if (sampleMod <= 1) vecs
       else vecs.filter(
@@ -887,10 +896,20 @@ object Similarity {
   /** Collect a stored (sub, code, cbv) codebook frame back to the
     * driver, ordered — m x codesPerSub x subDim longs, the same bounded
     * state the builders already hold as `cbSeq`. */
-  private def codebookArr(codebook: DataFrame): Seq[(Int, Long, Seq[Long])] =
-    codebook.select(col("sub"), col("code"), col("cbv"))
+  private def codebookArr(codebook: DataFrame, m: Int,
+      codesPerSub: Int): Seq[(Int, Long, Seq[Long])] = {
+    val cb = codebook.select(col("sub"), col("code"), col("cbv"))
       .orderBy(col("sub"), col("code")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2)))
+      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2))).toSeq
+    // dense m x n grid, n <= codesPerSub (n < codesPerSub only when the
+    // training sample had fewer vectors than codes): kernels index slots
+    // by (sub, code) position
+    val n = cb.size / m
+    require(n <= codesPerSub && cb.map(e => (e._1, e._2)) ==
+        (for (s <- 0 until m; c <- 0 until n) yield (s, c.toLong)),
+      s"codebook must be a dense $m x n grid (n <= $codesPerSub) of (sub, code)")
+    cb
+  }
 
   /** PQ encode: argmin codebook entry per (keep-key, subspace), packed
     * to one `codes` array per keep-key — ROW-LOCAL over the literal
@@ -970,7 +989,7 @@ object Similarity {
       centsCache
     }
     private[graft] def cbArr: Seq[(Int, Long, Seq[Long])] = {
-      if (cbCache == null) cbCache = codebookArr(codebook)
+      if (cbCache == null) cbCache = codebookArr(codebook, m, codesPerSub)
       cbCache
     }
     /** copy() that carries the memoized training-state arrays along. */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,52 +17,43 @@ import org.apache.spark.sql.types._
   */
 object TextKit {
 
-  /** Relations persisted by the ops operators (dedup pair generators, IVF
-    * training). Bench/Verify release storage via
-    * `spark.catalog.clearCache()`; long-lived sessions call
-    * [[releaseCaches]] after materializing a returned DataFrame so
-    * repeated invocations don't accumulate cached relations. */
-  private val persistedRelations =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.DataFrame]())
-
-  private[ops] def tracked(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val p = df.persist()
-    persistedRelations.add(p)
-    val sc = scopeRelations.get()
-    if (sc != null) sc.add(p)
-    p
-  }
-
-  /** Thread-local cache scope: relations [[tracked]]/[[register]]ed by
-    * THIS thread inside `f` are unpersisted when the scope closes. For
-    * per-micro-batch loops (streamFeedIndexMaintain and friends), where
-    * each batch builds fresh tracked intermediates that would otherwise
-    * accumulate for the life of the stream — a global [[releaseCaches]]
-    * there would also free caches belonging to CONCURRENT queries in the
-    * same process (the pooled Verify), so the scope tracks only its own
-    * thread's additions. Close happens AFTER `f` returns, so `f` must
-    * materialize everything it needs (e.g. write its state out) before
-    * returning. */
-  private val scopeRelations =
-    new ThreadLocal[java.util.List[org.apache.spark.sql.DataFrame]]()
-
-  private[graft] def withCacheScope[A](f: => A): A = {
-    val prev = scopeRelations.get()
-    // synchronized: [[inParallel]] sibling threads share the scope
-    val mine = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.DataFrame]())
-    scopeRelations.set(mine)
-    try f finally {
-      scopeRelations.set(prev)
-      mine.forEach { df =>
-        df.unpersist(blocking = false)
-        persistedRelations.remove(df)
-        if (prev != null) prev.remove(df)
-        ()
-      }
+  /** Owner of cached relations. Every relation [[tracked]],
+    * [[trackedLeaf]]ed or [[register]]ed belongs to exactly one scope:
+    * the calling thread's current one. [[cacheScope]] opens a scope
+    * nested in the current one; `close()` makes the parent current again
+    * and unpersists exactly the relations this scope owns — never a
+    * parent's, a child's or another thread's. Relations cached with no
+    * scope open belong to the process root scope, which [[releaseCaches]]
+    * empties. The scoped work must materialize what it needs (write,
+    * count, collect) before the scope closes. Side-by-side queries (the
+    * pooled Verify) and per-micro-batch loops each own one scope. */
+  final class CacheScope private[TextKit] (parent: CacheScope)
+      extends AutoCloseable {
+    private[TextKit] val owned = new java.util.ArrayList[DataFrame]()
+    private[TextKit] def release(): Unit = owned.synchronized {
+      owned.forEach { df => df.unpersist(blocking = false); () }
+      owned.clear()
+    }
+    def close(): Unit = {
+      if (current.get eq this) current.set(parent)
+      release()
     }
   }
+
+  private val root = new CacheScope(null)
+  private val current = ThreadLocal.withInitial[CacheScope](() => root)
+
+  private[graft] def cacheScope(): CacheScope = {
+    current.set(new CacheScope(current.get))
+    current.get
+  }
+
+  private[graft] def withCacheScope[A](f: => A): A = {
+    val s = cacheScope()
+    try f finally s.close()
+  }
+
+  private[ops] def tracked(df: DataFrame): DataFrame = register(df.persist())
 
   /** [[tracked]] with LINEAGE TRUNCATION (Components.truncated): the
     * same persisted rows, but downstream plans see one constant-size
@@ -71,42 +62,40 @@ object TextKit {
     * short-circuits execution but Catalyst still re-analyzes the full
     * embedded subtree at every action (q48's pair plan carried 64
     * copies of the shingle chain before truncation). */
-  private[ops] def trackedLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private[ops] def trackedLeaf(df: DataFrame): DataFrame =
     register(Components.truncated(df))
 
-  /** Track an ALREADY-persisted relation (e.g. a frame returned to the
-    * caller still cached, like connectedComponents' final labels) so
-    * [[releaseCaches]] can free it — without this, long-lived sessions
-    * accumulate cached relations only a full clearCache() could release. */
-  private[ops] def register(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    persistedRelations.add(df)
-    val sc = scopeRelations.get()
-    if (sc != null) sc.add(df)
+  /** Hand an ALREADY-persisted relation (e.g. connectedComponents' final
+    * labels, returned to the caller still cached) to the current scope. */
+  private[ops] def register(df: DataFrame): DataFrame = {
+    val owned = current.get.owned
+    owned.synchronized { owned.add(df) }
     df
   }
 
-  /** Unpersist every relation cached by prior ops calls. */
-  def releaseCaches(): Unit = {
-    persistedRelations.forEach(df => { df.unpersist(blocking = false); () })
-    persistedRelations.clear()
-  }
+  /** Unpersist every relation cached with no scope open. */
+  def releaseCaches(): Unit = root.release()
 
   /** Run independent Spark actions from sibling threads and wait for
     * all (guide §2.6 — the scheduler happily overlaps jobs; actions are
-    * only sequential because driver code calls them sequentially). Any
-    * failure rethrows after every thread finished. */
+    * only sequential because driver code calls them sequentially). The
+    * threads cache into the caller's scope. A failure rethrows after
+    * every thread finished, with the other threads' failures suppressed
+    * into it. */
   private[graft] def inParallel(fs: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    // the caller's cache scope rides into the sibling threads, so
-    // relations tracked there still release when the scope closes
-    val parentScope = scopeRelations.get()
-    val ts = fs.map(f => new Thread(() => {
-      scopeRelations.set(parentScope)
+    val scope = current.get
+    val ts = fs.zipWithIndex.map { case (f, i) => new Thread(() => {
+      current.set(scope)
       try f() catch { case t: Throwable => errs.add(t); () }
-    }))
+    }, s"graft-inParallel-$i") }
     ts.foreach(_.start())
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(t => if (t ne first) first.addSuppressed(t))
+      throw first
+    }
   }
 
   /** Spread an under-partitioned input across the cluster's task slots —
@@ -120,7 +109,7 @@ object TextKit {
     * estimate errs toward repartitioning, which never changes results —
     * every downstream op is partitioning-agnostic (hash-based sampling,
     * order-insensitive aggregates). */
-  def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val slots = spark.sparkContext.defaultParallelism
     val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes

@@ -555,8 +555,7 @@ object OpsQueries {
     // per-row token column — budgets now meter actual model tokens
     "q128_bpe_token_mix" -> ((s, d) => {
       val dd = docs(s, d)
-      val (merges, _) = Bpe.train(dd)
-      TextKit.releaseCaches()
+      val merges = TextKit.withCacheScope(Bpe.train(dd)._1)
       TextAnalysis.tokenRateMix(dd, Map("src0" -> 700L, "src1" -> 0L),
           defaultBudget = 500L,
           tokCol = Bpe.tokenCountExpr(col("text"), merges))

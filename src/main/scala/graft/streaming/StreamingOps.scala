@@ -484,8 +484,7 @@ object StreamingOps {
     val corpus = ss.read.schema(docsSchema)
       .parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val (merges, _) = graft.ops.Bpe.train(corpus)
-    graft.ops.TextKit.releaseCaches()
+    val merges = graft.ops.TextKit.withCacheScope(graft.ops.Bpe.train(corpus)._1)
     val words = filter(split(col("text"), " "), w => w =!= lit(""))
     ss.readStream.schema(docsSchema)
       .option("pathGlobFilter", "documents.parquet")

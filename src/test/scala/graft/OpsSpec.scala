@@ -1573,6 +1573,23 @@ class OpsSpec extends SparkSpec {
     assert(fromLake == orig)
   }
 
+  test("IVF-PQ state read back with a gapped cent_id or codebook fails loudly") {
+    // the driver arrays index cells and codes by position: a gap would
+    // silently score against the wrong centroid or code
+    val ix = Similarity.buildIvfPq(semEmb, nCells = 4)
+    val gappedCent = ix.copy(cent = ix.cent.withColumn("cent_id",
+      when(col("cent_id") === 0L, 0L).otherwise(col("cent_id") + 1L)))
+    val e1 = intercept[IllegalArgumentException](gappedCent.centsArr)
+    assert(e1.getMessage.contains("centroid ids"))
+    val gappedCb = ix.copy(codebook = ix.codebook
+      .filter(!(col("sub") === 0 && col("code") === 1L)))
+    val e2 = intercept[IllegalArgumentException](gappedCb.cbArr)
+    assert(e2.getMessage.contains("dense"))
+    // dense state collected back from its frames is accepted
+    assert(ix.copy().centsArr.size == 4)
+    assert(ix.copy().cbArr.size == ix.m * ix.codesPerSub)
+  }
+
   test("TopKAggLongAsc equals the ascending row_number window form") {
     val scored = Seq((0L, 1L, 5L), (0L, 2L, 3L), (0L, 3L, 3L), (0L, 4L, 9L),
       (1L, 1L, 7L), (1L, 2L, 7L))

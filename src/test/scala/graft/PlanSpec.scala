@@ -137,7 +137,7 @@ class PlanSpec extends SparkSpec {
       assert(a == b, "plan switch changed the answers")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      graft.ops.Dedup.releaseCaches()
+      graft.ops.TextKit.releaseCaches()
     }
   }
 
@@ -176,7 +176,7 @@ class PlanSpec extends SparkSpec {
           "plan switch changed the answers")
       } finally {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        graft.ops.Dedup.releaseCaches()
+        graft.ops.TextKit.releaseCaches()
       }
     }
     // bloom rejectFilter: a union whose definite-keep branch is a pure
@@ -237,7 +237,7 @@ class PlanSpec extends SparkSpec {
     assert(p93.contains("TakeOrderedAndProject"),
       "hybrid pools must be TakeOrdered, not global sorts")
     assert(!p93.contains("CartesianProduct"))
-    graft.ops.Dedup.releaseCaches()
+    graft.ops.TextKit.releaseCaches()
   }
 
   test("AQE skew join: the q39 hot-key scenario splits at runtime, no salting") {
