@@ -566,7 +566,7 @@ object ScaleSmoke {
     // dvread_sec records the merge-on-read read (a full scan either
     // way, plus one broadcast anti-join of the sidecar union).
     if (enabled("dv")) {
-      import graft.lake.ManifestCommit
+      import graft.lake.{GraftFileIndex, ManifestCommit}
       import org.apache.hadoop.fs.Path
       val hiFixed = liRep(1).agg(max("k")).head.getLong(0) / 16
       def timeDv(label: String, times: Int,
@@ -590,10 +590,9 @@ object ScaleSmoke {
         ManifestCommit.deleteRange(spark, rwDir, "k", 0L, hiFixed, Seq("k"))
         val rwSec = (System.nanoTime() - t1) / 1e9
         val t2 = System.nanoTime()
-        val dvRows = ManifestCommit.readTableDV(spark, dvDir.toString).count()
+        val dvRows = GraftFileIndex.table(spark, dvDir.toString).count()
         val readSec = (System.nanoTime() - t2) / 1e9
-        require(dvRows ==
-          ManifestCommit.readTable(spark, rwDir.toString).count(),
+        require(dvRows == GraftFileIndex.table(spark, rwDir.toString).count(),
           "dv and rewrite must agree")
         if (!silent)
           println(f"""{"experiment":"$label","rows":${df.count()},""" +
@@ -612,7 +611,7 @@ object ScaleSmoke {
     // the margin stays a small constant fraction at every scale) —
     // never a second table-sized term.
     if (enabled("dvcompact")) {
-      import graft.lake.{Compaction, ManifestCommit}
+      import graft.lake.{Compaction, GraftFileIndex, ManifestCommit}
       import org.apache.hadoop.fs.Path
       def timeDvc(label: String, times: Int,
           silent: Boolean = false): Unit = {
@@ -639,8 +638,8 @@ object ScaleSmoke {
         val clSec = (System.nanoTime() - t1) / 1e9
         require(ManifestCommit.currentDvs(fs, dvDir).isEmpty,
           "compaction must absorb the sidecars")
-        require(ManifestCommit.readTable(spark, dvDir.toString).count() ==
-          ManifestCommit.readTable(spark, clDir.toString).count() - nDel,
+        require(GraftFileIndex.table(spark, dvDir.toString).count() ==
+          GraftFileIndex.table(spark, clDir.toString).count() - nDel,
           "compacted dv table must equal clean minus deleted")
         if (!silent)
           println(f"""{"experiment":"$label","rows":${df.count()},""" +
@@ -768,7 +767,8 @@ object ScaleSmoke {
         val t1 = System.nanoTime()
         val nDiff = graft.ops.Cdc.snapshotDiff(
           ManifestCommit.readTableAt(spark, dir, cursor),
-          ManifestCommit.readTable(spark, dir), "k", Seq("c", "v")).count()
+          graft.lake.GraftFileIndex.table(spark, dir), "k", Seq("c", "v"))
+          .count()
         val tDiff = (System.nanoTime() - t1) / 1e9
         require(nFeed == nDiff,
           s"feed/diff disagree: $nFeed vs $nDiff")

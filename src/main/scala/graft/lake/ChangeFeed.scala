@@ -185,10 +185,7 @@ object ChangeFeed {
       tableRoot: String): Map[String, Long] = {
     val root = new Path(tableRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
+    val parts = Compaction.leaves(fs, root)
     parts.map { dir =>
       relOf(fs, root, dir) -> ManifestCommit.bootstrap(fs, dir).version
     }.toMap
@@ -218,10 +215,7 @@ object ChangeFeed {
       cursors: Map[String, Long]): DataFrame = {
     val root = new Path(tableRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
+    val parts = Compaction.leaves(fs, root)
     val batches = parts.flatMap { dir =>
       val rel = relOf(fs, root, dir)
       val head = ManifestCommit.bootstrap(fs, dir).version
@@ -288,10 +282,7 @@ object ChangeFeed {
     import org.apache.spark.sql.functions.col
     val src = new Path(srcRoot)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, src) match {
-      case Seq() => Seq(src)
-      case ps    => ps
-    }
+    val parts = Compaction.leaves(fs, src)
     def replicateLeaf(dir: Path): (String, Long, Long, Boolean) = {
       val rel = relOf(fs, src, dir)
       val dstLeaf =

@@ -45,7 +45,7 @@ import org.apache.spark.sql.SparkSession
   * single-object put-if-absent (an S3 conditional PUT), so ONE commit
   * story holds on every store a 100 TB deployment actually runs on,
   * lock-free, with no reader window; readers resolve file sets through
-  * the committed manifest ([[ManifestCommit.readTable]]). The older
+  * the committed manifest ([[GraftFileIndex.table]]). The older
   * RENAME-SWAP path ([[compactTableRenameSwap]]) remains available
   * behind its explicit name for HDFS/POSIX-only deployments that want
   * plain directory-listing readers: its swap/recovery guarantees assume
@@ -57,10 +57,8 @@ object Compaction {
 
   final case class Report(partition: String, filesBefore: Int, filesAfter: Int)
 
-  private def isDataFile(p: Path): Boolean = {
-    val n = p.getName
-    !n.startsWith("_") && !n.startsWith(".")
-  }
+  private def isDataFile(p: Path): Boolean =
+    ManifestCommit.isDataFile(p.getName)
 
   /** Leaf partition directories (year=.../month=.../day=...) under `root`,
     * including partitions that currently exist ONLY as a crashed run's
@@ -70,6 +68,15 @@ object Compaction {
     * Package-private: ManifestCommit walks the same partition tree. */
   private[lake] def leafPartitions(fs: FileSystem, root: Path): Seq[Path] =
     leafDirs(fs, root)
+
+  /** The leaves a table read or commit walks: its day= partitions, or
+    * the root itself when it has none (an unpartitioned table is its
+    * own leaf). */
+  private[lake] def leaves(fs: FileSystem, root: Path): Seq[Path] =
+    leafPartitions(fs, root) match {
+      case Seq() => Seq(root)
+      case ps    => ps
+    }
 
   private def leafDirs(fs: FileSystem, root: Path): Seq[Path] = {
     def walk(dir: Path): Seq[Path] = {
@@ -395,7 +402,7 @@ object Compaction {
     * manifest that lists the new set and tombstones the old. No directory
     * rename, no lock (optimistic manifest commit arbitrates both
     * concurrent compactors and concurrent appends), no reader window:
-    * a manifest-resolved reader ([[ManifestCommit.readTable]]) sees the
+    * a manifest-resolved reader ([[GraftFileIndex.table]]) sees the
     * old file set until the single commit point and the new one after,
     * on ANY filesystem — including stores whose rename is per-object
     * copy+delete. Plain directory-listing readers of a manifest-mode
@@ -424,14 +431,11 @@ object Compaction {
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // an unpartitioned table is its own leaf — the same fallback
-    // liveFiles/readTableWhere use. Without it the gc + stale-staging
+    // liveFiles and GraftFileIndex use. Without it the gc + stale-staging
     // sweep below never visits the root, so a crashed WAP/compaction's
     // `._compacting-*` garbage on an unpartitioned table (the q169
     // shape) would never be collected.
-    val parts = leafPartitions(fs, root) match {
-      case Seq() if fs.exists(root) => Seq(root)
-      case ps                       => ps
-    }
+    val parts = if (fs.exists(root)) leaves(fs, root) else Nil
     parts.flatMap { dir =>
       ManifestCommit.gc(fs, dir, gcGraceMs)
       // sweep crashed runs' hidden staging dirs (run-unique names; the

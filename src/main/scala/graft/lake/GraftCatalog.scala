@@ -1544,9 +1544,9 @@ private[graft] final class GraftSqlKeyedTable(path: String, ident: String,
 
 /** Batch scan: live files straight from the manifest (zero jobs at
   * planning), long-range predicates pruning FILES against the
-  * manifest's recorded per-file stats + blooms (the readTableWhere
-  * logic behind plain SQL), merge-on-read correctness under active
-  * deletion-vector sidecars.
+  * manifest's recorded per-file stats + blooms (the
+  * [[GraftFileIndex]] listFiles logic behind plain SQL), merge-on-read
+  * correctness under active deletion-vector sidecars.
   *
   * Execution is TWO-TIER, chosen per file:
   *  - **DV-free files — the overwhelming majority at any scale — read
@@ -1691,7 +1691,7 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
         if (ranges.isEmpty) Map.empty[String, Seq[ManifestCommit.ColStat]]
         else ManifestCommit.currentFileStats(fs, leafDir)
       // point predicates (lo == hi) additionally consult recorded
-      // per-file BLOOMS — readTableEq's pruning, behind plain SQL: a
+      // per-file BLOOMS — GraftFileIndex's probe pruning, behind SQL: a
       // bloom that rejects the value drops the file even when its
       // min/max range admits it
       val blooms =

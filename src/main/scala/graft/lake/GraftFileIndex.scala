@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 
 /** Catalyst [[FileIndex]] over the manifest commit log — the integration
   * that makes the lake a FIRST-CLASS Spark table (the public Delta
-  * `TahoeFileIndex` idea, re-derived): `ManifestCommit.table(spark,
+  * `TahoeFileIndex` idea, re-derived): `GraftFileIndex.table(spark,
   * root).filter($"k" === v)` plans through Spark's own planner, which
   * hands the pushed-down partition and data predicates to
   * [[listFiles]], and THIS index answers them from committed manifest
@@ -25,14 +25,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * partition (the metadata cost every reader already pays);
   * [[listFiles]] evaluates predicates against in-memory stat lines —
   * at 100 TB the planner touches KBs of manifest state, never the
-  * table. Pruning is a superset guarantee exactly as in
-  * [[ManifestCommit.readTableWhere]]: unknown predicate shapes and
-  * stats-free files are conservatively kept, and Spark re-applies the
-  * full row-level filter after the scan.
+  * table. Pruning is a superset guarantee: unknown predicate shapes
+  * and stats-free files are conservatively kept, and Spark re-applies
+  * the full row-level filter after the scan.
   *
   * Deletion vectors: a partition with ACTIVE sidecars cannot be served
-  * by a bare file scan (rows would resurrect) — [[ManifestCommit.table]]
-  * refuses loudly and points at readTableDV/applyDvs.
+  * by a bare file scan (rows would resurrect) — [[GraftFileIndex.table]]
+  * subtracts them with one broadcast anti-join above this index's scan.
   */
 final class GraftFileIndex(spark: SparkSession, root: Path)
     extends FileIndex {
@@ -45,32 +44,24 @@ final class GraftFileIndex(spark: SparkSession, root: Path)
       blooms: Map[String, Seq[ColBloom]], dvs: Seq[String],
       schema: Option[StructType])
 
-  private def resolve(): Seq[Leaf] = {
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
-    parts.map { dir =>
-      // ONE log LIST + ONE manifest parse per leaf serves every facet
-      // (files, stats, blooms, DVs, schema) — resolving them through
-      // the per-facet accessors would pay five metadata GETs per leaf,
-      // the dominant table-open cost at thousands of leaves
+  private def resolve(): Seq[Leaf] =
+    Compaction.leaves(fs, root).map { dir =>
+      // ONE log LIST + ONE manifest parse + ONE directory LIST per leaf
+      // serves every facet (files, stats, blooms, DVs, schema) —
+      // resolving them through the per-facet accessors would pay five
+      // metadata GETs per leaf, the dominant table-open cost at
+      // thousands of leaves
       val head = ManifestCommit.headState(fs, dir)
+      val listed =
+        if (fs.exists(dir))
+          fs.listStatus(dir).toIndexedSeq.filterNot(_.isDirectory)
+        else Nil
+      val byName = listed.map(st => st.getPath.getName -> st).toMap
       val names = head match {
         case Some(h) => h.files
         case None => // listing-mode partition interop, as in liveFiles
-          if (fs.exists(dir))
-            fs.listStatus(dir).toIndexedSeq
-              .filter(st => !st.isDirectory &&
-                !st.getPath.getName.startsWith("_") &&
-                !st.getPath.getName.startsWith("."))
-              .map(_.getPath.getName)
-          else Nil
+          listed.map(_.getPath.getName).filter(ManifestCommit.isDataFile)
       }
-      val byName = if (fs.exists(dir))
-        fs.listStatus(dir).toIndexedSeq.filterNot(_.isDirectory)
-          .map(st => st.getPath.getName -> st).toMap
-      else Map.empty[String, FileStatus]
       val files = names.map(n => byName.getOrElse(n, sys.error(
         s"manifest for $dir lists missing file $n — GC grace too short?")))
       Leaf(dir, partitionValues(dir), files,
@@ -79,12 +70,8 @@ final class GraftFileIndex(spark: SparkSession, root: Path)
         head.map(_.dvs).getOrElse(Nil),
         head.flatMap(_.schema))
     }
-  }
 
   @volatile private var leaves: Seq[Leaf] = resolve()
-
-  /** Active deletion-vector sidecars anywhere under the root. */
-  def activeDvs: Seq[String] = leaves.flatMap(_.dvs)
 
   /** The table's data schema from the RECORDED manifest schemas, when
     * every leaf carries one: an additive field union across leaves
@@ -125,7 +112,7 @@ final class GraftFileIndex(spark: SparkSession, root: Path)
   }
 
   /** Per DV-carrying leaf: (dir, its Hive `col=value` segments, sidecar
-    * names) — what [[GraftFileIndex.tableDV]] needs to key the sidecar
+    * names) — what [[GraftFileIndex.table]] needs to key the sidecar
     * rows onto the scan's partition columns. */
   private[lake] def dvLeaves: Seq[(Path, Seq[(String, Int)], Seq[String])] =
     leaves.collect { case l if l.dvs.nonEmpty =>
@@ -271,38 +258,22 @@ final class GraftFileIndex(spark: SparkSession, root: Path)
 
 object GraftFileIndex {
 
-  /** The manifest lake as a first-class Spark DataFrame: committed file
-    * set, manifest-stat + bloom file skipping driven by ORDINARY
-    * `filter`/SQL predicates (no explicit ranges map), Hive partition
-    * columns and their pruning, stock vectorized parquet execution.
-    * Refuses a table with active deletion vectors — a bare file scan
-    * would resurrect deleted rows; read those via
-    * [[ManifestCommit.readTableDV]] or compact with
-    * [[ManifestCommit.applyDvs]] first. */
+  /** The manifest lake as a first-class Spark DataFrame — the one read
+    * of a table's CURRENT version ([[ManifestCommit.readTableAt]] reads
+    * a past one): committed file set, manifest-stat + bloom file
+    * skipping driven by ORDINARY `filter`/SQL predicates (no explicit
+    * ranges map), Hive partition columns and their pruning, stock
+    * vectorized parquet execution.
+    *
+    * Active deletion vectors are subtracted with ONE broadcast anti-join
+    * on top of the scan: data predicates still push BELOW it (the join
+    * only adds `_metadata` refs), the sidecar side is O(deleted rows),
+    * and positions key on (file NAME, row index, partition columns) —
+    * names are unique within a partition, and the partition-column
+    * equality keeps a same-named file in another Hive partition from
+    * cross-matching. A DV-free table is the plain index-backed scan,
+    * with no join in its plan. */
   def table(spark: SparkSession, tableRoot: String): DataFrame = {
-    val index = new GraftFileIndex(spark, new Path(tableRoot))
-    require(index.activeDvs.isEmpty,
-      s"$tableRoot has active deletion vectors (${index.activeDvs.size} " +
-        "sidecars) — use tableDV/readTableDV, or applyDvs to compact " +
-        "them away")
-    scanOf(spark, index, tableRoot)
-  }
-
-  /** The manifest lake as a first-class DataFrame UNDER active deletion
-    * vectors — [[table]]'s Catalyst integration (ordinary WHERE
-    * predicates answered from manifest stats/blooms/partition dirs,
-    * stock vectorized parquet below) composed with the sidecar
-    * anti-join, so a merge-on-read table keeps planner-driven file
-    * skipping instead of falling back to the explicit-ranges
-    * [[ManifestCommit.readTableWhereDV]]. Data predicates push BELOW
-    * the anti-join (the join only adds `_metadata` refs), the sidecar
-    * side is O(deleted rows) and broadcast, and positions key on
-    * (file NAME, row index, partition columns) — names are unique
-    * within a partition, and the partition-column equality keeps a
-    * same-named adopted file in another Hive partition from
-    * cross-matching. A DV-free table returns the plain [[table]] scan
-    * unchanged. */
-  def tableDV(spark: SparkSession, tableRoot: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
     val index = new GraftFileIndex(spark, new Path(tableRoot))
     val plain = scanOf(spark, index, tableRoot)
@@ -326,7 +297,7 @@ object GraftFileIndex {
       .drop("__dv_file", "__dv_pos")
   }
 
-  /** The bare index-backed scan (no DV handling — callers guard). */
+  /** The bare index-backed scan (no DV handling — [[table]] adds it). */
   private def scanOf(spark: SparkSession, index: GraftFileIndex,
       tableRoot: String): DataFrame = {
     val files = index.inputFiles

@@ -145,7 +145,8 @@ object ManifestCommit {
   private def manifestPath(partition: Path, version: Long) =
     new Path(logDir(partition), f"v$version%08d$ManifestSuffix")
 
-  private def isDataFile(name: String): Boolean =
+  /** A visible data-file name: not `_`-metadata, not `.`-hidden. */
+  private[lake] def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
   private def versionOf(name: String): Option[Long] =
@@ -593,10 +594,7 @@ object ManifestCommit {
   def recordSchemaTable(spark: SparkSession,
       tableRoot: Path): org.apache.spark.sql.types.StructType = {
     val fs = tableRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, tableRoot) match {
-      case Seq() => Seq(tableRoot)
-      case ps    => ps
-    }
+    val parts = Compaction.leaves(fs, tableRoot)
     val schemas = parts.map { dir =>
       currentSchema(fs, dir).getOrElse(recordSchema(spark, dir))
     }
@@ -623,10 +621,7 @@ object ManifestCommit {
   def alterSchemaTable(spark: SparkSession, tableRoot: Path,
       next: org.apache.spark.sql.types.StructType): Unit = {
     val fs = tableRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, tableRoot) match {
-      case Seq() => Seq(tableRoot)
-      case ps    => ps
-    }
+    val parts = Compaction.leaves(fs, tableRoot)
     parts.foreach(dir => alterSchema(fs, dir, next))
     val missing = parts.filterNot(dir =>
       currentSchema(fs, dir).exists(rec => next.forall(f =>
@@ -1068,12 +1063,7 @@ object ManifestCommit {
     * means GC ran with too short a grace, and silently dropping rows is
     * the one unacceptable outcome. */
   def liveFiles(fs: FileSystem, tableRoot: Path): Seq[Path] = {
-    // an unpartitioned table is its own leaf (leafPartitions only
-    // recognizes year=/month=/day= trees)
-    val parts = Compaction.leafPartitions(fs, tableRoot) match {
-      case Seq() => Seq(tableRoot)
-      case ps    => ps
-    }
+    val parts = Compaction.leaves(fs, tableRoot)
     parts.flatMap { dir =>
       currentSnapshot(fs, dir) match {
         case Some(snap) =>
@@ -1093,48 +1083,18 @@ object ManifestCommit {
     }
   }
 
-  /** Manifest-resolved parquet read of a whole partitioned table:
-    * `basePath` keeps the year/month/day partition columns (and their
-    * pruning) exactly as a directory scan would, but the file set is the
-    * committed snapshot — readers never see a compactor's in-flight or
-    * superseded files regardless of filesystem rename semantics.
-    *
-    * Refuses LOUDLY when any leaf carries active deletion-vector
-    * sidecars: a bare file scan would resurrect merge-on-read-deleted
-    * rows, and a silently wrong read is the one unacceptable outcome —
-    * use [[readTableDV]] (same result, sidecars subtracted), or
-    * [[applyDvs]] to compact them away. */
-  def readTable(spark: SparkSession, tableRoot: String,
-      mergeSchema: Boolean = false): DataFrame = {
-    val root = new Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
-    parts.foreach { dir =>
-      val dvs = currentDvs(fs, dir)
-      require(dvs.isEmpty,
-        s"readTable: $dir has ${dvs.size} active deletion-vector " +
-          "sidecar(s) — a bare scan would resurrect deleted rows; use " +
-          "readTableDV, or applyDvs first")
-    }
-    readTableRaw(spark, tableRoot, mergeSchema)
-  }
-
-  /** [[readTable]] WITHOUT the deletion-vector guard — for metadata-only
+  /** The committed files of the current version as a plain parquet
+    * frame, WITHOUT deletion-vector handling — for metadata-only
     * consumers (schema probes, `.limit(0)` empty frames) where
-    * resurrected rows can never surface. Never use for data reads. */
-  private[graft] def readTableRaw(spark: SparkSession, tableRoot: String,
-      mergeSchema: Boolean = false): DataFrame = {
+    * resurrected rows can never surface. Data reads go through
+    * [[GraftFileIndex.table]] (current version) or [[readTableAt]]. */
+  private[graft] def readTableRaw(spark: SparkSession,
+      tableRoot: String): DataFrame = {
     val root = new Path(tableRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = liveFiles(fs, root).map(_.toString)
     require(files.nonEmpty, s"no live files under $tableRoot")
-    spark.read
-      .option("basePath", tableRoot)
-      .option("mergeSchema", mergeSchema.toString)
-      .parquet(files: _*)
+    spark.read.option("basePath", tableRoot).parquet(files: _*)
   }
 
   /** Record commit-time column stats for already-committed files by
@@ -1254,11 +1214,11 @@ object ManifestCommit {
   /** Time travel: read one partition (or unpartitioned table dir) at a
     * past committed version — the version's LOGICAL state: deletion
     * vectors active at that version are subtracted exactly as
-    * [[readTableDV]] subtracts the current ones (a bare file read of a
-    * merge-on-read version would resurrect its deleted rows). Works
-    * until [[gc]] collects the version's tombstoned files or sidecars —
-    * the gc grace is exactly the time-travel horizon, the same trade
-    * Delta's VACUUM makes. */
+    * [[GraftFileIndex.table]] subtracts the current ones (a bare file
+    * read of a merge-on-read version would resurrect its deleted rows).
+    * Works until [[gc]] collects the version's tombstoned files or
+    * sidecars — the gc grace is exactly the time-travel horizon, the
+    * same trade Delta's VACUUM makes. */
   def readTableAt(spark: SparkSession, tableRoot: String,
       version: Long): DataFrame = {
     val root = new Path(tableRoot)
@@ -1683,81 +1643,6 @@ object ManifestCommit {
     appendFiles(fs, partition, Nil, blooms = blooms)
   }
 
-  /** Manifest-resolved read of ONLY the files whose committed Bloom
-    * filter might contain `column = value` — equality skipping on an
-    * unclustered column. Files without a bloom for the column are kept
-    * (conservative); false positives only cost a scanned file, never a
-    * wrong answer. The caller still applies the row filter. */
-  def readTableEq(spark: SparkSession, tableRoot: String, column: String,
-      value: Long): DataFrame = {
-    val root = new Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
-    val files = parts.flatMap { dir =>
-      headState(fs, dir) match {
-        case Some(h) =>
-          require(h.dvs.isEmpty,
-            s"readTableEq: $dir has ${h.dvs.size} active deletion-vector " +
-              "sidecar(s) — a bare scan would resurrect deleted rows; " +
-              "use tableDV/readTableDV, or applyDvs first")
-          h.files.filter { n =>
-            h.blooms.getOrElse(n, Nil).find(_.col == column)
-              .forall(_.mightContain(value))
-          }.map(new Path(dir, _))
-        case None => liveFiles(fs, dir)
-      }
-    }
-    // every bloom rejecting the value is a definitive (and free) empty
-    // answer — surface it as an empty frame with the table's schema
-    if (files.isEmpty) readTableRaw(spark, tableRoot).limit(0)
-    else spark.read.option("basePath", tableRoot)
-      .parquet(files.map(_.toString): _*)
-  }
-
-  /** Manifest-resolved read of ONLY the files whose committed stats can
-    * satisfy `ranges` (inclusive [lo, hi] per column): the file-skipping
-    * scan a lake format plans from its manifest. Files without stats for
-    * a ranged column are kept (conservative). The caller still applies
-    * the row-level filter — pruning is a superset guarantee, exactly as
-    * in Delta/Iceberg. */
-  def readTableWhere(spark: SparkSession, tableRoot: String,
-      ranges: Map[String, (Long, Long)],
-      mergeSchema: Boolean = false): DataFrame = {
-    val root = new Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an unpartitioned table IS its own leaf (leafPartitions only walks
-    // year=/month=/day= trees)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
-    val files = parts.flatMap { dir =>
-      headState(fs, dir) match {
-        case Some(h) =>
-          require(h.dvs.isEmpty,
-            s"readTableWhere: $dir has ${h.dvs.size} active " +
-              "deletion-vector sidecar(s) — a bare scan would resurrect " +
-              "deleted rows; use readTableWhereDV, or applyDvs first")
-          val stats = h.stats
-          h.files.filter { n =>
-            ranges.forall { case (c, (lo, hi)) =>
-              stats.getOrElse(n, Nil).find(_.col == c)
-                .forall(s => s.max >= lo && s.min <= hi)
-            }
-          }.map(new Path(dir, _))
-        case None => liveFiles(fs, dir)
-      }
-    }
-    require(files.nonEmpty, s"no live files under $tableRoot match $ranges")
-    spark.read
-      .option("basePath", tableRoot)
-      .option("mergeSchema", mergeSchema.toString)
-      .parquet(files.map(_.toString): _*)
-  }
-
   // ---------------------------------------------------------------- DVs
 
   /** Prefix of deletion-vector sidecar files. Starts with
@@ -1773,8 +1658,8 @@ object ManifestCommit {
     * does), write a deletion-vector sidecar — a parquet of
     * `(file, pos)` rows naming the doomed positions via the parquet
     * row index — and commit it with the live set UNCHANGED. Readers
-    * ([[readTableDV]]) subtract the union of active sidecars with one
-    * anti-join. NULL keys are outside every range, exactly as in
+    * ([[GraftFileIndex.table]]) subtract the union of active sidecars
+    * with one anti-join. NULL keys are outside every range, exactly as in
     * [[deleteRange]].
     *
     * Why this matters at 100 TB: a copy-on-write delete of k rows
@@ -2227,88 +2112,10 @@ object ManifestCommit {
       .drop("__dv_file", "__dv_pos")
   }
 
-  /** Manifest-resolved read applying the active deletion vectors — the
-    * merge-on-read twin of [[readTable]]. Partitions with no sidecars
-    * read exactly as [[readTable]] (zero overhead: the anti-join is
-    * added only where a sidecar exists). */
-  def readTableDV(spark: SparkSession, tableRoot: String): DataFrame = {
-    val root = new Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
-    val resolved = parts.map { dir =>
-      val data = currentSnapshot(fs, dir) match {
-        case Some(snap) => snap.files.map(new Path(dir, _))
-        case None       => liveFiles(fs, dir)
-      }
-      (data, currentDvs(fs, dir).map(new Path(dir, _)))
-    }
-    // sidecar rows key on file NAMES, which are only guaranteed unique
-    // within their partition (an adopted hand-written file could share a
-    // name across partitions) — so the anti-join is applied per
-    // DV-carrying partition, while every sidecar-free partition folds
-    // into ONE plain scan
-    val clean = resolved.collect { case (d, Seq()) => d }.flatten
-    val reads =
-      (if (clean.isEmpty) Nil
-       else Seq(readMinusDvs(spark, tableRoot, clean, Nil))) ++
-        resolved.collect { case (d, dvs) if dvs.nonEmpty && d.nonEmpty =>
-          readMinusDvs(spark, tableRoot, d, dvs)
-        }
-    require(reads.nonEmpty, s"no live files under $tableRoot")
-    reads.reduce(_ unionByName _)
-  }
-
-  /** Manifest-stat-pruned merge-on-read read: [[readTableWhere]]'s file
-    * skipping UNDER the deletion-vector subtraction — the production
-    * combination at 100 TB, where a clustered-key point query over a
-    * table carrying GDPR deletes must open a handful of files, not the
-    * table. Pruning composes with the sidecars for free: positions key
-    * on (file, row-index), so dropping a data file from the scan only
-    * drops its sidecar rows from the anti-join match set — never a
-    * wrong row. The sidecars themselves are O(deleted rows) and read
-    * whole (a position naming a pruned file simply matches nothing).
-    * Partitions with no sidecars fold into one plain pruned scan, so a
-    * DV-free table pays exactly [[readTableWhere]]. */
-  def readTableWhereDV(spark: SparkSession, tableRoot: String,
-      ranges: Map[String, (Long, Long)]): DataFrame = {
-    val root = new Path(tableRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = Compaction.leafPartitions(fs, root) match {
-      case Seq() => Seq(root)
-      case ps    => ps
-    }
-    val resolved = parts.map { dir =>
-      val stats = currentFileStats(fs, dir)
-      val data = currentSnapshot(fs, dir) match {
-        case Some(snap) =>
-          snap.files.filter { n =>
-            ranges.forall { case (c, (lo, hi)) =>
-              stats.getOrElse(n, Nil).find(_.col == c)
-                .forall(s => s.max >= lo && s.min <= hi)
-            }
-          }.map(new Path(dir, _))
-        case None => liveFiles(fs, dir)
-      }
-      (data, currentDvs(fs, dir).map(new Path(dir, _)))
-    }
-    val clean = resolved.collect { case (d, Seq()) => d }.flatten
-    val reads =
-      (if (clean.isEmpty) Nil
-       else Seq(readMinusDvs(spark, tableRoot, clean, Nil))) ++
-        resolved.collect { case (d, dvs) if dvs.nonEmpty && d.nonEmpty =>
-          readMinusDvs(spark, tableRoot, d, dvs)
-        }
-    require(reads.nonEmpty, s"no live files under $tableRoot match $ranges")
-    reads.reduce(_ unionByName _)
-  }
-
   /** Compact the deletion vectors of one partition back into the data
     * (merge-on-read -> copy-on-write conversion): rewrite ONLY the files
     * the sidecars actually name, drop every sidecar, and commit — after
-    * this the plain [[readTable]] sees the post-delete rows and the
+    * this [[GraftFileIndex.table]] is a plain scan again and the
     * per-read anti-join cost is gone. One rewrite amortizes any number
     * of accumulated [[deleteWhereDV]] commits. Returns
     * (rewrittenFiles, droppedSidecars). */

@@ -28,12 +28,22 @@ object Multimodal {
     * `ImageIO.read(InputStream)` convenience, which builds one
     * internally) creates and deletes a temp FILE per payload — a
     * per-row disk round-trip inside the decode/encode hot loops.
-    * Payloads here are in-memory byte arrays, so the memory-cached
-    * stream variants are strictly better; flip the JVM-global switch
-    * once per task (a static boolean store — guide §4.5, heavyweight
-    * state initialized once, per-row cost zero). */
-  private def useMemCachedImageStreams(): Unit =
-    javax.imageio.ImageIO.setUseCache(false)
+    * Payloads here are in-memory byte arrays, so every call builds its
+    * own memory-cached stream instead — never through the JVM-global
+    * `ImageIO.setUseCache` switch, which a task must not flip. */
+  private def imageIn(
+      payload: Array[Byte]): javax.imageio.stream.ImageInputStream =
+    new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+
+  private def imageOut(
+      out: java.io.OutputStream): javax.imageio.stream.ImageOutputStream =
+    new javax.imageio.stream.MemoryCacheImageOutputStream(out)
+
+  /** `ImageIO.read` over a memory-cached stream (null when no reader
+    * recognizes the payload, as `ImageIO.read` itself). */
+  private def readImage(payload: Array[Byte]): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(imageIn(payload))
 
   /** One media row: opaque payload + typed metadata. */
   final case class MediaRow(media_id: Long, kind: String, payload: Array[Byte])
@@ -57,15 +67,13 @@ object Multimodal {
   def extractFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
-      useMemCachedImageStreams()
       rows.map { r =>
         if (r.kind.endsWith("pgm")) {
           val p = parsePgm(r.media_id, r.payload)
           MediaFeatures(r.media_id, r.kind, p.width, p.height,
             p.mean_permille, p.min_px, p.max_px)
         } else {
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.payload))
+          val img = readImage(r.payload)
           require(img != null,
             s"media ${r.media_id} (${r.kind}): payload is not a " +
               "decodable image")
@@ -812,7 +820,6 @@ object Multimodal {
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { rows =>
-        useMemCachedImageStreams()
         // one writer per partition (the extractFeatures codec-init cost
         // model) — ImageIO.write would re-run the registry lookup and
         // allocate a fresh writer per row
@@ -821,7 +828,7 @@ object Multimodal {
         val writer = it.next()
         rows.map { case (id, text) =>
           val out = new java.io.ByteArrayOutputStream()
-          val ios = javax.imageio.ImageIO.createImageOutputStream(out)
+          val ios = imageOut(out)
           writer.setOutput(ios)
           writer.write(grayImageFromText(text, w, h))
           ios.close()
@@ -847,10 +854,8 @@ object Multimodal {
   def decodeImage(media: Dataset[MediaRow]): Dataset[ImageFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
-      useMemCachedImageStreams()
       rows.map { r =>
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(r.payload))
+      val img = readImage(r.payload)
       require(img != null,
         s"media ${r.media_id}: payload is not a decodable image")
       val raster = img.getRaster
@@ -904,7 +909,6 @@ object Multimodal {
       s"resizeImage: target dimensions must be positive (got ${outW}x$outH)")
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
-      useMemCachedImageStreams()
       // per-partition writer reuse (decode side stays on ImageIO.read —
       // input formats can be mixed, the registry probe is the decoder
       // dispatch there)
@@ -912,8 +916,7 @@ object Multimodal {
       require(it.hasNext, s"no ImageIO writer for format $fmt")
       val writer = it.next()
       rows.map { r =>
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(r.payload))
+        val img = readImage(r.payload)
         require(img != null,
           s"media ${r.media_id}: payload is not a decodable image")
         val w = img.getWidth; val h = img.getHeight
@@ -932,7 +935,7 @@ object Multimodal {
           y += 1
         }
         val buf = new java.io.ByteArrayOutputStream()
-        val ios = javax.imageio.ImageIO.createImageOutputStream(buf)
+        val ios = imageOut(buf)
         writer.setOutput(ios)
         writer.write(out)
         ios.close()
@@ -969,7 +972,6 @@ object Multimodal {
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { rows =>
-        useMemCachedImageStreams()
         // one writer per partition (the codec-init cost model of
         // extractFeatures), reset per payload via a fresh output stream
         val writer =
@@ -977,7 +979,7 @@ object Multimodal {
         rows.map { case (id, text) =>
           val tb = text.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
           val out = new java.io.ByteArrayOutputStream()
-          val ios = javax.imageio.ImageIO.createImageOutputStream(out)
+          val ios = imageOut(out)
           writer.setOutput(ios)
           writer.prepareWriteSequence(null)
           var f = 0
@@ -1017,12 +1019,10 @@ object Multimodal {
     require(every >= 1, s"sampleGifFrames: every=$every must be >= 1")
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
-      useMemCachedImageStreams()
       val reader =
         javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
       rows.flatMap { r =>
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(r.payload))
+        val iis = imageIn(r.payload)
         // seekForwardOnly must stay false: getNumImages(allowSearch=true)
         // scans the whole container for frame count
         reader.setInput(iis, false)
@@ -1060,12 +1060,10 @@ object Multimodal {
   def gifFrameHashes(media: Dataset[MediaRow]): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { rows =>
-      useMemCachedImageStreams()
       val reader =
         javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
       rows.flatMap { r =>
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(r.payload))
+        val iis = imageIn(r.payload)
         reader.setInput(iis, false)
         val n = reader.getNumImages(true)
         require(n > 0, s"media ${r.media_id}: no decodable GIF frames")

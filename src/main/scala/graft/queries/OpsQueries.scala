@@ -819,7 +819,7 @@ object OpsQueries {
     // then served from storage. The oracle recomputes the full
     // LSH + CC + PageRank chain, proving stored == recomputed.
     "q195_canonical_persist" -> ((s, d) =>
-      graft.lake.ManifestCommit.readTable(s, ensureCanonGraph(s, d))
+      graft.lake.GraftFileIndex.table(s, ensureCanonGraph(s, d))
         .select("doc_id", "component_id", "pr", "is_canonical")
         .orderBy("doc_id")),
     // the q230 split SERVED FROM STORAGE: group keys read from the
@@ -827,8 +827,7 @@ object OpsQueries {
     // oracle), so assigning splits costs one narrow read + a left
     // join + hash arithmetic — the LSH + CC chain never re-runs
     "q231_split_from_storage" -> ((s, d) => {
-      val comp = graft.lake.ManifestCommit
-        .readTable(s, ensureCanonGraph(s, d))
+      val comp = graft.lake.GraftFileIndex.table(s, ensureCanonGraph(s, d))
         .select(col("doc_id"), col("component_id"))
       docs(s, d).select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
@@ -976,7 +975,7 @@ object OpsQueries {
             .select("doc_id", "text"),
           feed.filter(col("_change_type") === "delete")
             .select("doc_id", "text"),
-          graft.lake.ManifestCommit.readTable(s, dl.path))
+          graft.lake.GraftFileIndex.table(s, dl.path))
         .select(col("band"), col("key"), size(col("ids")).as("n_ids"))
         .orderBy("band", "key")
     }),
@@ -1282,40 +1281,22 @@ object OpsQueries {
         .orderBy("left_key")
     }),
     // the full lake-format skipping path: the z-ordered lake committed
-    // through the manifest WITH per-file column stats; the read resolves
-    // the manifest, prunes files by the recorded min/max (zero footer
-    // reads), and the row filter finishes the job — same oracle rows as
-    // q150, arrived at through manifest pruning instead of a full scan
-    "q164_manifest_pruned_scan" -> ((s, d) => {
-      val z = ensureZLake(s, d)
-      val (plo, phi) = boxRange(z.pmin, z.pmax)
-      val (slo, shi) = boxRange(z.smin, z.smax)
-      graft.lake.ManifestCommit.readTableWhere(s, z.path,
-          Map("l_partkey" -> (plo, phi), "l_suppkey" -> (slo, shi)))
-        .filter(col("l_partkey").between(plo, phi) &&
-          col("l_suppkey").between(slo, shi))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    // the manifest lake as a FIRST-CLASS Spark table: same box query as
-    // q164 but from ORDINARY filter predicates — no explicit ranges map.
-    // Catalyst pushes the conjuncts into GraftFileIndex.listFiles, which
-    // answers from committed manifest stats (file skipping), and the
-    // scan itself is stock vectorized parquet
-    "q241_fileindex_scan" -> ((s, d) => {
-      val z = ensureZLake(s, d)
-      val (plo, phi) = boxRange(z.pmin, z.pmax)
-      val (slo, shi) = boxRange(z.smin, z.smax)
-      graft.lake.GraftFileIndex.table(s, z.path)
-        .filter(col("l_partkey").between(plo, phi) &&
-          col("l_suppkey").between(slo, shi))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
+    // through the manifest WITH per-file column stats; the box predicate
+    // reaches GraftFileIndex.listFiles, which prunes files by the
+    // recorded min/max (zero footer reads), and the row filter finishes
+    // the job — same oracle rows as q150, arrived at through manifest
+    // pruning instead of a full scan
+    "q164_manifest_pruned_scan" -> ((s, d) => zLakeBoxScan(s, d)),
+    // the manifest lake as a FIRST-CLASS Spark table: the same box query
+    // as q164 from ORDINARY filter predicates; PlanSpec pins that the
+    // pushed conjuncts alone skip files
+    "q241_fileindex_scan" -> ((s, d) => zLakeBoxScan(s, d)),
     // GDPR targeted delete: the key range is rewritten out of ONLY the
     // stats-intersecting files; the manifest read sees the post-delete
     // table, bit-equal to the logical anti-filter
     "q165_targeted_delete" -> ((s, d) => {
       val dl = ensureDelLake(s, d)
-      graft.lake.ManifestCommit.readTable(s, dl.path)
+      graft.lake.GraftFileIndex.table(s, dl.path)
         .orderBy("l_orderkey", "l_linenumber")
     }),
     // time travel: the pre-delete version is still fully readable until
@@ -1333,7 +1314,7 @@ object OpsQueries {
       val dl = ensureDelLake(s, d)
       graft.ops.Checks.profileDiff(
           graft.lake.ManifestCommit.readTableAt(s, dl.path, dl.preVersion),
-          graft.lake.ManifestCommit.readTable(s, dl.path),
+          graft.lake.GraftFileIndex.table(s, dl.path),
           Seq("l_orderkey", "l_partkey", "l_suppkey"))
         .orderBy("column")
     }),
@@ -1343,7 +1324,7 @@ object OpsQueries {
     // with one broadcast anti-join on the parquet row index
     "q238_dv_read" -> ((s, d) => {
       val dv = ensureDvLake(s, d)
-      graft.lake.ManifestCommit.readTableDV(s, dv.path)
+      graft.lake.GraftFileIndex.table(s, dv.path)
         .orderBy("l_orderkey", "l_linenumber")
     }),
     // merge-on-read TIME TRAVEL: reading the version BETWEEN the two dv
@@ -1362,17 +1343,18 @@ object OpsQueries {
     // merge-on-read scan opens one sidecar instead of k, and the
     // logical relation is unchanged
     "q265_dv_sidecar_compact" -> ((s, d) =>
-      graft.lake.ManifestCommit.readTableDV(s,
+      graft.lake.GraftFileIndex.table(s,
           ensureDvSidecarCompactLake(s, d))
         .orderBy("l_orderkey", "l_linenumber")),
     // copy-on-write conversion: ONE rewrite of only the sidecar-named
     // files amortizes both dv deletes; afterwards the PLAIN manifest
-    // read serves the post-delete table and the anti-join cost is gone.
+    // read serves the post-delete table and the anti-join cost is gone
+    // (the fixture requires every sidecar cleared, so the plan is join-free).
     // Its OWN lake (the applyDvs runs inside the fixture): rewriting
     // q238's shared lake at construction time raced the plan-pinned
     // q238 anti-join when suites build queries concurrently.
     "q239_dv_rewrite" -> ((s, d) =>
-      graft.lake.ManifestCommit.readTable(s, ensureDvRewriteLake(s, d))
+      graft.lake.GraftFileIndex.table(s, ensureDvRewriteLake(s, d))
         .orderBy("l_orderkey", "l_linenumber")),
     // change-feed replay of the dv deletes: the deleted rows come back
     // from the added-sidecar semi-join alone — file-motion-free deletes
@@ -1388,31 +1370,30 @@ object OpsQueries {
     }),
     // compaction under merge-on-read deletes: the compactor SUBTRACTS
     // the active sidecars during the merge and drops them at commit —
-    // the PLAIN manifest read of the compacted table must equal the
-    // logical post-delete relation (deleted rows never resurrect
-    // through a rewrite that renames/repositions their rows)
+    // the PLAIN manifest read of the compacted table (the fixture
+    // requires every sidecar dropped) must equal the logical post-delete
+    // relation (deleted rows never resurrect through a rewrite that
+    // renames/repositions their rows)
     "q248_dv_compact" -> ((s, d) => {
       val l = ensureDvCompactLake(s, d)
-      graft.lake.ManifestCommit.readTable(s, l.path)
+      graft.lake.GraftFileIndex.table(s, l.path)
         .orderBy("l_orderkey", "l_linenumber")
     }),
     // manifest-stat pruning UNDER the deletion-vector subtraction — the
     // production read of a clustered 100 TB table carrying GDPR deletes:
     // a key-window query opens only the stats-intersecting files AND
-    // anti-joins the sidecars in the same plan
+    // anti-joins the sidecars in the same plan. The file count is the
+    // PLANNED manifest scan's (Dataset.inputFiles would report the
+    // index's whole file set); planning lists files on the driver only
     "q249_dv_pruned_read" -> ((s, d) => {
-      val l = ensureDvPruneLake(s, d)
-      val out = graft.lake.ManifestCommit.readTableWhereDV(s, l.path,
-          Map("l_orderkey" -> (l.klo, l.prHi)))
-        .filter(col("l_orderkey").between(l.klo, l.prHi))
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-          "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
-      val dataFiles = out.inputFiles
-        .count(f => !new org.apache.hadoop.fs.Path(f).getName
-          .startsWith(graft.lake.ManifestCommit.DvPrefix))
-      require(dataFiles < 16,
-        s"key window must prune the 16-file layout, scanned $dataFiles")
+      val out = dvPrunedRead(s, d)
+      val planned = out.queryExecution.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.isInstanceOf[graft.lake.GraftFileIndex] =>
+          f.selectedPartitions.totalNumberOfFiles
+      }
+      require(planned.size == 1 && planned.head < 16,
+        s"key window must prune the 16-file layout, planned $planned")
       out
     }),
     // merge-on-read UPSERT (MERGE: matched keys replaced, new keys
@@ -1421,7 +1402,7 @@ object OpsQueries {
     // O(changed rows); the DV read serves the post-merge table
     "q252_upsert_read" -> ((s, d) => {
       val u = ensureUpsertLake(s, d)
-      graft.lake.ManifestCommit.readTableDV(s, u.path)
+      graft.lake.GraftFileIndex.table(s, u.path)
         .orderBy("l_orderkey", "l_linenumber")
     }),
     // the upsert commit replayed from the log alone: added files =
@@ -1441,7 +1422,7 @@ object OpsQueries {
     // delete in day=2), and a proven no-op third run; the replica's
     // DV read must equal the source's logical head
     "q257_replicate_table" -> ((s, d) =>
-      graft.lake.ManifestCommit.readTableDV(s, ensureReplTable(s, d))
+      graft.lake.GraftFileIndex.table(s, ensureReplTable(s, d))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("day").cast("long").as("day"))
         .orderBy("o_orderkey", "day")),
@@ -1453,7 +1434,7 @@ object OpsQueries {
     // time; the spec pins the zero-job metric), pre-evolution rows
     // surface NULL for the new column
     "q258_schema_evolution" -> ((s, d) =>
-      graft.lake.GraftFileIndex.tableDV(s, ensureEvoLake(s, d))
+      graft.lake.GraftFileIndex.table(s, ensureEvoLake(s, d))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy("o_orderkey")),
     // TABLE-level schema evolution over a MULTI-LEAF Hive-partitioned
@@ -1876,15 +1857,8 @@ object OpsQueries {
     // the same pruned merge-on-read read through the Catalyst
     // FileIndex: an ORDINARY WHERE predicate prunes files via manifest
     // stats inside the planner while the sidecar anti-join rides on
-    // top — no explicit ranges map (spec pins the scanned-file metric)
-    "q251_dv_fileindex" -> ((s, d) => {
-      val l = ensureDvPruneLake(s, d)
-      graft.lake.GraftFileIndex.tableDV(s, l.path)
-        .filter(col("l_orderkey").between(l.klo, l.prHi))
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-          "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
+    // top (spec pins the scanned-file metric)
+    "q251_dv_fileindex" -> ((s, d) => dvPrunedRead(s, d)),
     // write-audit-publish: the batch lands invisible, the audit runs
     // over exactly the candidate files, and only a pass commits — the
     // published table IS the audited relation
@@ -1910,7 +1884,7 @@ object OpsQueries {
         require(ok.nonEmpty, "clean batch must publish")
         p
       })
-      graft.lake.ManifestCommit.readTable(s, path).orderBy("o_orderkey")
+      graft.lake.GraftFileIndex.table(s, path).orderBy("o_orderkey")
     }),
     // clustered compaction: fragments merge under a RANGE repartition on
     // the key, stats re-recorded — compaction that keeps the layout
@@ -1935,8 +1909,7 @@ object OpsQueries {
       val b = Tables(s, d, "orders")
         .agg(min("o_orderkey"), max("o_orderkey")).head
       val (lo, hi) = boxRange(b.getLong(0), b.getLong(1))
-      graft.lake.ManifestCommit.readTableWhere(s, path,
-          Map("o_orderkey" -> (lo, hi)))
+      graft.lake.GraftFileIndex.table(s, path)
         .filter(col("o_orderkey").between(lo, hi))
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
@@ -2191,7 +2164,7 @@ object OpsQueries {
       val v = Tables(s, d, "lineitem")
         .filter(col("l_orderkey") >= klo + (khi - klo) / 3)
         .agg(min("l_orderkey")).head.getLong(0)
-      graft.lake.ManifestCommit.readTableEq(s, z.path, "l_orderkey", v)
+      graft.lake.GraftFileIndex.table(s, z.path)
         .filter(col("l_orderkey") === v)
         .orderBy("l_orderkey", "l_linenumber")
     }))
@@ -2204,6 +2177,18 @@ object OpsQueries {
 
   private val zLakes =
     new java.util.concurrent.ConcurrentHashMap[String, ZLake]()
+
+  /** q164/q241: the box query over the z-ordered lake through the one
+    * manifest read — the box conjuncts reach GraftFileIndex.listFiles. */
+  private def zLakeBoxScan(s: SparkSession, d: String): DataFrame = {
+    val z = ensureZLake(s, d)
+    val (plo, phi) = boxRange(z.pmin, z.pmax)
+    val (slo, shi) = boxRange(z.smin, z.smax)
+    graft.lake.GraftFileIndex.table(s, z.path)
+      .filter(col("l_partkey").between(plo, phi) &&
+        col("l_suppkey").between(slo, shi))
+      .orderBy("l_orderkey", "l_linenumber")
+  }
 
   private def ensureZLake(s: SparkSession, d: String): ZLake =
     zLakes.computeIfAbsent(d, _ => {
@@ -3184,10 +3169,9 @@ object OpsQueries {
       DvcLake(path)
     })
 
-  /** Per-(process, sfDir) lake for q249: DV delete over the SECOND
+  /** Per-(process, sfDir) lake for q249/q251: DV delete over the SECOND
     * quarter, stats on the clustered key, NO compaction — the pruned
-    * merge-on-read read ([[graft.lake.ManifestCommit.readTableWhereDV]])
-    * gets a window ([klo, prHi], the first 3/8) that both prunes files
+    * merge-on-read read ([[dvPrunedRead]]) gets a window ([klo, prHi], the first 3/8) that both prunes files
     * and overlaps the deleted quarter. */
   private[queries] final case class DvpLake(path: String, klo: Long,
     prHi: Long)
@@ -3242,6 +3226,17 @@ object OpsQueries {
       UpsLake(path, pre,
         ManifestCommit.currentSnapshot(fs, dir).get.version)
     })
+
+  /** q249/q251: the key-window read of the [[ensureDvPruneLake]] table,
+    * manifest-stat pruned under the sidecar anti-join. */
+  private def dvPrunedRead(s: SparkSession, d: String): DataFrame = {
+    val l = ensureDvPruneLake(s, d)
+    graft.lake.GraftFileIndex.table(s, l.path)
+      .filter(col("l_orderkey").between(l.klo, l.prHi))
+      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
+        "l_quantity")
+      .orderBy("l_orderkey", "l_linenumber")
+  }
 
   private def ensureDvPruneLake(s: SparkSession, d: String): DvpLake =
     dvpLakes.computeIfAbsent(d, _ => {

@@ -329,7 +329,7 @@ object StreamingOps {
     graft.lake.ManifestCommit.adoptNewFiles(fs, dir)
     graft.lake.ManifestCommit.recordStats(spark, dir,
       Seq("event_id", "user_id"))
-    graft.lake.ManifestCommit.readTable(spark, tableDir)
+    graft.lake.GraftFileIndex.table(spark, tableDir)
   }
 
   /** EXACTLY-ONCE streaming sink into the manifest lake WITHOUT the
@@ -414,7 +414,7 @@ object StreamingOps {
     // every one of them (a double-apply would duplicate rows or lose
     // resurrected deletes — either hash-mismatches the oracle)
     runOnce(s"$dstPath-checkpoint-replay")
-    ManifestCommit.readTableDV(spark, dstPath)
+    graft.lake.GraftFileIndex.table(spark, dstPath)
   }
 
   def streamIngestTxn(spark: SparkSession, sfDir: String,
@@ -462,7 +462,7 @@ object StreamingOps {
     // total checkpoint loss: every batch re-delivers from 0 against the
     // LIVE table; the manifest watermark alone must suppress them all
     runOnce(s"$tableDir-checkpoint-replay")
-    graft.lake.ManifestCommit.readTable(spark, tableDir)
+    graft.lake.GraftFileIndex.table(spark, tableDir)
   }
 
   /** Streaming BPE token counting: the tokenizer trains ONCE on the
@@ -1134,7 +1134,7 @@ object StreamingOps {
     // total checkpoint loss: the snapshot and every increment re-deliver;
     // the watermark alone must suppress them all
     runOnce(s"$dstPath-checkpoint-replay")
-    ManifestCommit.readTableDV(spark, dstPath)
+    graft.lake.GraftFileIndex.table(spark, dstPath)
   }
 
   /** Drive the [[graft.sources.FeedSource]] stream in BOOTSTRAP mode:
@@ -1143,7 +1143,7 @@ object StreamingOps {
     * CDC consumer can stand up against a merge-on-read table without an
     * applyDvs/compact first — and subsequent batches tail the log. On
     * the finite AvailableNow run the collected rows equal the batch
-    * [[graft.lake.ManifestCommit.readTableDV]] (q260's oracle gates
+    * [[graft.lake.GraftFileIndex.table]] (q260's oracle gates
     * it). */
   def streamFeedBootstrap(spark: SparkSession,
       tablePath: String): DataFrame = {
@@ -1476,7 +1476,7 @@ object StreamingOps {
     // double-apply would re-delete and re-insert rows — the oracle
     // would hash-mismatch)
     runOnce(s"$viewPath-checkpoint-replay")
-    ManifestCommit.readTableDV(spark, viewPath)
+    graft.lake.GraftFileIndex.table(spark, viewPath)
   }
 
   /** STREAMING ANN-index maintenance — [[streamFeedIndexMaintain]]'s

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.lake.{ChangeFeed, Compaction, ManifestCommit}
+import graft.lake.{ChangeFeed, Compaction, GraftFileIndex, ManifestCommit}
 
 /** Manifest-log change data feed: commit kinds, incremental replay, and
   * the conservative refusals. The feed's contract is "work ∝ change
@@ -97,7 +97,7 @@ class ChangeFeedSpec extends SparkSpec {
       .exceptAll(ChangeFeed.changeFeed(spark, dir, cursor, head)
         .filter($"_change_type" === ChangeFeed.Delete)
         .select("k", "g", "v"))
-    val headTable = ManifestCommit.readTable(spark, dir.toString)
+    val headTable = GraftFileIndex.table(spark, dir.toString)
       .select("k", "g", "v")
     assert(replayed.exceptAll(headTable).isEmpty &&
       headTable.exceptAll(replayed).isEmpty,
@@ -113,19 +113,19 @@ class ChangeFeedSpec extends SparkSpec {
         "v", "sv", "cnt")
       .collect().map(r => (Option(r.get(0)), (r.getLong(1), r.getLong(2))))
       .toMap
-    val recomputed = ManifestCommit.readTable(spark, dir.toString)
+    val recomputed = GraftFileIndex.table(spark, dir.toString)
       .groupBy("g").agg(sum("v").as("sv"), count(lit(1)).as("cnt"))
       .collect().map(r => (Option(r.get(0)), (r.getLong(1), r.getLong(2))))
       .toMap
     assert(maintained == recomputed,
       s"maintained $maintained != recomputed $recomputed")
     // a group whose every row is deleted disappears, as a recompute would
-    val killFeed = ManifestCommit.readTable(spark, dir.toString)
+    val killFeed = GraftFileIndex.table(spark, dir.toString)
       .filter($"g" === 2)
       .withColumn("_change_type", lit(ChangeFeed.Delete))
       .withColumn("_commit_version", lit(99L))
     val after = ChangeFeed.maintainAdditive(
-      ManifestCommit.readTable(spark, dir.toString)
+      GraftFileIndex.table(spark, dir.toString)
         .groupBy("g").agg(count(lit(1)).as("cnt"), sum("v").as("sv")),
       killFeed, Seq("g"), "v", "sv", "cnt")
     assert(after.filter($"g" === 2).isEmpty, "emptied key must vanish")
@@ -145,7 +145,7 @@ class ChangeFeedSpec extends SparkSpec {
         r.getString(3))).toSet
     val maintained = canon(
       ChangeFeed.maintainJoin(stored, feed, dim, "g", "k"))
-    val recomputed = canon(ManifestCommit.readTable(spark, dir.toString)
+    val recomputed = canon(GraftFileIndex.table(spark, dir.toString)
       .join(dim, Seq("g")).select("k", "g", "v", "gname"))
     assert(maintained == recomputed)
     // NULL-key stored rows are untouched by the apply (feed never
@@ -296,9 +296,9 @@ class ChangeFeedSpec extends SparkSpec {
       _ => true, statsCols = Seq("k")).getOrElse(fail("publish(5)"))
     val r2 = ChangeFeed.replicateTable(spark, srcPath, dstPath, "k", "t")
     assert(r2.head._4, s"delta must apply: $r2")
-    val want = ManifestCommit.readTableDV(spark, srcPath)
+    val want = GraftFileIndex.table(spark, srcPath)
       .orderBy("k").collect().toSeq
-    val got = ManifestCommit.readTableDV(spark, dstPath)
+    val got = GraftFileIndex.table(spark, dstPath)
       .select("k", "g", "v").orderBy("k").collect().toSeq
     assert(got == want, s"replica diverged:\n got=$got\nwant=$want")
     // spot the sequences explicitly
@@ -341,7 +341,7 @@ class ChangeFeedSpec extends SparkSpec {
     assert(r2.head._4, s"evolved delta must apply: $r2")
     // replica == source head: old rows NULL the new column, the
     // replica's recorded schema evolved with the apply
-    def state(p: String) = ManifestCommit.readTableDV(spark, p)
+    def state(p: String) = GraftFileIndex.table(spark, p)
       .select("k", "v", "w").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.lake.{ChangeFeed, ManifestCommit}
+import graft.lake.{ChangeFeed, GraftFileIndex, ManifestCommit}
 import graft.ops.Layout
 
 /** The DSv2 feed stream: offsets are commit versions — a second run
@@ -253,12 +253,12 @@ class FeedSourceSpec extends SparkSpec {
     val got = StreamingOps.streamFeedBootstrap(spark, dir.toString)
       .select($"k", $"_change_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
-    val want = ManifestCommit.readTableDV(spark, dir.toString)
+    val want = GraftFileIndex.table(spark, dir.toString)
       .select($"k").collect()
       .map(r => (r.getLong(0), ChangeFeed.Insert)).toSet
     assert(want.size == 50 - 16 - 5)
     assert(got == want,
-      s"bootstrap diverged from readTableDV: got ${got.size}, " +
+      s"bootstrap diverged from the table read: got ${got.size}, " +
         s"want ${want.size}")
     // plan shape: every snapshot partition is an Insert; only the
     // sidecar-NAMED files carry sidecars, none carry positions
@@ -288,7 +288,7 @@ class FeedSourceSpec extends SparkSpec {
     ManifestCommit.deleteWhereDV(spark, dir, "k", 30L, 34L)
     val replica = StreamingOps.streamReplicate(spark, dir.toString,
       s"$root/dst", v0, "k", appId = "repl-spec")
-    val want = ManifestCommit.readTableDV(spark, dir.toString)
+    val want = GraftFileIndex.table(spark, dir.toString)
       .select("k", "g", "v").collect().map(_.toString).sorted.toSeq
     val got = replica.select("k", "g", "v")
       .collect().map(_.toString).sorted.toSeq
@@ -311,7 +311,7 @@ class FeedSourceSpec extends SparkSpec {
     ManifestCommit.deleteWhereDV(spark, dir, "k", 10L, 19L)
     val replica1 = StreamingOps.streamReplicateBootstrap(spark,
       dir.toString, s"$root/dst", "k", appId = "boot-repl")
-    val want1 = ManifestCommit.readTableDV(spark, dir.toString)
+    val want1 = GraftFileIndex.table(spark, dir.toString)
       .select("k", "g", "v").collect().map(_.toString).sorted.toSeq
     assert(replica1.select("k", "g", "v").collect()
       .map(_.toString).sorted.toSeq == want1)
@@ -330,7 +330,7 @@ class FeedSourceSpec extends SparkSpec {
     ManifestCommit.deleteWhereDV(spark, dir, "k", 40L, 44L)
     val replica2 = StreamingOps.streamReplicateBootstrap(spark,
       dir.toString, s"$root/dst", "k", appId = "boot-repl")
-    val want2 = ManifestCommit.readTableDV(spark, dir.toString)
+    val want2 = GraftFileIndex.table(spark, dir.toString)
       .select("k", "g", "v").collect().map(_.toString).sorted.toSeq
     assert(replica2.select("k", "g", "v").collect()
       .map(_.toString).sorted.toSeq == want2)
@@ -363,7 +363,7 @@ class FeedSourceSpec extends SparkSpec {
     // the maintained view == the full join recompute at the head (the
     // op itself already replayed the stream against a fresh checkpoint
     // — a watermark failure would double-apply and diverge here)
-    val want = ManifestCommit.readTableDV(spark, fact.toString)
+    val want = GraftFileIndex.table(spark, fact.toString)
       .join(dim, "g").select("k", "g", "v", "g_name")
       .collect().map(_.toString).sorted.toSeq
     assert(got.select("k", "g", "v", "g_name")

@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.lake.{Compaction, ManifestCommit}
+import graft.lake.{Compaction, GraftFileIndex, ManifestCommit}
 import graft.ops.Layout
 
 /** GENUINELY CONCURRENT committers racing one manifest partition — the
@@ -179,7 +179,7 @@ class LakeConcurrencySpec extends SparkSpec {
         100000 + i * 200 until 100000 + i * 200 + 200) ++
       (200000 until 200050))
       .map(_.toLong).sorted
-    val got = ManifestCommit.readTableDV(spark, dir.toString)
+    val got = GraftFileIndex.table(spark, dir.toString)
       .select("k", "g", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     if (got.map(_._1).toSeq != want) {
@@ -214,7 +214,7 @@ class LakeConcurrencySpec extends SparkSpec {
     // netted applies must land the same relation
     graft.lake.ChangeFeed.replicateTable(spark, dir.toString,
       replicaRoot, "k", appId = "conc-repl")
-    val gotReplica = ManifestCommit.readTableDV(spark, replicaRoot)
+    val gotReplica = GraftFileIndex.table(spark, replicaRoot)
       .select("k", "g", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(gotReplica.toSeq == got.toSeq,

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 
-import graft.lake.{Compaction, ManifestCommit}
+import graft.lake.{Compaction, GraftFileIndex, ManifestCommit}
 
 /** Object-store commit protocol: every guarantee is exercised against the
   * simulated no-atomic-rename filesystem ([[ObjStoreSimFileSystem]]) —
@@ -41,9 +41,29 @@ class ManifestCommitSpec extends SparkSpec {
   }
 
   private def rows(tableRoot: String): Seq[String] =
-    ManifestCommit.readTable(spark, tableRoot)
+    GraftFileIndex.table(spark, tableRoot)
       .select("id", "v", "year", "month", "day")
       .orderBy("day", "id").collect().map(_.toString).toSeq
+
+  /** Files the executed manifest scans of `df` opened: `numFiles` of
+    * every [[GraftFileIndex]]-backed scan, AQE stages unwrapped (a DV
+    * read's anti-join makes the plan adaptive). Sidecar scans are plain
+    * parquet relations and do not count. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec    => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec        => scans(q.plan)
+      case other                    => other.children.flatMap(scans)
+    }
+    df.collect()
+    val manifestScans = scans(df.queryExecution.executedPlan)
+      .filter(_.relation.location.isInstanceOf[GraftFileIndex])
+    assert(manifestScans.nonEmpty, "no manifest file scan in plan")
+    manifestScans.map(_.metrics("numFiles").value).sum
+  }
 
   test("manifest compaction: identical contents, fewer files, originals GC'd") {
     val (root, fs) = fragmentedTable("objsim://")
@@ -222,9 +242,9 @@ class ManifestCommitSpec extends SparkSpec {
       s"lost commit: ${head.files}")
   }
 
-  test("interop: listing-mode partitions read through readTable; adopt picks up plain appends") {
+  test("interop: listing-mode partitions read through GraftFileIndex.table; adopt picks up plain appends") {
     val (root, fs) = fragmentedTable("file://")
-    // no log anywhere yet: readTable == plain listing read
+    // no log anywhere yet: the manifest read == plain listing read
     val plain = spark.read.parquet(root)
       .select("id", "v", "year", "month", "day")
       .orderBy("day", "id").collect().map(_.toString).toSeq
@@ -238,7 +258,7 @@ class ManifestCommitSpec extends SparkSpec {
     val adopted = ManifestCommit.adoptNewFiles(fs, day1)
     assert(adopted.files.exists(n => !n.startsWith(ManifestCommit.CompactedPrefix)),
       "plain append must join the live set")
-    assert(ManifestCommit.readTable(spark, root).count() == plain.size + 5)
+    assert(GraftFileIndex.table(spark, root).count() == plain.size + 5)
   }
 
   test("manifest column stats: pruned read touches only intersecting files, stats survive commits") {
@@ -259,16 +279,14 @@ class ManifestCommitSpec extends SparkSpec {
     val stats = ManifestCommit.currentFileStats(fs, dir)
     assert(stats.size == 16 && stats.values.forall(_.exists(_.col == "x")))
     // pruned read: a narrow x range must touch few files...
-    val pruned = ManifestCommit.readTableWhere(spark, root,
-      Map("x" -> (0L, 99L)))
-    val prunedFiles = pruned.inputFiles.length
+    val t = GraftFileIndex.table(spark, root)
+    val pruned = t.filter($"x".between(0L, 99L))
+    val prunedFiles = scannedFiles(pruned)
     assert(prunedFiles <= 3, s"expected <= 3 files, scanned $prunedFiles")
     // ...and still return exactly the predicate's rows
-    assert(pruned.filter($"x" <= 99).count() ==
-      df.filter($"x" <= 99).count())
+    assert(pruned.count() == df.filter($"x" <= 99).count())
     // a range on the UNSORTED column prunes nothing (every file spans v)
-    assert(ManifestCommit.readTableWhere(spark, root,
-      Map("v" -> (0L, 1L))).inputFiles.length == 16)
+    assert(scannedFiles(t.filter($"v".between(0L, 1L))) == 16)
     // stats survive an append commit of a fresh file
     spark.range(5).select($"id".as("k"), lit(9999L).as("x"),
       lit(0L).as("v")).coalesce(1).write.mode("append").parquet(root)
@@ -277,8 +295,8 @@ class ManifestCommitSpec extends SparkSpec {
     assert(stats.forall { case (n, s) => after.get(n).contains(s) },
       "pre-existing stats must survive the append commit")
     // the fresh file has no stats -> conservatively read by any range
-    assert(ManifestCommit.readTableWhere(spark, root,
-      Map("x" -> (0L, 99L))).inputFiles.length <= 4)
+    assert(scannedFiles(GraftFileIndex.table(spark, root)
+      .filter($"x".between(0L, 99L))) <= 4)
   }
 
   test("targeted delete rewrites only stats-intersecting files; time travel sees pre-delete") {
@@ -303,13 +321,11 @@ class ManifestCommitSpec extends SparkSpec {
     val untouchedKept = pre.files.count(now.files.contains)
     assert(untouchedKept == pre.files.size - touched)
     // content: exactly the anti-range remains
-    val got = ManifestCommit.readTable(spark, root)
+    val got = GraftFileIndex.table(spark, root)
     assert(got.filter($"k".between(1000, 1999)).count() == 0L)
     assert(got.count() == 15000L)
     // rewritten files re-entered WITH stats (prunable again)
-    val pruned = ManifestCommit.readTableWhere(spark, root,
-      Map("k" -> (0L, 10L)))
-    assert(pruned.inputFiles.length <= 3)
+    assert(scannedFiles(got.filter($"k".between(0L, 10L))) <= 3)
     // time travel: the pre-delete version still serves all 16000 rows
     assert(ManifestCommit.readTableAt(spark, root, pre.version)
       .count() == 16000L)
@@ -319,7 +335,7 @@ class ManifestCommitSpec extends SparkSpec {
       ManifestCommit.readTableAt(spark, root, pre.version).count()
     }
     // but the current version is untouched by GC
-    assert(ManifestCommit.readTable(spark, root).count() == 15000L)
+    assert(GraftFileIndex.table(spark, root).count() == 15000L)
   }
 
   test("manifest blooms: equality skipping on an unclustered column") {
@@ -337,24 +353,25 @@ class ManifestCommitSpec extends SparkSpec {
     ManifestCommit.bootstrap(fs, dir)
     ManifestCommit.recordStats(spark, dir, Seq("k"))
     ManifestCommit.recordBlooms(spark, dir, "k")
-    // stats CANNOT prune a point probe on k...
-    assert(ManifestCommit.readTableWhere(spark, root,
-      Map("k" -> (777L, 777L))).inputFiles.length >= 14)
+    // stats CANNOT prune a point probe on k (a range predicate consults
+    // stats only)...
+    val t = GraftFileIndex.table(spark, root)
+    assert(scannedFiles(t.filter($"k".between(777L, 777L))) >= 14)
     // ...the bloom can: k=777 lives in exactly one file; a false
     // positive may add a couple more, never fewer
-    val eq = ManifestCommit.readTableEq(spark, root, "k", 777L)
-    assert(eq.inputFiles.length <= 3,
-      s"bloom should prune to ~1 file, got ${eq.inputFiles.length}")
-    assert(eq.filter($"k" === 777L).count() == 1L)
+    val eq = t.filter($"k" === 777L)
+    val eqFiles = scannedFiles(eq)
+    assert(eqFiles <= 3, s"bloom should prune to ~1 file, got $eqFiles")
+    assert(eq.count() == 1L)
     // an absent value answers empty, schema intact, possibly zero files
-    val none = ManifestCommit.readTableEq(spark, root, "k", 999999L)
-    assert(none.filter($"k" === 999999L).count() == 0L)
+    val none = t.filter($"k" === 999999L)
+    assert(none.count() == 0L)
     assert(none.columns.toSeq == Seq("k", "x"))
     // blooms survive an unrelated recommit, and recording a SECOND
     // column's stats merges per column — k's stats survive x's
     ManifestCommit.recordStats(spark, dir, Seq("x"))
-    assert(ManifestCommit.readTableEq(spark, root, "k", 777L)
-      .inputFiles.length <= 3)
+    assert(scannedFiles(GraftFileIndex.table(spark, root)
+      .filter($"k" === 777L)) <= 3)
     val merged = ManifestCommit.currentFileStats(fs, dir)
     assert(merged.values.forall(ss =>
       ss.exists(_.col == "k") && ss.exists(_.col == "x")),
@@ -449,7 +466,7 @@ class ManifestCommitSpec extends SparkSpec {
     val snap = ManifestCommit.stageAndPublish(spark, dir, good, noNulls,
       statsCols = Seq("k"))
     assert(snap.nonEmpty && snap.get.files.nonEmpty)
-    assert(ManifestCommit.readTable(spark, dir.toString).count() == 100L)
+    assert(GraftFileIndex.table(spark, dir.toString).count() == 100L)
     val stats = ManifestCommit.currentFileStats(fs, dir)
     assert(snap.get.files.forall(n =>
       stats.getOrElse(n, Nil).exists(_.col == "k")))
@@ -471,7 +488,7 @@ class ManifestCommitSpec extends SparkSpec {
     ManifestCommit.bootstrap(fs, dir)
     ManifestCommit.recordStats(spark, dir, Seq("k"))
     ManifestCommit.deleteRange(spark, dir, "k", 100L, 199L, Seq("k"))
-    val got = ManifestCommit.readTable(spark, root)
+    val got = GraftFileIndex.table(spark, root)
     assert(got.filter($"k".between(100, 199)).count() == 0L,
       "in-range rows must be deleted")
     assert(got.filter($"k".isNull).count() == 100L,
@@ -559,7 +576,7 @@ class ManifestCommitSpec extends SparkSpec {
     Compaction.compactTableManifest(spark, root, gcGraceMs = 0L)
     assert(!fs.exists(stale),
       "crashed WAP staging dir on an unpartitioned table must be swept")
-    assert(ManifestCommit.readTable(spark, root).count() == 10L)
+    assert(GraftFileIndex.table(spark, root).count() == 10L)
   }
 
   test("clustered compaction keeps the layout prunable") {
@@ -586,13 +603,14 @@ class ManifestCommitSpec extends SparkSpec {
       s"expected several sorted files, got ${after.files.size}")
     // the range-partitioned rewrite re-earned its stats: a narrow key
     // range touches a strict subset of files
-    val pruned = ManifestCommit.readTableWhere(spark, root,
-      Map("k" -> (0L, 999L)))
-    assert(pruned.inputFiles.length < after.files.size,
-      s"${pruned.inputFiles.length} of ${after.files.size} files")
-    assert(pruned.filter($"k" <= 999).count() == 1000L)
+    val t = GraftFileIndex.table(spark, root)
+    val pruned = t.filter($"k".between(0L, 999L))
+    val prunedFiles = scannedFiles(pruned)
+    assert(prunedFiles < after.files.size,
+      s"$prunedFiles of ${after.files.size} files")
+    assert(pruned.count() == 1000L)
     // content identical to the pre-compaction table
-    assert(ManifestCommit.readTable(spark, root)
+    assert(t
       .select("k", "v").orderBy("k").collect().toSeq ==
       df.orderBy("k").collect().toSeq)
   }
@@ -618,14 +636,11 @@ class ManifestCommitSpec extends SparkSpec {
     val snap1 = ManifestCommit.currentSnapshot(fs, dir).get
     assert(snap1.files == pre.files, "no data file may move")
     assert(ManifestCommit.currentDvs(fs, dir).nonEmpty)
-    // DV read sees the post-delete table; the plain read REFUSES (a
-    // bare scan would resurrect the deleted rows — round-11 guard)
-    val dvRead = ManifestCommit.readTableDV(spark, root)
+    // the read subtracts the sidecars: the post-delete table (a bare
+    // scan would resurrect the deleted rows — round-11 guard)
+    val dvRead = GraftFileIndex.table(spark, root)
     assert(dvRead.count() == 15000L)
     assert(dvRead.filter($"k".between(1000, 1999)).count() == 0L)
-    val eRaw = intercept[IllegalArgumentException](
-      ManifestCommit.readTable(spark, root))
-    assert(eRaw.getMessage.contains("readTableDV"), eRaw.getMessage)
     // time travel to the MERGE-ON-READ version is its LOGICAL state:
     // the version's sidecars are subtracted, never resurrected
     val atV = ManifestCommit.currentSnapshot(fs, dir).get.version
@@ -643,7 +658,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(nDel2 == 500L)
     val dvs2 = ManifestCommit.currentDvs(fs, dir)
     assert(dvs1.toSet.subsetOf(dvs2.toSet) && dvs2.size > dvs1.size)
-    val dvRead2 = ManifestCommit.readTableDV(spark, root)
+    val dvRead2 = GraftFileIndex.table(spark, root)
     assert(dvRead2.count() == 14500L)
     assert(dvRead2.filter($"k".between(3000, 3499)).count() == 0L)
     // the change feed replays BOTH dv deletes exactly (sidecar semi-join)
@@ -657,19 +672,18 @@ class ManifestCommitSpec extends SparkSpec {
     val (rewritten, dropped) = ManifestCommit.applyDvs(spark, dir, Seq("k"))
     assert(dropped == dvs2.size && rewritten >= 1)
     assert(ManifestCommit.currentDvs(fs, dir).isEmpty)
-    val plain = ManifestCommit.readTable(spark, root)
+    val plain = GraftFileIndex.table(spark, root)
     assert(plain.count() == 14500L)
     assert(plain.filter($"k".between(1000, 1999) ||
       $"k".between(3000, 3499)).count() == 0L)
     // rewritten files re-earned stats; untouched files still prune
-    assert(ManifestCommit.readTableWhere(spark, root,
-      Map("k" -> (0L, 10L))).inputFiles.length <= 3)
+    assert(scannedFiles(plain.filter($"k".between(0L, 10L))) <= 3)
     // dropped sidecars are tombstoned: gc collects them with grace 0
     ManifestCommit.gc(fs, dir, graceMs = 0L)
     val left = fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(ManifestCommit.DvPrefix))
     assert(left.isEmpty, s"sidecars must be collected, found $left")
-    assert(ManifestCommit.readTable(spark, root).count() == 14500L)
+    assert(GraftFileIndex.table(spark, root).count() == 14500L)
   }
 
   test("txn watermarks: replayed batches no-op, watermark survives " +
@@ -698,7 +712,7 @@ class ManifestCommitSpec extends SparkSpec {
     val s2 = ManifestCommit.appendFiles(fs, dir, Seq(dup),
       txn = Some(("app", 0L)))
     assert(s2.files == s1.files, "replayed batch must not commit")
-    assert(ManifestCommit.readTable(spark, dir.toString).count() == 10L)
+    assert(GraftFileIndex.table(spark, dir.toString).count() == 10L)
     // the next batch commits; an unrelated meta commit keeps the mark
     ManifestCommit.appendFiles(fs, dir,
       Seq(land("compact-txn-a-1-x-part0.parquet", 10L, 5L)),
@@ -708,7 +722,7 @@ class ManifestCommitSpec extends SparkSpec {
     val s3 = ManifestCommit.appendFiles(fs, dir,
       Seq(land("compact-txn-a-0-z-part0.parquet", 0L, 10L)),
       txn = Some(("app", 0L)))
-    assert(ManifestCommit.readTable(spark, dir.toString).count() == 15L)
+    assert(GraftFileIndex.table(spark, dir.toString).count() == 15L)
     assert(s3.files.size == 2)
     // a second app's watermark is independent
     assert(ManifestCommit.lastTxnVersion(fs, dir, "other").isEmpty)
@@ -717,21 +731,13 @@ class ManifestCommitSpec extends SparkSpec {
     val doomed = ManifestCommit.gc(fs, dir, graceMs = 0L)
     assert(doomed.toSet ==
       Set("compact-txn-a-0-y-part0.parquet", "compact-txn-a-0-z-part0.parquet"))
-    assert(ManifestCommit.readTable(spark, dir.toString).count() == 15L)
+    assert(GraftFileIndex.table(spark, dir.toString).count() == 15L)
   }
 
   test("FileIndex: ordinary filters prune files via manifest stats, " +
       "blooms, and partition dirs") {
     import graft.ops.Layout
-    import graft.lake.GraftFileIndex
-    import org.apache.spark.sql.execution.FileSourceScanExec
     hc
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: FileSourceScanExec => f.metrics("numFiles").value
-      }.getOrElse(sys.error("no file scan in plan"))
-    }
     // (a) range pruning: k-ordered 16-file layout, stats on k — a plain
     // .filter range must reach listFiles and select ~1/16 of the files
     val local = Files.createTempDirectory("graft-fileindex").toString
@@ -773,12 +779,12 @@ class ManifestCommitSpec extends SparkSpec {
     assert(day2.count() == 200L)
     assert(scannedFiles(day2) == 1L,
       "day=2 holds one file; day=1's three must prune away")
-    // (d) a table with ACTIVE deletion vectors refuses the bare scan
+    // (d) a table with ACTIVE deletion vectors is read minus its
+    // sidecars, never as a bare scan
     ManifestCommit.deleteWhereDV(spark, dir, "k", 0L, 9L)
-    val e = intercept[IllegalArgumentException] {
-      GraftFileIndex.table(spark, root)
-    }
-    assert(e.getMessage.contains("deletion vectors"))
+    val dvT = GraftFileIndex.table(spark, root)
+    assert(dvT.count() == 15990L)
+    assert(dvT.filter($"k" < 10).count() == 0L)
   }
 
   test("deletion vectors: NULL keys survive; adoption never eats a sidecar") {
@@ -791,7 +797,7 @@ class ManifestCommitSpec extends SparkSpec {
     ManifestCommit.bootstrap(fs, dir)
     val (_, nDel) = ManifestCommit.deleteWhereDV(spark, dir, "k", 0L, 100L)
     assert(nDel == 2L, "1 and 50 die; the NULL key is outside every range")
-    val got = ManifestCommit.readTableDV(spark, dir.toString)
+    val got = GraftFileIndex.table(spark, dir.toString)
       .select("v").collect().map(_.getString(0)).toSet
     assert(got == Set("b", "d"))
     // a sidecar must never be adopted as data by the listing reconciler
@@ -800,7 +806,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(adopted.files.toSet == snapBefore.files.toSet)
     // an idle dv-free partition pays ZERO dv overhead on the DV read
     // path (covered above by snap equality; here just re-read sanity)
-    assert(ManifestCommit.readTableDV(spark, dir.toString).count() == 2L)
+    assert(GraftFileIndex.table(spark, dir.toString).count() == 2L)
   }
 
   test("compaction subtracts deletion vectors — deleted rows never resurrect") {
@@ -824,13 +830,10 @@ class ManifestCommitSpec extends SparkSpec {
     assert(reports.nonEmpty, "16 files over maxFiles=4 must compact")
     assert(ManifestCommit.currentDvs(fs, dir).isEmpty,
       "absorbed sidecars must be dropped at commit")
-    // BOTH read paths see the post-delete rows — no resurrection
-    val plain = ManifestCommit.readTable(spark, root)
+    // the sidecar-free read sees the post-delete rows — no resurrection
+    val plain = GraftFileIndex.table(spark, root)
     assert(plain.count() == 15000L)
     assert(plain.filter($"k".between(1000, 1999)).count() == 0L)
-    val dvRead = ManifestCommit.readTableDV(spark, root)
-    assert(dvRead.count() == 15000L)
-    assert(dvRead.filter($"k".between(1000, 1999)).count() == 0L)
   }
 
   test("deleteRange refuses DV-named files; disjoint sidecars stay valid") {
@@ -856,7 +859,7 @@ class ManifestCommitSpec extends SparkSpec {
     val (touched, _) =
       ManifestCommit.deleteRange(spark, dir, "k", 15000L, 15099L, Seq("k"))
     assert(touched >= 1)
-    val dvRead = ManifestCommit.readTableDV(spark, root)
+    val dvRead = GraftFileIndex.table(spark, root)
     assert(dvRead.count() == 16000L - 1000L - 100L)
     assert(dvRead.filter($"k".between(1000, 1999)).count() == 0L)
     assert(dvRead.filter($"k".between(15000, 15099)).count() == 0L)
@@ -919,7 +922,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(touched > 0 && nDel == 20L, s"($touched, $nDel)")
     // post-merge table: replaced rows carry the update values, new keys
     // exist, everything else is untouched
-    val t = ManifestCommit.readTableDV(spark, root)
+    val t = GraftFileIndex.table(spark, root)
     assert(t.count() == 1010L)
     assert(t.filter($"k".between(100, 119) && $"v" === 100L).count() == 20L)
     assert(t.filter($"k" >= 2000 && $"v" === 200L).count() == 10L)
@@ -935,7 +938,7 @@ class ManifestCommitSpec extends SparkSpec {
     // copy-on-write conversion retires the merge; plain read agrees
     ManifestCommit.applyDvs(spark, dir, Seq("k"))
     assert(ManifestCommit.currentDvs(fs, dir).isEmpty)
-    assert(ManifestCommit.readTable(spark, root).count() == 1010L)
+    assert(GraftFileIndex.table(spark, root).count() == 1010L)
     // a mismatched update batch is refused before anything lands
     val e = intercept[IllegalArgumentException] {
       ManifestCommit.upsertDV(spark, dir, "k",
@@ -963,7 +966,7 @@ class ManifestCommitSpec extends SparkSpec {
       inserts = b0, deleteKeys = spark.range(90, 95).select($"id".as("k")),
       txn = Some(("app", 0L)))
     assert(nDel0 == 10L, "5 replaced + 5 deleted positions")
-    val t1 = ManifestCommit.readTableDV(spark, root)
+    val t1 = GraftFileIndex.table(spark, root)
     assert(t1.count() == 95L)
     assert(t1.filter($"k".between(10, 14) && $"v" === 99L).count() == 5L)
     assert(t1.filter($"k".between(90, 94)).count() == 0L)
@@ -974,13 +977,13 @@ class ManifestCommitSpec extends SparkSpec {
       inserts = spark.range(0, 50).select($"id".as("k"), lit(-1L).as("v")),
       deleteKeys = emptyKeys, txn = Some(("app", 0L)))
     assert(t == 0 && n == 0L)
-    assert(ManifestCommit.readTableDV(spark, root).filter($"v" === -1L)
+    assert(GraftFileIndex.table(spark, root).filter($"v" === -1L)
       .count() == 0L, "replayed batch must not land")
     // the next watermark applies normally
     ManifestCommit.applyChangesDV(spark, dir, "k",
       inserts = spark.range(200, 203).select($"id".as("k"), lit(7L).as("v")),
       deleteKeys = emptyKeys, txn = Some(("app", 1L)))
-    assert(ManifestCommit.readTableDV(spark, root).count() == 98L)
+    assert(GraftFileIndex.table(spark, root).count() == 98L)
   }
 
   test("applyChangesDV exact key prune: randomized key sets never lose " +
@@ -1007,18 +1010,16 @@ class ManifestCommitSpec extends SparkSpec {
       val (_, nDel) = ManifestCommit.upsertDV(spark, dir, "k", batch)
       assert(nDel == replaceKeys.size.toLong,
         s"every matched row must be positioned: $nDel vs ${replaceKeys.size}")
-      val t = ManifestCommit.readTableDV(spark, dir.toString)
+      val t = GraftFileIndex.table(spark, dir.toString)
       assert(t.count() == 2000L + insertKeys.size)
       assert(t.filter($"v" === 777L).count() ==
         (replaceKeys.size + insertKeys.size).toLong)
     }
   }
 
-  test("FileIndex tableDV: manifest-stat pruning and sidecar " +
+  test("FileIndex table: manifest-stat pruning and sidecar " +
       "subtraction compose in one plan") {
     import graft.ops.Layout
-    import graft.lake.GraftFileIndex
-    import org.apache.spark.sql.execution.FileSourceScanExec
     hc
     val local = Files.createTempDirectory("graft-fileindex-dv").toString
     val root = s"file://$local/tbl"
@@ -1029,41 +1030,61 @@ class ManifestCommitSpec extends SparkSpec {
     ManifestCommit.bootstrap(fs, dir)
     ManifestCommit.recordStats(spark, dir, Seq("k"))
     ManifestCommit.deleteWhereDV(spark, dir, "k", 1000L, 1999L)
-    val t = GraftFileIndex.tableDV(spark, root)
+    val t = GraftFileIndex.table(spark, root)
     // subtraction: both the full read and a window crossing the deleted
     // range see the post-delete rows
     assert(t.count() == 15000L)
     val ranged = t.filter($"k".between(500, 2499))
     assert(ranged.count() == 1000L, "2000-row window minus deleted 1000")
-    // pruning: the DATA-side scan (the larger numFiles — the sidecar
-    // scan reads 1-2 tiny files) must select ~3 of the 16 files from
-    // the manifest stats, with the anti-join riding on top (the join
-    // makes the plan adaptive, so unwrap AQE stages)
-    ranged.collect()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec    => Seq(f)
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec        => scans(q.plan)
-      case other                    => other.children.flatMap(scans)
-    }
-    val numFiles = scans(ranged.queryExecution.executedPlan)
-      .map(_.metrics("numFiles").value)
-    assert(numFiles.nonEmpty)
-    assert(numFiles.max <= 4,
+    // pruning: the DATA-side scan must select ~3 of the 16 files from
+    // the manifest stats, with the anti-join riding on top
+    val numFiles = scannedFiles(ranged)
+    assert(numFiles <= 4,
       s"stats must prune the data scan under the anti-join: $numFiles")
     // a DV-free table returns the PLAIN scan (no join in the plan)
     ManifestCommit.applyDvs(spark, dir, Seq("k"))
-    val clean = GraftFileIndex.tableDV(spark, root)
+    assert(ManifestCommit.currentDvs(fs, dir).isEmpty)
+    val clean = GraftFileIndex.table(spark, root)
     assert(clean.count() == 15000L)
     assert(!clean.queryExecution.executedPlan.toString.contains("Join"),
       "sidecar-free table must not pay an anti-join")
   }
 
+  test("FileIndex table: a sidecar in one Hive partition never deletes " +
+      "a same-named file's rows in another") {
+    hc
+    val local = Files.createTempDirectory("graft-fileindex-collide").toString
+    val root = s"file://$local/tbl"
+    val fs = new Path(root).getFileSystem(hc)
+    // one data file per leaf, BOTH named data.parquet: the same (file
+    // name, row index) pairs exist in day=1 and day=2, so only the
+    // partition column tells a day=1 position from a day=2 one
+    Seq(1, 2).foreach { day =>
+      val staged = s"file://$local/staged-$day"
+      spark.range(100).select(($"id" + day * 1000L).as("k"), $"id".as("v"))
+        .coalesce(1).write.parquet(staged)
+      val part = fs.listStatus(new Path(staged)).map(_.getPath)
+        .find(_.getName.endsWith(".parquet")).get
+      val leaf = new Path(s"$root/day=$day")
+      fs.mkdirs(leaf)
+      assert(fs.rename(part, new Path(leaf, "data.parquet")))
+      ManifestCommit.bootstrap(fs, leaf)
+    }
+    val (_, nDel) = ManifestCommit.deleteWhereDV(spark,
+      new Path(s"$root/day=1"), "k", 1000L, 1009L)
+    assert(nDel == 10L)
+    assert(ManifestCommit.currentDvs(fs, new Path(s"$root/day=2")).isEmpty)
+    val t = GraftFileIndex.table(spark, root)
+    assert(t.filter($"day" === 1).count() == 90L)
+    assert(t.filter($"day" === 1 && $"v" < 10).count() == 0L,
+      "day=1's deleted positions must be gone")
+    assert(t.filter($"day" === 2).count() == 100L,
+      "day=2's same-named file must keep every row")
+    assert(t.count() == 190L)
+  }
+
   test("FileIndex: data schema is the MERGED footer schema on an " +
       "evolved table") {
-    import graft.lake.GraftFileIndex
     hc
     val local = Files.createTempDirectory("graft-fileindex-schema").toString
     val dir = new Path(s"file://$local/tbl")
@@ -1082,7 +1103,6 @@ class ManifestCommitSpec extends SparkSpec {
 
   test("recorded schema: table open runs ZERO jobs; alterSchema reads " +
       "across the evolution boundary; non-additive evolution refuses") {
-    import graft.lake.GraftFileIndex
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val local = Files.createTempDirectory("graft-schema-rec").toString
     val dir = new Path(s"$local/tbl")
@@ -1142,7 +1162,6 @@ class ManifestCommitSpec extends SparkSpec {
   test("table-level schema record: a partially-recorded table refuses " +
       "loudly; recordSchemaTable repairs; alterSchemaTable evolves every " +
       "leaf and the multi-leaf open runs ZERO jobs") {
-    import graft.lake.GraftFileIndex
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val root = Files.createTempDirectory("graft-schema-table").toString +
       "/tbl"
@@ -1210,7 +1229,7 @@ class ManifestCommitSpec extends SparkSpec {
     val (_, n2) = ManifestCommit.deleteWhereDV(spark, dir, "k", 200L, 399L)
     assert(n2 == 100L,
       s"overlapping delete must count only newly-dead rows, got $n2")
-    assert(ManifestCommit.readTableDV(spark, dir.toString).count() == 700L)
+    assert(GraftFileIndex.table(spark, dir.toString).count() == 700L)
     // the feed replays each deleted row EXACTLY once across the two
     // commits (a doubled delete would corrupt maintainAdditive et al.)
     val head = ManifestCommit.currentSnapshot(fs, dir).get.version
@@ -1245,7 +1264,7 @@ class ManifestCommitSpec extends SparkSpec {
       deleteKeys = Seq(1L).toDF("k"), statsCols = Seq("k"))
     assert(ManifestCommit.currentSchema(fs, dir)
       .map(_.fieldNames.toSeq).contains(Seq("k", "v", "w")))
-    val got = ManifestCommit.readTableDV(spark, dir.toString)
+    val got = GraftFileIndex.table(spark, dir.toString)
       .select("k", "v", "w").orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).toSeq

@@ -316,6 +316,22 @@ class OpsSpec extends SparkSpec {
       s"salting must spread the hot key: max $spread vs funneled $funneled")
   }
 
+  test("multimodal: decoding never flips ImageIO's JVM-global cache switch") {
+    import spark.implicits._
+    val img = new java.awt.image.BufferedImage(2, 2,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val out = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", out)
+    val media = Seq(Multimodal.MediaRow(1L, "img/png", out.toByteArray))
+      .toDS()
+    // the JDK default is a disk cache; a task that turns it off changes
+    // stream caching for every ImageIO user sharing the JVM
+    assert(javax.imageio.ImageIO.getUseCache)
+    assert(Multimodal.extractFeatures(media).collect().head.width == 2)
+    assert(javax.imageio.ImageIO.getUseCache,
+      "extractFeatures flipped ImageIO.setUseCache")
+  }
+
   test("multimodal: RGB rasters reduce to BT.601 integer luminance, " +
       "not band-0 (red) statistics") {
     import spark.implicits._

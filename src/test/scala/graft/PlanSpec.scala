@@ -553,7 +553,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     // q241 carries NO explicit ranges — the pushed box conjuncts alone
     // must reach GraftFileIndex.listFiles and skip non-intersecting
-    // files, exactly as q164's hand-fed readTableWhere does
+    // files from the manifest's recorded stats
     val df = SparkEntry.queries("q241_fileindex_scan")(spark, sf)
     df.collect()
     // the scan hides inside AQE's materialized query stages — unwrap

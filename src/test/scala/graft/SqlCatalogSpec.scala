@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.lake.ManifestCommit
+import graft.lake.{GraftFileIndex, ManifestCommit}
 
 /** The SQL-native lake surface: CREATE/INSERT/SELECT/ALTER through a
   * plain `spark.sql` session flow through the manifest commit protocol
@@ -40,7 +40,7 @@ class SqlCatalogSpec extends SparkSpec {
     // SQL read == library read (the manifest is the one source of truth)
     val viaSql = ss.sql("SELECT k, v FROM g.db.t").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val viaLib = ManifestCommit.readTable(ss, dir.toString)
+    val viaLib = GraftFileIndex.table(ss, dir.toString)
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[Double]("v"))).toSet
     assert(viaSql == viaLib && viaSql.size == 200)
     // each insert was ONE commit (history: bootstrap + schema + 2 appends)
@@ -123,7 +123,7 @@ class SqlCatalogSpec extends SparkSpec {
       .map(_.getLong(0)).toSet
     assert(got == ((0L to 9L) ++ (20L to 39L)).toSet, s"got=$got")
     // ... and equals the library merge-on-read read bit for bit
-    assert(got == ManifestCommit.readTableDV(ss, dir.toString)
+    assert(got == GraftFileIndex.table(ss, dir.toString)
       .collect().map(_.getAs[Long]("k")).toSet)
     // a second SQL delete composes with the first's sidecar
     ss.sql("DELETE FROM g.t3 WHERE k = 25")
@@ -304,7 +304,7 @@ class SqlCatalogSpec extends SparkSpec {
       s"got $scanParts")
     // recorded blooms close the gap stats leave: a point probe for a
     // value inside a file's [min, max] but absent from the data prunes
-    // to ZERO partitions (readTableEq's pruning, behind plain SQL)
+    // to ZERO partitions (GraftFileIndex's bloom pruning, behind SQL)
     graft.ops.Layout.writeLinear(
       ss.range(100).select(($"id" * 10).as("k"), ($"id" % 7).as("g")),
       col("k"), s"$wh/bloomed", 2)

@@ -247,7 +247,7 @@ class StreamingSpec extends SparkSpec {
     assert(versions.exists(_ > v1),
       s"run 2 must persist state past v$v1, saw $versions")
     val want = Dedup.bandIndexRaw(
-        ManifestCommit.readTable(spark, tbl.toString))
+        graft.lake.GraftFileIndex.table(spark, tbl.toString))
       .orderBy("band", "key").collect().map(_.toSeq).toSeq
     assert(got == want, "maintained-across-restarts != rebuild")
     // retention: run 2's new state pushed the cold v0 state past the
@@ -292,7 +292,7 @@ class StreamingSpec extends SparkSpec {
       "one netted apply must equal the commit-by-commit replay")
     // and both equal the from-scratch rebuild at the head
     val want = graft.ops.Dedup.bandIndexRaw(
-        ManifestCommit.readTableDV(spark, tbl.toString))
+        graft.lake.GraftFileIndex.table(spark, tbl.toString))
       .orderBy("band", "key").collect().map(_.toSeq).toSeq
     assert(netted == want, "netted apply != head rebuild")
     graft.ops.TextKit.releaseCaches()
@@ -339,7 +339,7 @@ class StreamingSpec extends SparkSpec {
       ManifestCommit.readTableAt(spark, tbl.toString, v0))
     val ref = Similarity.appendIvfPq(
       ix0.copy(e = ix0.e.limit(0), encoded = ix0.encoded.limit(0)),
-      ManifestCommit.readTable(spark, tbl.toString)
+      graft.lake.GraftFileIndex.table(spark, tbl.toString)
         .select("vec_id", "embedding"))
     def encSet(g: Similarity.IvfPqIndex) =
       g.encoded.collect().map(r => (r.getAs[Long]("vec_id"),

@@ -277,7 +277,7 @@ class TaPipelineSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
     assert(after == before, "compaction must not change table contents")
     // manifest-resolved readers agree with the listing after GC
-    val viaManifest = graft.lake.ManifestCommit.readTable(spark, tablePath)
+    val viaManifest = graft.lake.GraftFileIndex.table(spark, tablePath)
       .orderBy("accountid", "`instance id`", "day")
       .collect().map(_.toString).toSeq
     assert(viaManifest == before)
@@ -288,7 +288,7 @@ class TaPipelineSpec extends SparkSpec {
     Compaction.compactLake(spark, dir, maxFiles = 1, gcGraceMs = 0L)
     val expected = before.size + 3 // one more rawDf ingest = 3 detail rows
     assert(spark.read.parquet(tablePath).count() == expected)
-    assert(graft.lake.ManifestCommit.readTable(spark, tablePath).count()
+    assert(graft.lake.GraftFileIndex.table(spark, tablePath).count()
       == expected)
   }
 
