@@ -1,7 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Connected components over a near-duplicate pair table — the clustering
   * step that turns pairwise dedup output (minhashLshPairs,
@@ -9,38 +13,41 @@ import org.apache.spark.sql.functions._
   * pipeline can keep one canonical document per cluster instead of
   * reasoning about overlapping pairs.
   *
-  * Algorithm: min-label propagation with pointer jumping. Every node
-  * starts labeled with its own id; each round every node (1) takes the
-  * minimum label among itself and its neighbors, then (2) replaces its
-  * label with its label's label (pointer jumping — the shortcut step of
-  * Shiloach-Vishkin-style CC). Step 1 alone needs diameter rounds (a
-  * path-shaped duplicate chain — exactly what chained near-dups produce —
-  * makes that linear); step 2 halves the remaining pointer depth each
-  * round, so convergence is O(log diameter) rounds. Converged labels are
-  * the minimum id of each component — a deterministic canonical cluster
-  * id.
+  * Both variants ([[connectedComponents]], min-label propagation, and
+  * [[connectedComponentsStars]], large-star/small-star) run in two
+  * phases; the converged labels are the minimum id of each component — a
+  * deterministic canonical cluster id.
   *
-  * Scale design (100 TB): each round is two shuffle joins (edges × labels
-  * and labels × labels, all keyed by id) plus one min-aggregation — no
-  * driver-side graph, no per-component state. The convergence probe
-  * exploits monotonicity: labels only ever DECREASE (each step takes a
-  * min over a set containing the current label), so the rounds converged
-  * exactly when sum(label) stops falling — ONE map-side-combinable
-  * aggregate per round (decimal(38,0) sums stay exact at any id range),
-  * replacing the earlier next⋈prev join probe. Each round's labels are
-  * lineage-TRUNCATED (a cached LogicalRDD over the round's InternalRow
-  * RDD): the round's plan references the previous labels FOUR times
-  * (twice in the neighbor-min union, twice in the pointer-jump
-  * self-join), so without truncation the logical plan grows 4^round and
-  * Catalyst re-analysis — not execution — becomes the cost (observed:
-  * 45 s for a 477-node graph, 3 s truncated). Truncation goes through
-  * the CacheManager (not localCheckpoint, whose blocks Dataset.unpersist
-  * cannot release), so each round frees the previous round's storage and
-  * peak memory stays at two label generations + the edge set. The
-  * alternating large-star/small-star algorithm (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond") additionally shrinks
-  * the EDGE set as it converges; worth it when edges outnumber nodes by
-  * enough that the per-round edge join dominates.
+  * Local phase ([[contracted]]): one pass over the pair relation's own
+  * partitions, no shuffle. Each task runs a union-find over the edges it
+  * holds and emits one (id, local component min) star edge per id — the
+  * idea of Kiveris et al., "Connected Components in MapReduce and
+  * Beyond", of contracting what a machine holds before any global round.
+  * The star forest keeps every connection the partition had and never
+  * has more edges than the partition read (V - C <= E). A component whose
+  * edges all sit in one partition leaves this phase already a star; the
+  * global phase only has to merge stars that share an id ACROSS
+  * partitions. Task memory is primitive arrays over the partition's
+  * distinct ids (an open-addressing id table plus id, parent and flag
+  * arrays, 21-42 bytes an id), never per edge and never boxed.
+  *
+  * Global phase: the variant's own rounds over the contracted edges,
+  * unchanged in logic, convergence probe and `maxIters`. They still run
+  * at least one confirming round, and more when a component spans
+  * partitions (pairs hash-partitioned by a shuffle spread almost every
+  * component that way); their count then follows the diameter of the
+  * graph of local stars, not of the input.
+  *
+  * Scale design (100 TB): each global round is keyed shuffle joins and
+  * aggregations — no driver-side graph, no per-component state. Each
+  * round's state is lineage-TRUNCATED (a cached LogicalRDD over the
+  * round's InternalRow RDD): a round's plan references the previous
+  * state several times, so without truncation the logical plan grows
+  * exponentially in the round number and Catalyst re-analysis — not
+  * execution — becomes the cost (observed: 45 s for a 477-node graph,
+  * 3 s truncated). Truncation goes through the CacheManager (not
+  * localCheckpoint, whose blocks Dataset.unpersist cannot release), so
+  * each round frees the previous round's storage.
   */
 object Components {
 
@@ -53,18 +60,68 @@ object Components {
     * the cache; a cache miss (executor loss) recomputes through the
     * wrapped RDD's own lineage. */
   private[ops] def truncated(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.GraftBridge
-      .internalCreateDataFrame(df.sparkSession, df.queryExecution.toRdd,
-        df.schema)
+    GraftBridge.internalCreateDataFrame(df.sparkSession,
+        df.queryExecution.toRdd, df.schema)
       .persist()
+
+  /** The local phase shared by both variants: `pairs`' (aCol, bCol)
+    * edges contracted partition by partition into star forests, as a
+    * cached (src, dst) relation with the input's id type. Lazy, like
+    * [[truncated]]; the caller unpersists it once the relations built on
+    * it are materialized.
+    *
+    * Ids are bigint or int; an int/bigint mix widens to bigint, as the
+    * undirected unions of the global phase always did. A pair with a
+    * NULL endpoint connects nothing: it is kept as (id, NULL) once per id
+    * and partition (and (NULL, NULL) once), so the NULL "node" gets the
+    * label the global rounds alone would give it. */
+  private def contracted(pairs: DataFrame, aCol: String,
+      bCol: String): DataFrame = {
+    val e0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val Seq(ta, tb) = Seq(aCol -> "src", bCol -> "dst").map { case (name, c) =>
+      val t = e0.schema(c).dataType
+      require(t == LongType || t == IntegerType,
+        s"connected components: id column $name must be bigint or int, " +
+          s"got ${t.sql}")
+      t
+    }
+    val e = if (ta == tb) e0
+      else e0.select(col("src").cast(LongType).as("src"),
+        col("dst").cast(LongType).as("dst"))
+    val isLong = ta == LongType || tb == LongType
+    GraftBridge.internalCreateDataFrame(e.sparkSession,
+        e.queryExecution.toRdd.mapPartitions(rows =>
+          new PartitionStars(isLong).contract(rows)),
+        e.schema)
+      .persist()
+  }
 
   /** (doc_id, component_id) for every id appearing in `pairs`, where
     * component_id is the minimum doc id of the connected component.
     * Deterministic; only ids present in at least one pair are returned
-    * (isolated docs are their own trivial component by definition). */
+    * (isolated docs are their own trivial component by definition).
+    * Ids are bigint or int (see [[contracted]]); the output columns keep
+    * the id type.
+    *
+    * Local phase: [[contracted]]. Global phase: min-label propagation
+    * with pointer jumping over the contracted edges. Every node starts
+    * labeled min(itself, its neighbors); each round every node (1) takes
+    * the minimum label among itself and its neighbors, then (2) replaces
+    * its label with its label's label (pointer jumping — the shortcut
+    * step of Shiloach-Vishkin-style CC). Step 1 alone needs diameter
+    * rounds; step 2 halves the remaining pointer depth each round, so
+    * convergence is O(log diameter) rounds — a component that the local
+    * phase already made a star needs none beyond the confirming round.
+    * Each round is two shuffle joins (edges × labels and labels × labels,
+    * keyed by id) plus one min-aggregation. The convergence probe
+    * exploits monotonicity: labels only ever DECREASE, so the rounds
+    * converged exactly when sum(label) stops falling — ONE
+    * map-side-combinable aggregate per round (decimal(38,0) sums stay
+    * exact at any id range). Peak memory is two label generations plus
+    * the edge set. */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 50): DataFrame = {
-    val e0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val e0 = contracted(pairs, aCol, bCol)
     // undirected: propagate labels both ways. Truncated + cached: edges
     // and labels are re-referenced every round, and constant-size plans
     // keep Catalyst re-analysis out of the per-round cost (see scaladoc).
@@ -87,6 +144,7 @@ object Components {
         .head.getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
     var prevSum = labelSum(labels) // also materializes the initial caches
+    e0.unpersist(blocking = false)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
@@ -116,8 +174,6 @@ object Components {
       labels.unpersist(blocking = false)
       labels = next
       iter += 1
-      if (sys.props.contains("graft.cc.debug"))
-        println(s"CC round $iter sum=$curSum")
     }
     edges.unpersist(blocking = false)
     // with pointer jumping, maxIters=50 covers diameters up to ~2^50 —
@@ -143,29 +199,37 @@ object Components {
     * pair table): min-label propagation pays the FULL edge relation in
     * every round's join, while these star operations rewrite the edge
     * set itself, so each round's shuffle tracks the current — rapidly
-    * contracting — edge count.
+    * contracting — edge count. Same output contract as
+    * [[connectedComponents]].
     *
-    * One round = large-star then small-star, each a groupBy-min plus a
-    * projection over the symmetric edge set:
+    * Local phase: [[contracted]] — the same star contraction the global
+    * rounds perform, done inside each partition with no shuffle; a
+    * partition that holds whole components hands the rounds stars that
+    * only need confirming. The node universe is read from the same
+    * cached contracted relation, so the pair lineage runs once.
+    *
+    * Global phase: one round = large-star then small-star, each a
+    * groupBy-min plus a projection over the symmetric edge set:
     *  - large-star: every node u connects each LARGER neighbor to
     *    min(N(u) ∪ u) — long chains shortcut toward small ids;
     *  - small-star: every node u connects its smaller-or-equal
     *    neighborhood (and itself) to that minimum — stars flatten.
     * Both preserve connectivity; alternation converges to a forest of
     * stars whose centers are the component minima. Convergence probe:
-    * the (distinct) edge set is unchanged — an except + count over the
-    * cached, shrinking relations. Same lineage-truncation discipline as
-    * connectedComponents (each round re-references the previous edge
-    * set several times). */
+    * the (distinct) edge set is unchanged — a count, and an except only
+    * when the count matches. Rounds run until that probe holds: at least
+    * one, more while stars from different partitions share ids. Same
+    * lineage-truncation discipline as connectedComponents (each round
+    * re-references the previous edge set several times). */
   def connectedComponentsStars(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 50): DataFrame = {
-    val e00 = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val e00 = contracted(pairs, aCol, bCol)
     // node universe BEFORE the self-edge filter: a doc appearing only in
     // a reflexive pair (42, 42) is its own trivial component and must be
-    // labeled, exactly as connectedComponents labels it
-    val allNodes = truncated(
-      e00.select(col("src").as("id"))
-        .union(e00.select(col("dst"))).distinct())
+    // labeled, exactly as connectedComponents labels it (the contraction
+    // keeps such a pair; any other id is an endpoint of a star edge)
+    val allNodes = e00.select(col("src").as("id"))
+      .union(e00.select(col("dst"))).distinct()
     val e0 = e00.filter(col("src") =!= col("dst"))
     def symmetric(df: DataFrame): DataFrame =
       df.union(df.select(col("dst").as("src"), col("src").as("dst")))
@@ -207,14 +271,12 @@ object Components {
       edges = ss
       nEdges = nSS
       iter += 1
-      if (sys.props.contains("graft.cc.debug"))
-        println(s"CC-stars round $iter edges=${edges.count()}")
     }
     // failure path frees every cache this call created (edges is the
-    // current round's relation; allNodes backs the root computation)
+    // current round's relation; e00 backs the root computation)
     if (!converged) {
       edges.unpersist(blocking = false)
-      allNodes.unpersist(blocking = false)
+      e00.unpersist(blocking = false)
     }
     require(converged,
       s"connectedComponentsStars did not converge in $maxIters rounds")
@@ -228,10 +290,10 @@ object Components {
     val labels = truncated(nonRoot.union(roots))
     // materialize the labels cache BEFORE dropping its inputs — otherwise
     // the caller's first action re-runs the final round's joins and the
-    // allNodes distinct scan through lineage with the caches already gone
+    // contraction through lineage with the caches already gone
     labels.count()
     edges.unpersist(blocking = false)
-    allNodes.unpersist(blocking = false)
+    e00.unpersist(blocking = false)
     TextKit.register(labels)
     labels.select(col("id").as("doc_id"), col("label").as("component_id"))
   }
@@ -381,3 +443,119 @@ object Components {
   }
 }
 
+/** One partition's union-find for [[Components.contracted]]: every id the
+  * partition holds, linked toward the smallest id of its local component,
+  * emitted as one star edge per id. All state is primitive arrays over
+  * the DISTINCT ids — an open-addressing table of id indexes (load
+  * <= 1/2), plus per-index id, parent and flag arrays, grown by doubling —
+  * so a task never buffers its edges and never boxes an id. */
+private[ops] final class PartitionStars(isLong: Boolean) {
+  private final val Joined = 1 // a root that another root was linked under
+  private final val NullNeighbor = 2 // paired with a NULL endpoint
+
+  private var slots = new Array[Int](64) // index + 1 per slot, 0 = empty
+  private var ids = new Array[Long](32)
+  private var parent = new Array[Int](32)
+  private var flags = new Array[Byte](32)
+  private var n = 0
+  private var nullPair = false // a (NULL, NULL) pair was read
+
+  private def slotOf(id: Long): Int = {
+    val mask = slots.length - 1
+    // murmur3 fmix64: sequential ids must not cluster in the table
+    var h = id
+    h = (h ^ (h >>> 33)) * 0xff51afd7ed558ccdL
+    h = (h ^ (h >>> 33)) * 0xc4ceb9fe1a85ec53L
+    var s = (h ^ (h >>> 33)).toInt & mask
+    while (slots(s) != 0 && ids(slots(s) - 1) != id) s = (s + 1) & mask
+    s
+  }
+
+  /** Index of `id`, added as its own root on first sight. */
+  private def index(id: Long): Int = {
+    val s = slotOf(id)
+    if (slots(s) != 0) return slots(s) - 1
+    if (n == ids.length) {
+      ids = java.util.Arrays.copyOf(ids, 2 * n)
+      parent = java.util.Arrays.copyOf(parent, 2 * n)
+      flags = java.util.Arrays.copyOf(flags, 2 * n)
+    }
+    ids(n) = id
+    parent(n) = n
+    slots(s) = n + 1
+    n += 1
+    if (2 * n > slots.length) {
+      slots = new Array[Int](2 * slots.length)
+      var i = 0
+      while (i < n) { slots(slotOf(ids(i))) = i + 1; i += 1 }
+    }
+    n - 1
+  }
+
+  private def find(i0: Int): Int = {
+    var i = i0
+    while (parent(i) != i) { // path halving
+      parent(i) = parent(parent(i))
+      i = parent(i)
+    }
+    i
+  }
+
+  /** Link the two roots, the smaller id on top: every root is its local
+    * component's minimum. */
+  private def union(a: Int, b: Int): Unit = {
+    val ra = find(a)
+    val rb = find(b)
+    if (ra != rb) {
+      val top = if (ids(ra) < ids(rb)) ra else rb
+      parent(if (top == ra) rb else ra) = top
+      flags(top) = (flags(top) | Joined).toByte
+    }
+  }
+
+  private def add(row: InternalRow): Unit = {
+    val aNull = row.isNullAt(0)
+    val bNull = row.isNullAt(1)
+    def id(ord: Int): Int =
+      index(if (isLong) row.getLong(ord) else row.getInt(ord).toLong)
+    if (aNull && bNull) nullPair = true
+    else if (aNull || bNull) {
+      val i = id(if (aNull) 1 else 0)
+      flags(i) = (flags(i) | NullNeighbor).toByte
+    } else union(id(0), id(1))
+  }
+
+  /** Consume the partition's (src, dst) rows, then emit its star forest:
+    * (id, root) for every non-root id; (root, root) for a root with no
+    * other member and no NULL partner (it came from a self-pair);
+    * (id, NULL) for an id that had a NULL partner; (NULL, NULL) once if
+    * such a pair was read. Every emitted edge answers for at least one
+    * distinct edge read, so the output is never larger than the input. */
+  def contract(rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+    rows.foreach(add)
+    var i = 0
+    while (i < n) { parent(i) = find(i); i += 1 }
+    val out = new SpecificInternalRow(
+      Seq.fill(2)(if (isLong) LongType else IntegerType))
+    def set(ord: Int, v: Int): Unit =
+      if (v < 0) out.setNullAt(ord)
+      else if (isLong) out.setLong(ord, ids(v))
+      else out.setInt(ord, ids(v).toInt)
+    // pass k emits edge k % 2 of index k / 2: 0 = star or self edge,
+    // 1 = NULL-partner edge; k == 2n is the (NULL, NULL) pair
+    def emits(k: Int): Boolean =
+      if (k == 2 * n) nullPair
+      else {
+        val j = k / 2
+        if (k % 2 == 1) (flags(j) & NullNeighbor) != 0
+        else parent(j) != j || (flags(j) & (Joined | NullNeighbor)) == 0
+      }
+    Iterator.range(0, 2 * n + 1).filter(emits).map { k =>
+      val j = k / 2
+      if (k == 2 * n) { set(0, -1); set(1, -1) }
+      else if (k % 2 == 1) { set(0, j); set(1, -1) }
+      else { set(0, j); set(1, parent(j)) }
+      out
+    }
+  }
+}

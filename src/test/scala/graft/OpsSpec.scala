@@ -225,6 +225,48 @@ class OpsSpec extends SparkSpec {
     assert(a2.filter(_._1 < 200L).values.toSet == Set(100L))
   }
 
+  test("connected components: int ids keep their type; local chains need few jobs") {
+    import org.apache.spark.sql.types.IntegerType
+    // int keys, the entity-resolution shape (q227's p_partkey)
+    val pairs = Seq((1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12),
+      (20, 21)).toDF("doc_a", "doc_b")
+    for (labels <- Seq(Components.connectedComponents(pairs),
+        Components.connectedComponentsStars(pairs))) {
+      assert(labels.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+      assert(labels.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+        Map(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 1, 10 -> 10, 11 -> 10, 12 -> 10,
+          20 -> 20, 21 -> 20))
+    }
+    val bad = intercept[IllegalArgumentException](Components
+      .connectedComponents(Seq(("a", "b")).toDF("doc_a", "doc_b")))
+    assert(bad.getMessage.contains("doc_a"))
+    // 500 ten-node chains (q64's shape) in ONE partition: the local
+    // union-find hands the global rounds finished stars, so the job count
+    // no longer grows with the chain diameter
+    val chains = spark.sparkContext.parallelize(
+      (0L until 5000L).filter(_ % 10 != 9).map(i => (i, i + 1)), 1)
+      .toDF("doc_a", "doc_b")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val labels =
+      try {
+        val out = Components.connectedComponentsStars(chains).collect()
+        Thread.sleep(1000) // listener bus is async
+        out
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(labels.length == 5000 &&
+      labels.forall(r => r.getLong(1) == r.getLong(0) / 10 * 10))
+    assert(jobs.get <= 40, // 36 measured; 126 with no local phase
+      s"star CC over one-partition chains ran ${jobs.get} jobs")
+    TextKit.releaseCaches()
+  }
+
   test("TopKAgg: degenerate scores — nulls and NaNs dropped, result well-defined") {
     val scored = Seq(
       (0L, 1L, Some(0.9)), (0L, 2L, Some(Double.NaN)), (0L, 3L, None),

@@ -85,15 +85,50 @@ class PropertySpec extends SparkSpec {
   }
 
   test("both CC variants agree with a reference union-find on random graphs") {
+    import graft.ops.Components.{connectedComponents, connectedComponentsStars}
+    // the same pairs in one partition, in three, and one pair per
+    // partition: the last leaves the local union-find nothing to merge,
+    // so every connection must survive into the global rounds
+    def layouts[A: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](
+        pairs: Seq[A])
+        : Seq[(String, org.apache.spark.sql.DataFrame)] = {
+      val df = pairs.toDF("doc_a", "doc_b")
+      Seq("1 partition" -> df.repartition(1),
+        "3 partitions" -> df.repartition(3),
+        "1 pair per partition" -> spark.sparkContext
+          .parallelize(pairs, pairs.size).toDF("doc_a", "doc_b"))
+    }
+    def run(df: org.apache.spark.sql.DataFrame, stars: Boolean) =
+      (if (stars) connectedComponentsStars(df) else connectedComponents(df))
+        .collect().map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    // a NULL endpoint connects nothing; both variants still label the
+    // NULL id, each its own way (pinned: what the global rounds alone
+    // output, which the local phase must keep)
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(4L), None), (None, Some(2L)), (Some(2L), Some(3L)),
+      (Some(5L), Some(4L)), (None, None), (Some(9L), Some(9L)))
+    val nullCc = Map[Option[Any], Option[Any]](None -> Some(2L),
+      Some(2L) -> Some(2L), Some(3L) -> Some(2L), Some(4L) -> Some(4L),
+      Some(5L) -> Some(4L), Some(9L) -> Some(9L))
+    val nullStars = nullCc + (None -> None)
+    for ((layout, df) <- layouts(withNulls)) {
+      assert(run(df, stars = false) == nullCc, s"min-label, $layout")
+      assert(run(df, stars = true) == nullStars, s"stars, $layout")
+    }
     val graphGen = for {
       n <- Gen.choose(2, 28)
       m <- Gen.choose(1, 60)
       edges <- Gen.listOfN(m, for {
         a <- Gen.choose(0L, n.toLong - 1)
         b <- Gen.choose(0L, n.toLong - 1)
-      } yield (a, b))
-    } yield edges.filter(e => e._1 != e._2)
-    samples(graphGen, 6).filter(_.nonEmpty).foreach { edges =>
+      } yield (a, b)) // self-pairs included
+      // duplicated pairs, some reversed, shuffled in
+      again <- Gen.someOf(edges)
+      flips <- Gen.listOfN(again.size, Gen.oneOf(false, true))
+      seed <- Gen.long
+    } yield new scala.util.Random(seed).shuffle(edges ++
+      again.zip(flips).map { case ((a, b), f) => if (f) (b, a) else (a, b) })
+    samples(graphGen, 6).foreach { edges =>
       // driver-side union-find reference (tiny graphs)
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
@@ -106,17 +141,16 @@ class PropertySpec extends SparkSpec {
       }
       val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
       // canonical label = component MIN, which is what both variants emit
-      val expect = nodes.map { v =>
+      val expect: Map[Option[Any], Option[Any]] = nodes.map { v =>
         val members = nodes.filter(u => find(u) == find(v))
-        v -> members.min
+        Option[Any](v) -> Option[Any](members.min)
       }.toMap
-      val df = edges.toDF("doc_a", "doc_b")
-      val a1 = graft.ops.Components.connectedComponents(df).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val a2 = graft.ops.Components.connectedComponentsStars(df).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(a1 == expect, s"min-label CC diverged on $edges")
-      assert(a2 == expect, s"star-contraction CC diverged on $edges")
+      for ((layout, df) <- layouts(edges)) {
+        assert(run(df, stars = false) == expect,
+          s"min-label CC diverged ($layout) on $edges")
+        assert(run(df, stars = true) == expect,
+          s"star-contraction CC diverged ($layout) on $edges")
+      }
       graft.ops.TextKit.releaseCaches()
     }
   }
