@@ -1343,18 +1343,20 @@ object ScaleSmoke {
           .currentSnapshot(fs, dir).get.files.toSet
         val (lo, hi) = (n / 4, n / 4 + n / 16) // ~1/16 of the key space
         def run(cond: org.apache.spark.sql.Column,
-            ranges: Map[String, (Long, Long)]): (Double, Int, Long) = {
+            pruning: graft.lake.ManifestCommit.Pruning)
+            : (Double, Int, Long) = {
           val t0 = System.nanoTime()
           val (touched, del) = graft.lake.ManifestCommit
-            .deleteWherePredicateDV(spark, dir, cond, ranges)
+            .deleteWherePredicateDV(spark, dir, cond, pruning)
           ((System.nanoTime() - t0) / 1e9, touched, del)
         }
         // ranged: tag equality bounded by a key box — stats keep ~1-2
         // of the 16 files; rangeless: the same shape over the whole set
         val (tR, fR, nR) = run(
           col("k").between(lo, hi) && col("tag") === lit("t7"),
-          Map("k" -> (lo, hi)))
-        val (tF, fF, nF) = run(col("tag") === lit("t8"), Map.empty)
+          graft.lake.ManifestCommit.Pruning.range("k", lo, hi))
+        val (tF, fF, nF) = run(col("tag") === lit("t8"),
+          graft.lake.ManifestCommit.Pruning.none)
         require(graft.lake.ManifestCommit.currentSnapshot(fs, dir).get
           .files.toSet == live0, "a DV delete must not move data files")
         require(nR > 0 && nF > 0, s"deleted $nR/$nF rows")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, V1Write, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.{FeedFilePartition, FeedReaderFactory, FeedSource, TableFeedSource}
@@ -284,10 +284,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"graft catalog: VERSION AS OF wants a commit version " +
           s"(a number); got '$version'")
     }
-    require(ManifestCommit.snapshotAt(fs, dir, v).isDefined,
+    val state = ManifestCommit.stateAt(fs, dir, v)
+    require(state.isDefined,
       s"graft catalog: version $v of $ident is gone — the log was " +
         "pruned past it (pruneLog retention is the time-travel horizon)")
-    val schema = ManifestCommit.schemaAt(fs, dir, v)
+    val schema = state.get.schema
       .orElse(ManifestCommit.currentSchema(fs, dir)).getOrElse(
         sys.error(s"graft catalog: table $ident has no recorded schema"))
     new GraftSqlTable(dir.toString, s"$ident@v$v", schema, asOf = Some(v))
@@ -826,44 +827,53 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 }
 
 private[graft] object GraftSqlTable {
-  private def longOf(v: Any): Option[Long] = v match {
-    case l: Long  => Some(l)
-    case i: Int   => Some(i.toLong)
-    case s: Short => Some(s.toLong)
-    case b: Byte  => Some(b.toLong)
-    case _        => None
+  /** One partition identifier rendered as its leaf-relative path
+    * (`day=3` / `a=1/b=x`) — through [[leafSegment]], the rendering
+    * every writer uses, so ADD/DROP PARTITION and the data path name
+    * identical leaves. */
+  private[lake] def relOfPartIdent(partSchema: StructType,
+      id: InternalRow): String = {
+    require(id.numFields == partSchema.length,
+      s"graft catalog: partition ident has ${id.numFields} values; " +
+        s"the table has ${partSchema.length} partition columns")
+    partSchema.fields.indices
+      .map(i => leafSegment(partSchema(i), id, i))
+      .mkString("/")
   }
 
-  /** One v1 filter as a closed long range on one column, None when the
-    * shape is not a long comparison. */
-  private def rangeOf(f: Filter): Option[(String, Long, Long)] = f match {
-    case EqualTo(c, v)            => longOf(v).map(l => (c, l, l))
-    case GreaterThanOrEqual(c, v) => longOf(v).map(l => (c, l, Long.MaxValue))
-    case GreaterThan(c, v)        =>
-      longOf(v).collect { case l if l < Long.MaxValue => (c, l + 1, Long.MaxValue) }
-    case LessThanOrEqual(c, v)    => longOf(v).map(l => (c, Long.MinValue, l))
-    case LessThan(c, v)           =>
-      longOf(v).collect { case l if l > Long.MinValue => (c, Long.MinValue, l - 1) }
-    case And(l, r)                =>
-      (rangeOf(l), rangeOf(r)) match {
-        case (Some((c1, lo1, hi1)), Some((c2, lo2, hi2))) if c1 == c2 =>
-          Some((c1, math.max(lo1, lo2), math.min(hi1, hi2)))
-        case _ => None
-      }
-    case _ => None
+  /** The ONE partition-leaf renderer: field `f`'s value at `row(i)` as
+    * its `col=value` leaf path segment — ADD/DROP PARTITION
+    * ([[relOfPartIdent]]), the fan-out writer ([[GraftFanoutDataWriter]])
+    * and the delta writer ([[GraftDeltaTaskWriter]]) all call it.
+    * int/bigint/date render literally; a string passes
+    * [[assertPathLiteral]] once per distinct value (`checked` is the
+    * caller's memo — a task writer keeps one for its lifetime, so the
+    * per-row cost is one hash probe). NULLs and other types refuse
+    * loudly. */
+  private[lake] def leafSegment(f: StructField, row: InternalRow, i: Int,
+      checked: scala.collection.mutable.Set[String] =
+        scala.collection.mutable.Set.empty): String = {
+    import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
+    require(!row.isNullAt(i),
+      s"graft catalog: NULL partition value for ${f.name} — refuse " +
+        "rather than mint a default-partition leaf")
+    val v = f.dataType match {
+      case IntegerType => row.getInt(i).toString
+      case LongType    => row.getLong(i).toString
+      case DateType    =>
+        java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString
+      case StringType  =>
+        val s = row.getUTF8String(i).toString
+        if (!checked.contains(s)) {
+          assertPathLiteral(s, f.name)
+          checked += s
+        }
+        s
+      case o => sys.error(s"graft catalog: partition column ${f.name} " +
+        s"has unsupported type $o")
+    }
+    s"${f.name}=$v"
   }
-
-  /** Conjunctive per-column long bounds across a filter set, for
-    * stats-based FILE PRUNING: unsupported filters contribute nothing
-    * (they are re-evaluated post-scan either way — pruning is an
-    * optimization, never a correctness lever). */
-  private[graft] def pruningRanges(
-      filters: Seq[Filter]): Map[String, (Long, Long)] =
-    filters.flatMap(rangeOf)
-      .groupBy(_._1)
-      .map { case (c, rs) =>
-        c -> (rs.map(_._2).max, rs.map(_._3).min)
-      }
 
   /** Path-literal partition-value guard, the ONE rule every
     * partition-leaf renderer enforces (batch insert staging, the
@@ -876,36 +886,6 @@ private[graft] object GraftSqlTable {
     * it ('a:b' raw vs 'a%3Ab' escaped). NULL refuses on every path
     * (no __HIVE_DEFAULT_PARTITION__ leaves — an un-decodable leaf
     * would fail every later typed-partition SELECT at planning). */
-  /** One partition identifier rendered as its leaf-relative path
-    * (`day=3` / `a=1/b=x`) — the SAME literal rendering every writer
-    * uses ([[GraftFanoutDataWriter]]'s render), so ADD/DROP PARTITION
-    * and the data path name identical leaves. NULLs and path-unsafe
-    * string values refuse loudly. */
-  private[lake] def relOfPartIdent(partSchema: StructType,
-      id: InternalRow): String = {
-    import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
-    require(id.numFields == partSchema.length,
-      s"graft catalog: partition ident has ${id.numFields} values; " +
-        s"the table has ${partSchema.length} partition columns")
-    partSchema.fields.zipWithIndex.map { case (f, i) =>
-      require(!id.isNullAt(i),
-        s"graft catalog: NULL partition value for ${f.name}")
-      val v = f.dataType match {
-        case IntegerType => id.getInt(i).toString
-        case LongType    => id.getLong(i).toString
-        case DateType    =>
-          java.time.LocalDate.ofEpochDay(id.getInt(i).toLong).toString
-        case StringType  =>
-          val s = id.getUTF8String(i).toString
-          assertPathLiteral(s, f.name)
-          s
-        case o => sys.error(s"graft catalog: partition column " +
-          s"${f.name} has unsupported type $o")
-      }
-      s"${f.name}=$v"
-    }.mkString("/")
-  }
-
   private[lake] def assertPathLiteral(v: String, colName: String): Unit =
     require(v.nonEmpty && org.apache.spark.sql.catalyst.catalog
         .ExternalCatalogUtils.escapePathName(v) == v,
@@ -1046,7 +1026,7 @@ private[graft] object GraftSqlTable {
   private[graft] def deleteRange(
       filters: Seq[Filter]): Option[(String, Long, Long)] = {
     if (filters.isEmpty) return None
-    val rs = filters.map(rangeOf)
+    val rs = filters.map(ManifestCommit.Pruning.rangeOf)
     if (rs.exists(_.isEmpty)) return None
     val cols = rs.flatten.map(_._1).distinct
     if (cols.size != 1) return None
@@ -1352,8 +1332,9 @@ private[graft] class GraftSqlTable(path: String, ident: String,
     *    reconstruct EXACTLY as Columns ([[GraftSqlTable.filterColumn]]
     *    — string equality, IN, LIKE prefixes, OR, NOT...) goes through
     *    [[ManifestCommit.deleteWherePredicateDV]]: scan the matching
-    *    rows' positions, DV-delete them, no file rewrites. Long-range
-    *    conjuncts still prune FILES via the manifest stats.
+    *    rows' positions, DV-delete them, no file rewrites. Long-range,
+    *    `=` and `IN` conjuncts still prune FILES via the manifest stats
+    *    and blooms ([[ManifestCommit.Pruning]]).
     * A keyed table's non-range deletes stay on the row-level
     * (applyChangesDV) plan — one mutation protocol per table shape.
     * Anything not exactly reconstructible refuses loudly rather than
@@ -1406,9 +1387,9 @@ private[graft] class GraftSqlTable(path: String, ident: String,
               "or over-delete")))
           .reduceOption(_ && _)
           .getOrElse(org.apache.spark.sql.functions.lit(true))
-        val ranges = GraftSqlTable.pruningRanges(filters.toSeq)
+        val pruning = ManifestCommit.Pruning.of(filters.toSeq)
         LeafPar.foreach(domains)(
-          ManifestCommit.deleteWherePredicateDV(spark, _, cond, ranges))
+          ManifestCommit.deleteWherePredicateDV(spark, _, cond, pruning))
     }
     ()
   }
@@ -1543,10 +1524,11 @@ private[graft] final class GraftSqlKeyedTable(path: String, ident: String,
 }
 
 /** Batch scan: live files straight from the manifest (zero jobs at
-  * planning), long-range predicates pruning FILES against the
-  * manifest's recorded per-file stats + blooms (the
-  * [[GraftFileIndex]] listFiles logic behind plain SQL), merge-on-read
-  * correctness under active deletion-vector sidecars.
+  * planning — one manifest read per leaf), long-range, `=` and `IN`
+  * predicates pruning FILES against the manifest's recorded per-file
+  * stats + blooms (the [[ManifestCommit.Pruning]] rule
+  * [[GraftFileIndex]] also asks), merge-on-read correctness under
+  * active deletion-vector sidecars.
   *
   * Execution is TWO-TIER, chosen per file:
   *  - **DV-free files — the overwhelming majority at any scale — read
@@ -1583,7 +1565,6 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
   // Output batches are positional, so only names change.
   private def phys(s: StructType): StructType =
     GraftTableMeta.phys(s, colMap)
-  private def physN(n: String): String = GraftTableMeta.phys(n, colMap)
   // partition columns TRAIL the declared schema (enforced at CREATE),
   // so any required subset is data-then-partition too
   private val fullPartSchema = StructType(
@@ -1603,12 +1584,12 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
       full.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
   /** Every filter stays a residual (Spark re-evaluates post-scan —
     * stats pruning is a file-skipping optimization, never the row
-    * filter); the range-shaped subset and the partition-column subset
-    * are recorded for pruning and surface in EXPLAIN as the pushed
-    * set. */
+    * filter); the subset [[ManifestCommit.Pruning]] can use and the
+    * partition-column subset are recorded for pruning and surface in
+    * EXPLAIN as the pushed set. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(f =>
-      GraftSqlTable.pruningRanges(Seq(f)).nonEmpty ||
+      !ManifestCommit.Pruning.of(Seq(f)).isEmpty ||
         (partCols.nonEmpty && f.references.nonEmpty &&
           f.references.forall(partCols.contains)))
     filters
@@ -1651,12 +1632,14 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
     val spark = SparkSession.active
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stats/blooms are recorded under PHYSICAL column names
-    val ranges = GraftSqlTable.pruningRanges(pushed.toSeq)
-      .map { case (c, r) => (physN(c), r) }
-    val points = ranges.collect { case (c, (lo, hi)) if lo == hi =>
-      (c, lo)
-    }
+    // the data-column subset of the pushed filters, under PHYSICAL names
+    // (stats/blooms are recorded under them): both the manifest file
+    // pruning and the parquet row-group/page pushdown use it —
+    // partition columns are path metadata
+    val dataFilters = pushed.filter(
+      _.references.forall(dataSchema.fieldNames.contains))
+      .map(GraftTableMeta.physFilter(_, colMap))
+    val pruning = ManifestCommit.Pruning.of(dataFilters.toSeq)
     // leaf enumeration + partition pruning (driver-side, before any
     // per-leaf manifest GET): a leaf whose `col=value` segments
     // contradict a pushed partition predicate contributes NOTHING
@@ -1675,46 +1658,26 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
     leaves.foreach { rel =>
       val leafDir = if (rel == ".") dir else new Path(dir, rel)
       val pin: Option[Long] = asOfLeaves.fold(asOf)(_.get(rel))
-      val snap = pin match {
-        case Some(v) => ManifestCommit.snapshotAt(fs, leafDir, v)
+      // ONE manifest read per leaf serves the live set, the stats and
+      // blooms the pruning asks, and the active sidecars; a pinned
+      // (time-travel) read takes all of them from its own version
+      val state = pin match {
+        case Some(v) => ManifestCommit.stateAt(fs, leafDir, v)
           .getOrElse(sys.error(s"graft catalog: version $v of $path " +
             "pruned between plan and read — restart the query"))
-        case None => ManifestCommit.currentSnapshot(fs, leafDir)
+        case None => ManifestCommit.headState(fs, leafDir)
           .getOrElse(sys.error(
             s"graft catalog: $leafDir has no committed snapshot"))
       }
-      // stats-pruned live set: a file provably outside every pushed
-      // range never plans a partition (one manifest GET, zero footers).
-      // Stats are head-state (per FILE, monotone under append — a
-      // time-traveled file's stats never change after its commit).
-      val stats =
-        if (ranges.isEmpty) Map.empty[String, Seq[ManifestCommit.ColStat]]
-        else ManifestCommit.currentFileStats(fs, leafDir)
-      // point predicates (lo == hi) additionally consult recorded
-      // per-file BLOOMS — GraftFileIndex's probe pruning, behind SQL: a
-      // bloom that rejects the value drops the file even when its
-      // min/max range admits it
-      val blooms =
-        if (points.isEmpty) Map.empty[String, Seq[ManifestCommit.ColBloom]]
-        else ManifestCommit.currentFileBlooms(fs, leafDir)
-      val kept = snap.files.filter { n =>
-        ranges.forall { case (c, (lo, hi)) =>
-          stats.getOrElse(n, Nil).find(_.col == c)
-            .forall(s => s.max >= lo && s.min <= hi)
-        } && points.forall { case (c, v) =>
-          blooms.getOrElse(n, Nil).find(_.col == c)
-            .forall(_.mightContain(v))
-        }
-      }
+      // a file the pruning rules out never plans a partition (zero
+      // footers)
+      val kept = pruning.kept(state)
       // merge-on-read: files a sidecar names carry the sidecar paths
       // and subtract their positions executor-side; the touched set
       // resolves from sidecar footer stats (driver-side, no job), a
       // superset being safe — an untouched false positive loads an
-      // empty position set. A time-travel read subtracts the sidecars
-      // ACTIVE AT that version.
-      val dvs = pin.fold(ManifestCommit.currentDvs(fs, leafDir))(v =>
-          ManifestCommit.dvsAt(fs, leafDir, v))
-        .map(n => new Path(leafDir, n).toString)
+      // empty position set
+      val dvs = state.dvs.map(n => new Path(leafDir, n).toString)
       val touched: Set[String] =
         if (dvs.isEmpty) Set.empty
         else {
@@ -1729,7 +1692,7 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
       val (dvFiles, plainFiles) = kept.partition(touched.contains)
       feedParts ++= dvFiles.map(n => GraftLeafFilePartition(
         FeedFilePartition(new Path(leafDir, n).toString,
-          "insert", snap.version, None, dvSidecars = dvs,
+          "insert", state.version, None, dvSidecars = dvs,
           dvKeep = false), rel): InputPartition)
       // vectorized tier: ONE directory LIST per leaf resolves sizes,
       // then stock byte-range splitting — a fat file becomes many
@@ -1767,11 +1730,6 @@ private[graft] class GraftSqlScan(path: String, full: StructType,
         }.sortBy(-_.length)
         val parts = FilePartition.getFilePartitions(spark, splits,
           maxSplit)
-        // parquet row-group/page pushdown only for filters the data
-        // files can answer — partition columns are path metadata
-        val dataFilters = pushed.filter(
-          _.references.forall(dataSchema.fieldNames.contains))
-          .map(GraftTableMeta.physFilter(_, colMap))
         (parts, Some(GraftSqlScan.parquetFactory(spark, phys(dataSchema),
           phys(reqData), reqPart, dataFilters)))
       }
@@ -1828,16 +1786,9 @@ private[graft] object GraftSqlScan {
     * else through raw-segment string equality. */
   private[lake] def leafKept(values: Map[String, String],
       filters: Seq[Filter]): Boolean = {
-    def num(v: Any): Option[Long] = v match {
-      case l: Long  => Some(l)
-      case i: Int   => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte  => Some(b.toLong)
-      case _        => None
-    }
     def cmp(col: String, v: Any): Option[Int] = // sign of (leaf - v)
       values.get(col).flatMap { raw =>
-        num(v) match {
+        ManifestCommit.Pruning.longOf(v) match {
           case Some(l) => raw.toLongOption.map(_.compareTo(l))
           case None if v != null => Some(raw.compareTo(v.toString))
           case None => None
@@ -2341,34 +2292,14 @@ private[graft] class GraftDeltaTaskWriter(path: String,
       new GraftParquetDataWriter(path, keySchema, conf,
         s"$tag-l${perLeaf.size}-del")))
 
-  // same one rule as every other leaf renderer (assertPathLiteral),
-  // memoized per distinct string value
+  // the one leaf renderer, its string check memoized per distinct value
   private val checkedVals = scala.collection.mutable.HashSet.empty[String]
-  private def render(f: StructField, row: InternalRow, i: Int): String = {
-    require(!row.isNullAt(i),
-      s"graft catalog: NULL partition value for ${f.name}")
-    val v = f.dataType match {
-      case IntegerType => row.getInt(i).toString
-      case LongType    => row.getLong(i).toString
-      case DateType    =>
-        java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString
-      case StringType  =>
-        val s = row.getUTF8String(i).toString
-        if (!checkedVals.contains(s)) {
-          GraftSqlTable.assertPathLiteral(s, f.name)
-          checkedVals.add(s)
-        }
-        s
-      case o => sys.error(s"graft catalog: partition column ${f.name} " +
-        s"has unsupported type $o")
-    }
-    s"${f.name}=$v"
-  }
 
   private def relOfRow(row: InternalRow): String =
     if (partCols.isEmpty) "."
     else partCols.indices.map { j =>
-      render(schema.fields(dataLen + j), row, dataLen + j)
+      GraftSqlTable.leafSegment(schema.fields(dataLen + j), row,
+        dataLen + j, checkedVals)
     }.mkString("/")
 
   // rowId rows resolve BY NAME against the projected idSchema
@@ -2377,7 +2308,8 @@ private[graft] class GraftDeltaTaskWriter(path: String,
   private def relOfId(id: InternalRow): String =
     if (partCols.isEmpty) "."
     else partCols.indices.map { j =>
-      render(idSchema.fields(idPartIdx(j)), id, idPartIdx(j))
+      GraftSqlTable.leafSegment(idSchema.fields(idPartIdx(j)), id,
+        idPartIdx(j), checkedVals)
     }.mkString("/")
 
   override def insert(row: InternalRow): Unit =
@@ -2606,33 +2538,13 @@ private[graft] class GraftFanoutDataWriter(path: String,
   private val writers =
     scala.collection.mutable.LinkedHashMap.empty[String, GraftParquetDataWriter]
 
-  // one validation rule with the batch path (assertPathLiteral);
-  // numeric/date renders are literal by construction, strings memoize
-  // the check per distinct value so the per-row cost is one hash probe
+  // the one leaf renderer, its string check memoized per distinct value
+  // so the per-row cost is one hash probe
   private val checkedVals = scala.collection.mutable.HashSet.empty[String]
   private def relOf(row: InternalRow): String =
-    partSchema.fields.zipWithIndex.map { case (f, j) =>
-      val i = dataSchema.length + j
-      require(!row.isNullAt(i),
-        s"graft catalog: NULL partition value for ${f.name} — refuse " +
-          "rather than mint a default-partition leaf")
-      val v = f.dataType match {
-        case IntegerType => row.getInt(i).toString
-        case LongType    => row.getLong(i).toString
-        case DateType    =>
-          java.time.LocalDate.ofEpochDay(row.getInt(i).toLong).toString
-        case StringType  =>
-          val s = row.getUTF8String(i).toString
-          if (!checkedVals.contains(s)) {
-            GraftSqlTable.assertPathLiteral(s, f.name)
-            checkedVals.add(s)
-          }
-          s
-        case o => sys.error(
-          s"graft catalog: partition column ${f.name} has unsupported " +
-            s"type $o")
-      }
-      s"${f.name}=$v"
+    partSchema.fields.indices.map { j =>
+      GraftSqlTable.leafSegment(partSchema(j), row, dataSchema.length + j,
+        checkedVals)
     }.mkString("/")
 
   override def write(row: InternalRow): Unit = {

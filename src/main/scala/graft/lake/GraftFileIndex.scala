@@ -3,10 +3,11 @@ package graft.lake
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Catalyst [[FileIndex]] over the manifest commit log — the integration
   * that makes the lake a FIRST-CLASS Spark table (the public Delta
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * hands the pushed-down partition and data predicates to
   * [[listFiles]], and THIS index answers them from committed manifest
   * metadata — per-file min/max stats for ranges, per-file blooms for
-  * point probes, Hive-style `year=/month=/day=` directory values for
+  * `=`/`IN` probes, Hive-style `year=/month=/day=` directory values for
   * partition pruning. No explicit `ranges` map, no footer sweep: the
   * SQL WHERE clause alone selects the file set, and everything
   * downstream (vectorized parquet read, row-group pruning, codegen) is
@@ -23,11 +24,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   *
   * Scale shape: resolution is one manifest GET + one LIST per leaf
   * partition (the metadata cost every reader already pays);
-  * [[listFiles]] evaluates predicates against in-memory stat lines —
-  * at 100 TB the planner touches KBs of manifest state, never the
-  * table. Pruning is a superset guarantee: unknown predicate shapes
-  * and stats-free files are conservatively kept, and Spark re-applies
-  * the full row-level filter after the scan.
+  * [[listFiles]] translates the data predicates to the v1 filters
+  * Spark's parquet scan pushes and asks [[ManifestCommit.Pruning]] —
+  * the one file-pruning rule the SQL scan ([[GraftSqlScan]]) and the
+  * stats-pruned deletes share — against in-memory stat lines: at
+  * 100 TB the planner touches KBs of manifest state, never the table.
+  * Pruning is a superset guarantee: unknown predicate shapes and
+  * stats-free files are conservatively kept, and Spark re-applies the
+  * full row-level filter after the scan.
   *
   * Deletion vectors: a partition with ACTIVE sidecars cannot be served
   * by a bare file scan (rows would resurrect) — [[GraftFileIndex.table]]
@@ -47,10 +51,8 @@ final class GraftFileIndex(spark: SparkSession, root: Path)
   private def resolve(): Seq[Leaf] =
     Compaction.leaves(fs, root).map { dir =>
       // ONE log LIST + ONE manifest parse + ONE directory LIST per leaf
-      // serves every facet (files, stats, blooms, DVs, schema) —
-      // resolving them through the per-facet accessors would pay five
-      // metadata GETs per leaf, the dominant table-open cost at
-      // thousands of leaves
+      // serves every facet (files, stats, blooms, DVs, schema); the
+      // stats and bloom maps are built here once, not per listFiles
       val head = ManifestCommit.headState(fs, dir)
       val listed =
         if (fs.exists(dir))
@@ -154,103 +156,28 @@ final class GraftFileIndex(spark: SparkSession, root: Path)
 
   override def sizeInBytes: Long = leaves.flatMap(_.files.map(_.getLen)).sum
 
-  /** Conjuncts of the pushed predicates. */
-  private def conjuncts(es: Seq[Expression]): Seq[Expression] =
-    es.flatMap {
-      case And(l, r) => conjuncts(Seq(l)) ++ conjuncts(Seq(r))
-      case e         => Seq(e)
-    }
-
-  private def litLong(l: Literal): Option[Long] = l.dataType match {
-    case LongType    => Option(l.value).map(_.asInstanceOf[Long])
-    case IntegerType => Option(l.value).map(_.asInstanceOf[Int].toLong)
-    case _           => None
-  }
-
-  /** Per-column [lo, hi] requirement and equality-probe set implied by
-    * the recognized conjuncts; everything else is ignored
-    * (conservative — kept files are a superset). */
-  private def requirements(filters: Seq[Expression])
-      : (Map[String, (Long, Long)], Map[String, Seq[Long]]) = {
-    var ranges = Map.empty[String, (Long, Long)]
-    var probes = Map.empty[String, Seq[Long]]
-    def tighten(c: String, lo: Long, hi: Long): Unit = {
-      val (plo, phi) = ranges.getOrElse(c, (Long.MinValue, Long.MaxValue))
-      ranges += c -> (math.max(plo, lo), math.min(phi, hi))
-    }
-    conjuncts(filters).foreach {
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        litLong(l).foreach { v =>
-          tighten(a.name, v, v)
-          probes += a.name -> (probes.getOrElse(a.name, Nil) :+ v)
-        }
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        litLong(l).foreach { v =>
-          tighten(a.name, v, v)
-          probes += a.name -> (probes.getOrElse(a.name, Nil) :+ v)
-        }
-      case GreaterThan(a: AttributeReference, l: Literal) =>
-        litLong(l).foreach(v => tighten(a.name, v + 1, Long.MaxValue))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        litLong(l).foreach(v => tighten(a.name, v, Long.MaxValue))
-      case LessThan(a: AttributeReference, l: Literal) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v - 1))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v))
-      case GreaterThan(l: Literal, a: AttributeReference) => // v > a
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v - 1))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, Long.MinValue, v))
-      case LessThan(l: Literal, a: AttributeReference) => // v < a
-        litLong(l).foreach(v => tighten(a.name, v + 1, Long.MaxValue))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        litLong(l).foreach(v => tighten(a.name, v, Long.MaxValue))
-      case In(a: AttributeReference, vs) if vs.forall {
-            case l: Literal => litLong(l).isDefined
-            case _          => false
-          } =>
-        val values = vs.collect { case l: Literal => litLong(l).get }
-        if (values.nonEmpty) {
-          tighten(a.name, values.min, values.max)
-          probes += a.name -> (probes.getOrElse(a.name, Nil) ++ values)
-        }
-      case _ => // unrecognized: no pruning contribution
-    }
-    (ranges, probes)
-  }
-
-  private def survives(name: String, leaf: Leaf,
-      ranges: Map[String, (Long, Long)],
-      probes: Map[String, Seq[Long]]): Boolean = {
-    val stats = leaf.stats.getOrElse(name, Nil)
-    val statOk = ranges.forall { case (c, (lo, hi)) =>
-      stats.find(_.col == c).forall(s => s.max >= lo && s.min <= hi)
-    }
-    // bloom rejection: EVERY probed value absent -> the equality (or the
-    // whole IN list) cannot match in this file
-    val bloomOk = probes.forall { case (c, vs) =>
-      leaf.blooms.getOrElse(name, Nil).find(_.col == c)
-        .forall(b => vs.exists(b.mightContain))
-    }
-    statOk && bloomOk
-  }
-
+  /** Partition pruning binds the pushed partition predicates to each
+    * leaf's directory-derived values row and evaluates them on the
+    * driver. File pruning translates the data predicates with Spark's
+    * own `DataSourceStrategy.translateFilter` (the v1 filters its
+    * parquet scan pushes) and asks [[ManifestCommit.Pruning]] — the
+    * rule the SQL scan and the deletes share — of every file. */
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // partition pruning: bind the pushed partition predicates to the
-    // directory-derived values row and evaluate on the driver
-    val bound = conjuncts(partitionFilters).map(_.transform {
+    val bound = partitionFilters.map(_.transform {
       case a: AttributeReference =>
         BoundReference(partitionSchema.fieldIndex(a.name), a.dataType,
           nullable = false)
     })
-    val (ranges, probes) = requirements(dataFilters)
+    val pruning = ManifestCommit.Pruning.of(
+      dataFilters.flatMap(GraftBridge.translateFilter))
     leaves
       .filter(l => bound.forall(_.eval(l.values) == true))
       .map { l =>
-        PartitionDirectory(l.values,
-          l.files.filter(f =>
-            survives(f.getPath.getName, l, ranges, probes)).toArray)
+        PartitionDirectory(l.values, l.files.filter { f =>
+          val n = f.getPath.getName
+          pruning.keeps(l.stats.getOrElse(n, Nil), l.blooms.getOrElse(n, Nil))
+        }.toArray)
       }
       .filter(_.files.nonEmpty)
   }
@@ -319,7 +246,6 @@ object GraftFileIndex {
       .filterNot(f => index.partitionSchema.fieldNames.contains(f.name)))
     val relation = HadoopFsRelation(index, index.partitionSchema,
       dataSchema, None, new ParquetFileFormat, Map.empty)(spark)
-    org.apache.spark.sql.graftbridge.GraftBridge.ofRows(spark,
-      LogicalRelation(relation))
+    GraftBridge.ofRows(spark, LogicalRelation(relation))
   }
 }

@@ -214,26 +214,120 @@ object ManifestCommit {
       (fields.head, fields.tail.toSeq.flatMap(bloomOf))
     }.toMap
 
-  private def parseBlooms(fs: FileSystem,
-      p: Path): Map[String, Seq[ColBloom]] = {
-    val in =
-      try fs.open(p)
-      catch { case _: java.io.FileNotFoundException => return Map.empty }
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toIndexedSeq
-      finally in.close()
-    decodeBloomLines(lines.filter(_.startsWith("F ")))
+  /** The ONE file-pruning rule of the lake: may a file whose committed
+    * stats and blooms are these hold a row matching the predicate?
+    * Every pruning reader asks it — the SQL scan ([[GraftSqlScan]]),
+    * the Catalyst [[GraftFileIndex]] (its data filters translated to
+    * the same v1 [[org.apache.spark.sql.sources.Filter]]s Spark's
+    * parquet scan pushes) and the stats-pruned deletes — so a new
+    * predicate shape or metadata facet is taught here once.
+    *
+    *  - `ranges`: per-column closed `[lo, hi]` bounds from long
+    *    comparisons; a file survives when its min/max intersects.
+    *  - `probes`: per-column sorted value sets from `=` and `IN`; a file
+    *    survives when some value lies inside its min/max AND its bloom
+    *    (if any) may contain some value. Only equality probes blooms — a
+    *    range, even `BETWEEN v AND v`, consults stats alone.
+    *
+    * A superset, never a row filter: unknown shapes contribute nothing,
+    * a file without stats or a bloom on a column is kept, and the
+    * caller re-applies the full predicate to the rows it reads. */
+  final case class Pruning(ranges: Map[String, (Long, Long)],
+      probes: Map[String, Array[Long]]) {
+    def isEmpty: Boolean = ranges.isEmpty && probes.isEmpty
+
+    def keeps(stats: Seq[ColStat], blooms: Seq[ColBloom]): Boolean =
+      ranges.forall { case (c, (lo, hi)) =>
+        stats.find(_.col == c).forall(s => s.max >= lo && s.min <= hi)
+      } && probes.forall { case (c, vs) =>
+        stats.find(_.col == c).forall { s =>
+          val i = java.util.Arrays.binarySearch(vs, s.min)
+          val at = if (i >= 0) i else -i - 1 // first value >= min
+          at < vs.length && vs(at) <= s.max
+        } && blooms.find(_.col == c).forall(b => vs.exists(b.mightContain))
+      }
+
+    /** The live files of one committed state this pruning keeps; the
+      * state's stats and bloom maps are built once, not per file. */
+    private[graft] def kept(state: HeadState): Seq[String] =
+      if (isEmpty) state.files
+      else {
+        val stats = state.stats
+        val blooms =
+          if (probes.isEmpty) Map.empty[String, Seq[ColBloom]]
+          else state.blooms
+        state.files.filter(n =>
+          keeps(stats.getOrElse(n, Nil), blooms.getOrElse(n, Nil)))
+      }
   }
 
-  /** Current committed per-file blooms of one partition. */
-  def currentFileBlooms(fs: FileSystem,
-      partition: Path): Map[String, Seq[ColBloom]] =
-    listVersions(fs, partition).sorted(Ordering[Long].reverse)
-      .iterator
-      .filter(v => parse(fs, manifestPath(partition, v)).isDefined)
-      .map(v => parseBlooms(fs, manifestPath(partition, v)))
-      .nextOption()
-      .getOrElse(Map.empty)
+  object Pruning {
+    import org.apache.spark.sql.sources._
+
+    val none: Pruning = Pruning(Map.empty, Map.empty)
+
+    def range(col: String, lo: Long, hi: Long): Pruning =
+      Pruning(Map(col -> (lo, hi)), Map.empty)
+
+    private[lake] def longOf(v: Any): Option[Long] = v match {
+      case l: Long  => Some(l)
+      case i: Int   => Some(i.toLong)
+      case s: Short => Some(s.toLong)
+      case b: Byte  => Some(b.toLong)
+      case _        => None
+    }
+
+    /** One v1 filter as a closed long range on one column, None when
+      * the shape is not a long comparison (an `And` of two ranges on
+      * the same column intersects them). */
+    private[lake] def rangeOf(f: Filter): Option[(String, Long, Long)] =
+      f match {
+        case EqualTo(c, v)            => longOf(v).map(l => (c, l, l))
+        case GreaterThanOrEqual(c, v) =>
+          longOf(v).map(l => (c, l, Long.MaxValue))
+        case GreaterThan(c, v)        =>
+          longOf(v).collect { case l if l < Long.MaxValue =>
+            (c, l + 1, Long.MaxValue) }
+        case LessThanOrEqual(c, v)    =>
+          longOf(v).map(l => (c, Long.MinValue, l))
+        case LessThan(c, v)           =>
+          longOf(v).collect { case l if l > Long.MinValue =>
+            (c, Long.MinValue, l - 1) }
+        case And(l, r)                =>
+          (rangeOf(l), rangeOf(r)) match {
+            case (Some((c1, lo1, hi1)), Some((c2, lo2, hi2))) if c1 == c2 =>
+              Some((c1, math.max(lo1, lo2), math.min(hi1, hi2)))
+            case _ => None
+          }
+        case _ => None
+      }
+
+    /** The pruning a conjunctive filter set implies: `And`s split,
+      * comparisons tighten per-column ranges, `=` and all-long `IN`
+      * lists become probe sets (intersected per column). */
+    def of(filters: Seq[Filter]): Pruning = {
+      def conjuncts(f: Filter): Seq[Filter] = f match {
+        case And(l, r) => conjuncts(l) ++ conjuncts(r)
+        case other     => Seq(other)
+      }
+      var ranges = Map.empty[String, (Long, Long)]
+      var probes = Map.empty[String, Array[Long]]
+      def probe(c: String, vs: Seq[Long]): Unit = {
+        val set = vs.distinct.sorted.toArray
+        probes += c -> probes.get(c).fold(set)(_.intersect(set))
+      }
+      filters.flatMap(conjuncts).foreach {
+        case EqualTo(c, v) => longOf(v).foreach(l => probe(c, Seq(l)))
+        case In(c, vs) if vs.nonEmpty && vs.forall(longOf(_).isDefined) =>
+          probe(c, vs.toSeq.flatMap(longOf))
+        case f => rangeOf(f).foreach { case (c, lo, hi) =>
+          val (plo, phi) = ranges.getOrElse(c, (Long.MinValue, Long.MaxValue))
+          ranges += c -> (math.max(plo, lo), math.min(phi, hi))
+        }
+      }
+      Pruning(ranges, probes)
+    }
+  }
 
   /** A fully-parsed valid manifest: live (name, stats) entries,
     * (removedAtMs, name) tombstones, the commit kind, the delete
@@ -339,10 +433,6 @@ object ManifestCommit {
     }
   }
 
-  private def parse(fs: FileSystem,
-      p: Path): Option[(Seq[(String, Seq[ColStat])], Seq[(Long, String)])] =
-    parseFull(fs, p).map(pf => (pf.live, pf.removed))
-
   private def listVersions(fs: FileSystem, partition: Path): Seq[Long] = {
     val dir = logDir(partition)
     if (!fs.exists(dir)) Nil
@@ -369,17 +459,20 @@ object ManifestCommit {
       .filter(_._2 <= tsMs).map(_._1).maxOption
   }
 
-  /** The COMPLETE committed head state of one partition from ONE log
-    * LIST + ONE manifest parse — what the per-facet accessors
-    * ([[currentSnapshot]], [[currentFileStats]], [[currentDvs]],
-    * [[currentTxns]], [[currentSchemaJson]], [[currentFileBlooms]])
-    * each re-derive with their own LIST+parse. Readers that need
-    * several facets (the FileIndex resolves five per leaf; a commit
-    * attempt consults six) go through this instead: at a thousand-leaf
-    * table that is the difference between one metadata GET per leaf
-    * and five. Blooms decode lazily — snapshot-only consumers never
-    * pay the hex decode. */
-  private[lake] final case class HeadState(version: Long,
+  /** The COMPLETE committed state of one partition at one version —
+    * live files with their stats, blooms, active sidecars, writer txns
+    * and the recorded schema — from ONE manifest parse. [[headState]]
+    * (the current version: one log LIST + one parse) and [[stateAt]] (a
+    * pinned version: one parse) are the only code that reads a leaf's
+    * log on a reader's behalf; every `current*` / `*At` accessor is a
+    * one-line projection of them. A reader that needs several facets
+    * (the FileIndex and the SQL scan resolve four per leaf; a commit
+    * attempt consults six) takes one state and projects it, so a
+    * thousand-leaf table costs one metadata GET per leaf, not one per
+    * facet. Blooms decode lazily — snapshot-only consumers never pay
+    * the hex decode; [[stats]] builds a fresh map per call, so take it
+    * once per read. */
+  private[graft] final case class HeadState(version: Long,
       liveWithStats: Seq[(String, Seq[ColStat])], dvs: Seq[String],
       txns: Map[String, Long], schemaJson: Option[String],
       bloomLines: Seq[String]) {
@@ -393,35 +486,45 @@ object ManifestCommit {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
-  private[lake] def headState(fs: FileSystem,
+  private def stateOf(version: Long, p: Parsed): HeadState =
+    HeadState(version, p.live, p.dvs, p.txns, p.schemaJson, p.bloomLines)
+
+  /** The state of the highest VALID committed version, or None for a
+    * partition with no (parseable) log. Skipping an invalid head lands
+    * on the last durable commit — exactly the torn-write-is-no-commit
+    * semantics. */
+  private[graft] def headState(fs: FileSystem,
       partition: Path): Option[HeadState] =
     listVersions(fs, partition).sorted(Ordering[Long].reverse)
       .iterator
-      .flatMap(v => parseFull(fs, manifestPath(partition, v)).map(p =>
-        HeadState(v, p.live, p.dvs, p.txns, p.schemaJson, p.bloomLines)))
+      .flatMap(v => parseFull(fs, manifestPath(partition, v))
+        .map(stateOf(v, _)))
       .nextOption()
 
-  /** Highest VALID committed version, or None for a partition with no
-    * (parseable) log. Skipping an invalid head lands on the last durable
-    * commit — exactly the torn-write-is-no-commit semantics. */
+  /** The state of an EXPLICIT committed version (None if that version
+    * was never validly committed or has been pruned) — time travel's
+    * resolver. */
+  private[graft] def stateAt(fs: FileSystem, partition: Path,
+      version: Long): Option[HeadState] =
+    parseFull(fs, manifestPath(partition, version)).map(stateOf(version, _))
+
+  /** The current committed live file set. */
   def currentSnapshot(fs: FileSystem, partition: Path): Option[Snapshot] =
-    listVersions(fs, partition).sorted(Ordering[Long].reverse)
-      .iterator
-      .flatMap(v => parse(fs, manifestPath(partition, v))
-        .map(p => Snapshot(v, p._1.map(_._1))))
-      .nextOption()
+    headState(fs, partition).map(_.snapshot)
+
+  /** The committed snapshot at an EXPLICIT version (None if that version
+    * was never validly committed) — [[currentSnapshot]]'s time-travel
+    * twin. */
+  def snapshotAt(fs: FileSystem, partition: Path,
+      version: Long): Option[Snapshot] =
+    stateAt(fs, partition, version).map(_.snapshot)
 
   /** The current committed per-file column stats of one partition
     * (files committed without stats map to Nil — a pruning reader must
     * keep them). */
   def currentFileStats(fs: FileSystem,
       partition: Path): Map[String, Seq[ColStat]] =
-    listVersions(fs, partition).sorted(Ordering[Long].reverse)
-      .iterator
-      .flatMap(v => parse(fs, manifestPath(partition, v)))
-      .nextOption()
-      .map(_._1.toMap)
-      .getOrElse(Map.empty)
+    headState(fs, partition).fold(Map.empty[String, Seq[ColStat]])(_.stats)
 
   /** The current committed ACTIVE deletion-vector sidecar files of one
     * partition (empty when every delete so far was copy-on-write). Each
@@ -429,19 +532,14 @@ object ManifestCommit {
     * the read-time union of all active sidecars is the partition's
     * logical deletion vector. */
   def currentDvs(fs: FileSystem, partition: Path): Seq[String] =
-    listVersions(fs, partition).sorted(Ordering[Long].reverse)
-      .iterator
-      .flatMap(v => parseFull(fs, manifestPath(partition, v)))
-      .nextOption()
-      .map(_.dvs).getOrElse(Nil)
+    headState(fs, partition).fold(Seq.empty[String])(_.dvs)
 
   /** The ACTIVE deletion-vector sidecars at an EXPLICIT committed
     * version (empty for a torn/absent slot) — [[currentDvs]]'s
     * time-travel twin; a snapshot replayer must refuse a version whose
     * sidecars it cannot subtract. */
   def dvsAt(fs: FileSystem, partition: Path, version: Long): Seq[String] =
-    parseFull(fs, manifestPath(partition, version))
-      .map(_.dvs).getOrElse(Nil)
+    stateAt(fs, partition, version).fold(Seq.empty[String])(_.dvs)
 
   /** The committed writer-transaction watermarks of one partition
     * (`T <appId> <version>` lines — the public Delta `txn` action idea):
@@ -450,11 +548,7 @@ object ManifestCommit {
     * before committing and skips versions at or below its watermark —
     * exactly-once sinks without any sink-side metadata log. */
   def currentTxns(fs: FileSystem, partition: Path): Map[String, Long] =
-    listVersions(fs, partition).sorted(Ordering[Long].reverse)
-      .iterator
-      .flatMap(v => parseFull(fs, manifestPath(partition, v)))
-      .nextOption()
-      .map(_.txns).getOrElse(Map.empty)
+    headState(fs, partition).fold(Map.empty[String, Long])(_.txns)
 
   /** Highest committed version for one writer app, if any. */
   def lastTxnVersion(fs: FileSystem, partition: Path,
@@ -466,18 +560,12 @@ object ManifestCommit {
     * evolving [[applyChangesDV]]). Carried forward by every commit, so
     * the HEAD manifest answers in one driver-side GET. */
   def currentSchemaJson(fs: FileSystem, partition: Path): Option[String] =
-    listVersions(fs, partition).sorted(Ordering[Long].reverse)
-      .iterator
-      .flatMap(v => parseFull(fs, manifestPath(partition, v)))
-      .nextOption()
-      .flatMap(_.schemaJson)
+    headState(fs, partition).flatMap(_.schemaJson)
 
   /** [[currentSchemaJson]] decoded to a [[StructType]]. */
   def currentSchema(fs: FileSystem,
       partition: Path): Option[org.apache.spark.sql.types.StructType] =
-    currentSchemaJson(fs, partition).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    headState(fs, partition).flatMap(_.schema)
 
   /** The RECORDED schema as of `version` (None when that manifest is
     * pruned or predates schema recording) — what a time-travel read
@@ -485,10 +573,7 @@ object ManifestCommit {
     * exist then and must not surface NULL-filled. */
   def schemaAt(fs: FileSystem, partition: Path,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
-    parseFull(fs, manifestPath(partition, version))
-      .flatMap(_.schemaJson)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    stateAt(fs, partition, version).flatMap(_.schema)
 
   /** How many of the newest live files' parquet footers a schema
     * INFERENCE (no recorded schema) may touch. Newest-bounded for the
@@ -561,7 +646,8 @@ object ManifestCommit {
       next: org.apache.spark.sql.types.StructType,
       allowDrop: Set[String] = Set.empty,
       allowWiden: Boolean = false): Snapshot = {
-    currentSchema(fs, partition).foreach { prev =>
+    val recorded = currentSchema(fs, partition)
+    recorded.foreach { prev =>
       val nf = next.map(f => f.name -> f.dataType).toMap
       prev.foreach { f =>
         require(nf.get(f.name).contains(f.dataType) ||
@@ -574,8 +660,7 @@ object ManifestCommit {
             "explicit allowDrop/allowWiden escapes)")
       }
     }
-    val prevNames = currentSchema(fs, partition)
-      .map(_.fieldNames.toSet).getOrElse(Set.empty)
+    val prevNames = recorded.map(_.fieldNames.toSet).getOrElse(Set.empty)
     // added columns forced nullable: pre-evolution rows read NULL, and
     // a non-nullable declaration would silently zero them
     val sane = org.apache.spark.sql.types.StructType(next.map(f =>
@@ -702,7 +787,7 @@ object ManifestCommit {
       // PUTs are atomic, so there a parse failure is always a true
       // torn write and the stability gate only delays its reclaim.
       val key = p.toString
-      if (parse(fs, p).nonEmpty) {
+      if (parseFull(fs, p).nonEmpty) {
         tornSeen.remove(key) // in-flight writer finished: valid conflict
         false
       } else {
@@ -763,7 +848,7 @@ object ManifestCommit {
   private def reclaimTornSlot(fs: FileSystem, p: Path, key: String,
       createExclusive: () => Boolean): Boolean =
     reclaimLock.synchronized {
-      if (parse(fs, p).nonEmpty) { // an in-process racer already reclaimed
+      if (parseFull(fs, p).nonEmpty) { // an in-process racer already reclaimed
         tornSeen.remove(key); return false
       }
       val aside = new Path(p.getParent,
@@ -773,7 +858,7 @@ object ManifestCommit {
         catch { case _: java.io.IOException => false }
       tornSeen.remove(key)
       if (!won) return createExclusive() // cross-process racer took it
-      if (parse(fs, aside).isEmpty) {
+      if (parseFull(fs, aside).isEmpty) {
         fs.delete(aside, false) // a torn write holds nothing worth keeping
         createExclusive()
       } else {
@@ -837,7 +922,12 @@ object ManifestCommit {
     * log exists, commit v1 listing the currently visible data files.
     * Idempotent; returns the (possibly pre-existing) current snapshot. */
   def bootstrap(fs: FileSystem, partition: Path): Snapshot =
-    currentSnapshot(fs, partition).getOrElse {
+    bootstrapState(fs, partition).snapshot
+
+  /** [[bootstrap]] answering with the whole committed head state — one
+    * log LIST + one parse when the log already exists. */
+  private def bootstrapState(fs: FileSystem, partition: Path): HeadState =
+    headState(fs, partition).getOrElse {
       val files =
         if (fs.exists(partition))
           fs.listStatus(partition).toIndexedSeq
@@ -845,8 +935,8 @@ object ManifestCommit {
             .map(_.getPath.getName)
         else Nil
       tryCommit(fs, partition, 1L, files)
-      // whether we won or a racer did, the current snapshot is the truth
-      currentSnapshot(fs, partition)
+      // whether we won or a racer did, the current state is the truth
+      headState(fs, partition)
         .getOrElse(sys.error(s"manifest bootstrap failed for $partition"))
     }
 
@@ -863,12 +953,8 @@ object ManifestCommit {
     var attempt = 0
     while (attempt < maxAttempts) {
       // one LIST + one parse per attempt serves every carried-forward
-      // facet (the per-facet accessors would each re-LIST and re-parse)
-      val head = headState(fs, partition).getOrElse {
-        bootstrap(fs, partition)
-        headState(fs, partition)
-          .getOrElse(sys.error(s"manifest bootstrap failed for $partition"))
-      }
+      // facet
+      val head = bootstrapState(fs, partition)
       val snap = head.snapshot
       // idempotent-writer guard (the Delta txn semantic): a version at
       // or below the app's committed watermark is ALREADY in the table
@@ -942,11 +1028,7 @@ object ManifestCommit {
     var attempt = 0
     while (attempt < maxAttempts) {
       // one LIST + one parse per attempt (see appendFiles)
-      val head = headState(fs, partition).getOrElse {
-        bootstrap(fs, partition)
-        headState(fs, partition)
-          .getOrElse(sys.error(s"manifest bootstrap failed for $partition"))
-      }
+      val head = bootstrapState(fs, partition)
       val snap = head.snapshot
       // idempotent-writer guard (the appendFiles semantic): a version at
       // or below the app's committed watermark is ALREADY in the table —
@@ -1010,8 +1092,8 @@ object ManifestCommit {
     val versions = listVersions(fs, partition)
     if (versions.isEmpty || !fs.exists(partition)) return Nil
     val parsed = versions.flatMap(v => parseFull(fs, manifestPath(partition, v)))
-    val live = currentSnapshot(fs, partition).map(_.files.toSet).getOrElse(Set.empty) ++
-      currentDvs(fs, partition) // active sidecars are as live as A files
+    // active sidecars are as live as A files
+    val live = liveAndDvs(fs, partition)
     val referenced = parsed.flatMap(_.live.map(_._1)).toSet ++
       parsed.flatMap(_.removed.map(_._2)) ++
       parsed.flatMap(_.dvs) // a retained version may still read its DVs
@@ -1043,8 +1125,8 @@ object ManifestCommit {
     val snap = bootstrap(fs, partition)
     val versions = listVersions(fs, partition)
     val tombstoned = versions
-      .flatMap(v => parse(fs, manifestPath(partition, v)))
-      .flatMap(_._2.map(_._2)).toSet
+      .flatMap(v => parseFull(fs, manifestPath(partition, v)))
+      .flatMap(_.removed.map(_._2)).toSet
     val known = snap.files.toSet ++ tombstoned
     val fresh =
       if (fs.exists(partition))
@@ -1105,7 +1187,8 @@ object ManifestCommit {
   def recordStats(spark: SparkSession, partition: Path,
       cols: Seq[String], only: Option[Set[String]] = None): Snapshot = {
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
+    val head = bootstrapState(fs, partition)
+    val snap = head.snapshot
     // `only` bounds the footer sweep to the batch that was just written
     // (survivors keep their committed stats through the merge in
     // appendFiles) — at scale the sweep must track the BATCH, not the
@@ -1120,7 +1203,7 @@ object ManifestCommit {
     // merge at COLUMN granularity: recording stats for a new column
     // must not drop a file's previously-committed columns (appendFiles
     // merges whole file entries, so the column merge happens here)
-    val prior = currentFileStats(fs, partition)
+    val prior = head.stats
     val stats = fresh.map { case (n, ss) =>
       n -> (prior.getOrElse(n, Nil)
         .filterNot(p => ss.exists(_.col == p.col)) ++ ss)
@@ -1129,6 +1212,11 @@ object ManifestCommit {
     appendFiles(fs, partition, Nil, stats = stats)
   }
 
+  /** The head's live data files plus its active sidecars. */
+  private def liveAndDvs(fs: FileSystem, partition: Path): Set[String] =
+    headState(fs, partition).fold(Set.empty[String])(h =>
+      h.files.toSet ++ h.dvs)
+
   /** Every file name the retained log still references, split into the
     * current live set and the tombstoned-awaiting-gc set — the "known
     * files" view fsck and audit tooling reconcile a listing against. */
@@ -1136,18 +1224,9 @@ object ManifestCommit {
       partition: Path): (Set[String], Set[String]) = {
     val parsed = listVersions(fs, partition)
       .flatMap(v => parseFull(fs, manifestPath(partition, v)))
-    val live = currentSnapshot(fs, partition)
-      .map(_.files.toSet).getOrElse(Set.empty) ++
-      currentDvs(fs, partition) // active sidecars are expected present
+    val live = liveAndDvs(fs, partition) // sidecars are expected present
     (live, parsed.flatMap(_.removed.map(_._2)).toSet -- live)
   }
-
-  /** The committed snapshot at an EXPLICIT version (None if that version
-    * was never validly committed) — time travel's resolver. */
-  def snapshotAt(fs: FileSystem, partition: Path,
-      version: Long): Option[Snapshot] =
-    parse(fs, manifestPath(partition, version))
-      .map(p => Snapshot(version, p._1.map(_._1)))
 
   /** The commit history of one partition over `(fromVersion, toVersion]`,
     * oldest first: per valid commit, its kind, the file names it ADDED
@@ -1223,10 +1302,10 @@ object ManifestCommit {
       version: Long): DataFrame = {
     val root = new Path(tableRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = snapshotAt(fs, root, version).getOrElse(
+    val state = stateAt(fs, root, version).getOrElse(
       sys.error(s"no committed version $version under $tableRoot"))
-    require(snap.files.nonEmpty, s"version $version is empty")
-    val dvs = dvsAt(fs, root, version).map { n =>
+    require(state.files.nonEmpty, s"version $version is empty")
+    val dvs = state.dvs.map { n =>
       val p = new Path(root, n)
       require(fs.exists(p),
         s"version $version of $tableRoot references collected sidecar " +
@@ -1234,7 +1313,7 @@ object ManifestCommit {
       p
     }
     readMinusDvs(spark, tableRoot,
-      snap.files.map(new Path(root, _)), dvs)
+      state.files.map(new Path(root, _)), dvs)
   }
 
   /** Targeted delete (the GDPR / right-to-be-forgotten rewrite): remove
@@ -1250,20 +1329,16 @@ object ManifestCommit {
       lo: Long, hi: Long, statsCols: Seq[String]): (Int, Int) = {
     import org.apache.spark.sql.functions.col
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
-    val stats = currentFileStats(fs, partition)
-    val touched = snap.files.filter { n =>
-      stats.getOrElse(n, Nil).find(_.col == keyCol)
-        .forall(s => s.max >= lo && s.min <= hi)
-    }
-    if (touched.isEmpty) return (0, snap.files.size)
+    val head = bootstrapState(fs, partition)
+    val touched = Pruning.range(keyCol, lo, hi).kept(head)
+    if (touched.isEmpty) return (0, head.files.size)
     // merge-on-read guard: a raw rewrite of a DV-named file would copy
     // the DV-deleted rows into the produced files under new names and
     // positions — the carried sidecar goes inert and the rows
     // RESURRECT. Refuse and point at applyDvs; sidecars naming only
     // untouched files stay valid (those files survive this commit)
     // and are pinned via expectedDvs below.
-    val dvNames = currentDvs(fs, partition)
+    val dvNames = head.dvs
     if (dvNames.nonEmpty) {
       val named = spark.read
         .parquet(dvNames.map(new Path(partition, _).toString): _*)
@@ -1423,9 +1498,9 @@ object ManifestCommit {
       .getOrElse(Long.MaxValue)
     val pruned = versions.dropRight(keepLast)
       .filter(_ < leaseFloor).filter { v =>
-      parse(fs, manifestPath(partition, v)) match {
-        case Some((_, removed)) =>
-          removed.forall { case (_, n) =>
+      parseFull(fs, manifestPath(partition, v)) match {
+        case Some(pf) =>
+          pf.removed.forall { case (_, n) =>
             !fs.exists(new Path(partition, n)) }
         case None => true // torn manifest: never a valid commit
       }
@@ -1619,7 +1694,8 @@ object ManifestCommit {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import spark.implicits._
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
+    val head = bootstrapState(fs, partition)
+    val snap = head.snapshot
     val paths = snap.files.map(new Path(partition, _).toString)
     val perFile = spark.read.parquet(paths: _*)
       .select(input_file_name().as("f"),
@@ -1636,7 +1712,7 @@ object ManifestCommit {
     }.toMap.filter { case (n, _) => snap.files.contains(n) }
     // column-granular merge, as in recordStats: a second column's bloom
     // must not drop the first's
-    val prior = currentFileBlooms(fs, partition)
+    val prior = head.blooms
     val blooms = fresh.map { case (n, bs) =>
       n -> (prior.getOrElse(n, Nil).filterNot(_.col == column) ++ bs)
     }
@@ -1680,12 +1756,8 @@ object ManifestCommit {
       lo: Long, hi: Long): (Int, Long) = {
     import org.apache.spark.sql.functions.col
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
-    val stats = currentFileStats(fs, partition)
-    val touched = snap.files.filter { n =>
-      stats.getOrElse(n, Nil).find(_.col == keyCol)
-        .forall(s => s.max >= lo && s.min <= hi)
-    }
+    val head = bootstrapState(fs, partition)
+    val touched = Pruning.range(keyCol, lo, hi).kept(head)
     if (touched.isEmpty) return (0, 0L)
     // the doomed positions: only keyCol + the row index leave the scan.
     // The RECORDED schema drives the read when present — after a
@@ -1693,8 +1765,7 @@ object ManifestCommit {
     // footer inference would pick one width at random (a narrow pick
     // then throws on the wide files); the recorded width promotes
     // every file exactly
-    val rdr = currentSchema(fs, partition)
-      .fold(spark.read)(spark.read.schema)
+    val rdr = head.schema.fold(spark.read)(spark.read.schema)
     val dv = rdr
       .parquet(touched.map(new Path(partition, _).toString): _*)
       .select(col("_metadata.file_name").as("file"),
@@ -1710,9 +1781,9 @@ object ManifestCommit {
     * generalized to any deterministic boolean `cond` over the data
     * columns (string equality, IN lists, LIKE prefixes, disjunctions
     * — whatever the SQL WHERE translated to). Same cost model: the
-    * scan reads only `statsRanges`-surviving files (conjunctive long
-    * bounds the caller extracted from the predicate; empty = all
-    * live files) and only the columns `cond` references plus the row
+    * scan reads only the files `pruning` keeps (the caller's
+    * [[Pruning]] of the predicate; [[Pruning.none]] = all live
+    * files) and only the columns `cond` references plus the row
     * index (Catalyst prunes the rest), the sidecar is O(deleted
     * rows), no data file moves, and the change feed replays the
     * commit from sidecar positions — no predicate needs recording.
@@ -1720,24 +1791,17 @@ object ManifestCommit {
     * WHERE. */
   def deleteWherePredicateDV(spark: SparkSession, partition: Path,
       cond: org.apache.spark.sql.Column,
-      statsRanges: Map[String, (Long, Long)] = Map.empty): (Int, Long) = {
+      pruning: Pruning = Pruning.none): (Int, Long) = {
     import org.apache.spark.sql.functions.col
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
-    val stats = currentFileStats(fs, partition)
-    val touched = snap.files.filter { n =>
-      statsRanges.forall { case (c, (lo, hi)) =>
-        stats.getOrElse(n, Nil).find(_.col == c)
-          .forall(s => s.max >= lo && s.min <= hi)
-      }
-    }
+    val head = bootstrapState(fs, partition)
+    val touched = pruning.kept(head)
     if (touched.isEmpty) return (0, 0L)
     // grafted names keep the projection collision-free when the data
     // itself carries `file`/`pos` columns; the recorded schema drives
     // the read (see deleteWhereDV — mixed-width files after a widening
     // ALTER must promote, not race footer inference)
-    val dv = currentSchema(fs, partition)
-      .fold(spark.read)(spark.read.schema)
+    val dv = head.schema.fold(spark.read)(spark.read.schema)
       .parquet(touched.map(new Path(partition, _).toString): _*)
       .select(col("_metadata.file_name").as("_graft_dv_file"),
         col("_metadata.row_index").as("_graft_dv_pos"), col("*"))
@@ -1921,11 +1985,14 @@ object ManifestCommit {
       txn: Option[(String, Long)] = None): (Int, Long) = {
     import org.apache.spark.sql.functions.{broadcast, col, max, min}
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
+    // one head read serves the txn guard, the schema check and the
+    // position scan's file pruning
+    val head = bootstrapState(fs, partition)
+    val snap = head.snapshot
     txn.foreach { case (app, v) =>
       // replayed batch: already durable — nothing to stage, move, or
       // commit (the commit path re-checks, this just skips the work)
-      if (currentTxns(fs, partition).get(app).exists(_ >= v)) return (0, 0L)
+      if (head.txns.get(app).exists(_ >= v)) return (0, 0L)
     }
     val upd = inserts.cache()
     val delK = deleteKeys.select(col(deleteKeys.columns.head).as("__k"))
@@ -1948,7 +2015,7 @@ object ManifestCommit {
       val evolvedSchemaJson: Option[String] =
         if (snap.files.isEmpty) Some(upd.schema.json)
         else {
-          val tableSchema = currentSchema(fs, partition).getOrElse {
+          val tableSchema = head.schema.getOrElse {
             spark.read.option("mergeSchema", "true")
               .parquet(snap.files.takeRight(SchemaFooterBound)
                 .map(new Path(partition, _).toString): _*)
@@ -1983,31 +2050,23 @@ object ManifestCommit {
       // of the table. A CDC batch's key set is bounded, so when it fits
       // the driver comfortably, prune EXACTLY: keep a file only if some
       // batch key falls inside its committed [min, max] (one binary
-      // search per file against the sorted key array). Oversized
-      // batches fall back to the box — still a superset, never wrong.
+      // search per file against the sorted key array — the key set is
+      // a [[Pruning]] probe). Oversized batches fall back to the box —
+      // still a superset, never wrong. Stats only: a bloom probe per
+      // batch key per file would cost more than the scan it saves.
       val maxDriverKeys = 100000L
       val touched =
         if (kb.isNullAt(0)) Seq.empty[String]
         else {
-          val (lo, hi) = (kb.getLong(0), kb.getLong(1))
-          val stats = currentFileStats(fs, partition)
-          val nKeys = keys.count()
-          val probe: Option[Array[Long]] =
-            if (nKeys > maxDriverKeys) None
-            else Some(keys.select(col("__k").cast("long"))
-              .filter(col("__k").isNotNull)
-              .collect().map(_.getLong(0)).sorted)
-          def anyKeyIn(mn: Long, mx: Long): Boolean = probe match {
-            case None => mx >= lo && mn <= hi
-            case Some(ks) =>
-              val i = java.util.Arrays.binarySearch(ks, mn)
-              val at = if (i >= 0) i else -i - 1 // first key >= mn
-              at < ks.length && ks(at) <= mx
-          }
-          snap.files.filter { n =>
-            stats.getOrElse(n, Nil).find(_.col == keyCol)
-              .forall(s => anyKeyIn(s.min, s.max))
-          }
+          val pruning =
+            if (keys.count() > maxDriverKeys)
+              Pruning.range(keyCol, kb.getLong(0), kb.getLong(1))
+            else Pruning(Map.empty, Map(keyCol ->
+              keys.select(col("__k").cast("long"))
+                .filter(col("__k").isNotNull)
+                .collect().map(_.getLong(0)).sorted))
+          val stats = head.stats
+          snap.files.filter(n => pruning.keeps(stats.getOrElse(n, Nil), Nil))
         }
       val runId = java.util.UUID.randomUUID().toString.take(8)
       // doomed positions: stats-pruned scan of (keyCol, row index),
@@ -2123,8 +2182,9 @@ object ManifestCommit {
       statsCols: Seq[String] = Nil): (Int, Int) = {
     import org.apache.spark.sql.functions.col
     val fs = partition.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = bootstrap(fs, partition)
-    val dvNames = currentDvs(fs, partition)
+    val head = bootstrapState(fs, partition)
+    val snap = head.snapshot
+    val dvNames = head.dvs
     if (dvNames.isEmpty) return (0, 0)
     val dvPaths = dvNames.map(new Path(partition, _))
     // only files a sidecar names need rewriting; the rest pass through

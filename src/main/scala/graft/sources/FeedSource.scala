@@ -365,7 +365,8 @@ private[sources] object FeedPlanner {
       }
     }
     if (s == FeedSource.BootstrapOffset) {
-      val snap = ManifestCommit.snapshotAt(fs, dir, e).getOrElse(
+      // one manifest parse serves the live set and its sidecars
+      val state = ManifestCommit.stateAt(fs, dir, e).getOrElse(
         sys.error(s"graft-feed: bootstrap version $e of $dir pruned " +
           "before the batch ran — restart the query"))
       // a merge-on-read snapshot composes the active sidecars INTO the
@@ -374,12 +375,11 @@ private[sources] object FeedPlanner {
       // positions, so a bare file replay never resurrects deleted rows
       // and a CDC consumer can stand up against a DV-carrying table
       // without an applyDvs/compact first
-      val dvPaths = ManifestCommit.dvsAt(fs, dir, e)
-        .map(n => new Path(dir, n).toString)
+      val dvPaths = state.dvs.map(n => new Path(dir, n).toString)
       val touched: Set[String] =
         if (dvPaths.isEmpty) Set.empty
-        else dvTouchedFiles(dvPaths, snap.files).toSet
-      return snap.files.map(n => FeedFilePartition(
+        else dvTouchedFiles(dvPaths, state.files).toSet
+      return state.files.map(n => FeedFilePartition(
         new Path(dir, n).toString, ChangeFeed.Insert, e, None,
         dvSidecars = if (touched.contains(n)) dvPaths else Nil,
         dvKeep = false))

@@ -30,6 +30,15 @@ object GraftBridge {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
       .location
 
+  /** A Catalyst predicate as the v1 source [[org.apache.spark.sql.sources
+    * .Filter]] Spark's own file scans push (DataSourceStrategy's
+    * translator is protected[sql]); None for a shape it cannot
+    * express. Top-level columns only. */
+  def translateFilter(e: Expression)
+      : Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
+
   /** DataFrame over an arbitrary logical plan (classic.Dataset.ofRows is
     * private[sql]). Used to wrap a LogicalRelation over the manifest
     * lake's custom FileIndex. */

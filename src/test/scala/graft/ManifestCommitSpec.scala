@@ -787,6 +787,38 @@ class ManifestCommitSpec extends SparkSpec {
     assert(dvT.filter($"k" < 10).count() == 0L)
   }
 
+  test("SQL scan planning reads each leaf's manifest once: a pushed " +
+      "point probe over three leaves with stats and blooms opens three " +
+      "manifests") {
+    import org.apache.spark.sql.sources.EqualTo
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    hc
+    val local = Files.createTempDirectory("graft-manifest-opens").toString
+    val root = s"objsim://$local/tbl"
+    val fs = objsimFs
+    (1 to 3).foreach { d =>
+      val leaf = new Path(s"$root/day=$d")
+      spark.range(100).select(($"id" + d * 1000L).as("k"),
+          ($"id" % 7).as("g"))
+        .repartition(2).write.parquet(leaf.toString)
+      ManifestCommit.bootstrap(fs, leaf)
+      ManifestCommit.recordStats(spark, leaf, Seq("k"))
+      ManifestCommit.recordBlooms(spark, leaf, "k")
+    }
+    val scan = new graft.lake.GraftSqlScan(root, StructType(Seq(
+      StructField("k", LongType), StructField("g", LongType),
+      StructField("day", IntegerType))), partCols = Seq("day"))
+    scan.pushFilters(Array(EqualTo("k", 2015L)))
+    ObjStoreSimFileSystem.manifestOpens.set(0)
+    val parts = scan.planInputPartitions()
+    assert(ObjStoreSimFileSystem.manifestOpens.get == 3,
+      s"${ObjStoreSimFileSystem.manifestOpens.get} manifest opens for " +
+        "three leaves — the live set, stats, blooms and sidecars must " +
+        "come from one read per leaf")
+    // day=1 and day=3 prune by stats; day=2 keeps the file holding 2015
+    assert(parts.nonEmpty)
+  }
+
   test("deletion vectors: NULL keys survive; adoption never eats a sidecar") {
     hc
     val local = Files.createTempDirectory("graft-manifest-dvnull").toString

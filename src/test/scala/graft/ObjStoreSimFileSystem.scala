@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileUtil, Path, RawLocalFileSystem}
 
 /** Simulated object store for the ManifestCommit specs: a local
   * filesystem whose RENAME IS NOT ATOMIC — it is per-object copy then
@@ -12,12 +12,23 @@ import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
   * exclusive create stands in for S3's conditional PUT (the one primitive
   * ManifestCommit's commit point requires).
   *
+  * Every `open` of a `*.manifest` path is counted
+  * ([[ObjStoreSimFileSystem.manifestOpens]]) — one open is one metadata
+  * GET on a real object store, so specs can pin a reader's per-leaf
+  * metadata cost.
+  *
   * Registered under the `objsim://` scheme via
   * `fs.objsim.impl = graft.ObjStoreSimFileSystem` in the test session.
   */
 class ObjStoreSimFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "objsim"
   override def getUri: URI = URI.create("objsim:///")
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getName.endsWith(".manifest"))
+      ObjStoreSimFileSystem.manifestOpens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
 
   override def rename(src: Path, dst: Path): Boolean = {
     val st =
@@ -47,6 +58,9 @@ object ObjStoreSimFileSystem {
     * N more per-object rename steps (copy and delete each count as one);
     * -1 disarms. */
   @volatile var fuse: Int = -1
+
+  /** Opens of `*.manifest` paths since the last reset. */
+  val manifestOpens = new java.util.concurrent.atomic.AtomicInteger()
 
   final class SimulatedCrash extends RuntimeException("simulated object-store crash")
 

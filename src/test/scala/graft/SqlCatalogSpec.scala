@@ -319,6 +319,14 @@ class SqlCatalogSpec extends SparkSpec {
       .head.execute().getNumPartitions
     assert(parts2 == 0,
       s"a bloom-rejected point probe must plan zero files, got $parts2")
+    // an IN list is pushed and probes the same stats and blooms: both
+    // values sit inside a file's [min, max], neither is in the data
+    val q3 = ss.sql("SELECT g FROM g.bloomed WHERE k IN (15, 25)")
+    assert(q3.collect().isEmpty)
+    val parts3 = q3.queryExecution.executedPlan.collectLeaves()
+      .head.execute().getNumPartitions
+    assert(parts3 == 0,
+      s"a bloom-rejected IN list must plan zero files, got $parts3")
   }
 
   test("streaming sink crash-replay: a visible un-manifested orphan " +
@@ -999,9 +1007,35 @@ class SqlCatalogSpec extends SparkSpec {
       concat(lit("t-"), $"id".cast("string")).as("tag"))
       .createOrReplaceTempView("pvok")
     ss.sql("INSERT INTO g.pv SELECT * FROM pvok")
-    val got = ss.sql("SELECT k, tag FROM g.pv").collect()
+    def pv = ss.sql("SELECT k, tag FROM g.pv").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
+    val got = pv
     assert(got == (0L until 3L).map(k => (k, s"t-$k")).toSet, s"$got")
+    // the fan-out writer (dynamic INSERT OVERWRITE) renders through the
+    // same one function and refuses the same values
+    ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try {
+      val eD = intercept[Exception](
+        ss.sql("INSERT OVERWRITE g.pv SELECT * FROM pvbad"))
+      assert(msgs(eD).contains("path-literal"), msgs(eD))
+    } finally
+      ss.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    // so does ADD PARTITION
+    val eA = intercept[Exception](
+      ss.sql("ALTER TABLE g.pv ADD PARTITION (tag='a:b')"))
+    assert(msgs(eA).contains("path-literal"), msgs(eA))
+    assert(pv == got, "a refused overwrite or ADD PARTITION changes nothing")
+    // and the delta writer: an UPDATE moving a keyed row into a
+    // path-unsafe leaf
+    ss.sql("CREATE TABLE g.pvk (k BIGINT, tag STRING) " +
+      "PARTITIONED BY (tag) TBLPROPERTIES ('key'='k')")
+    ss.sql("INSERT INTO g.pvk SELECT * FROM pvok")
+    val eU = intercept[Exception](
+      ss.sql("UPDATE g.pvk SET tag = 'a:b' WHERE k = 0"))
+    assert(msgs(eU).contains("path-literal"), msgs(eU))
+    val gotK = ss.sql("SELECT k, tag FROM g.pvk").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(gotK == got, s"a refused UPDATE changes nothing: $gotK")
   }
 
   test("DROP COLUMN is metadata-only: pre- and post-drop files serve " +
