@@ -2,8 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Timed run of the query registry: warm-up, then each query min-of-2,
-  * one JSON line to stdout and BENCH_LOCAL.json. Query names as args
-  * restrict the run to those queries (stdout only), e.g.
+  * each run one full materialization (a noop write). One compact JSON
+  * summary line goes to stdout; a full run also writes every query's time
+  * to BENCH_LOCAL.json. Query names as args restrict the run to those
+  * queries (stdout only), e.g.
   *   SPARK_GRAFT_CPUS=32 runMain graft.Bench q189_prefix_join [q...] */
 object Bench {
   private def readLoadavg: String =
@@ -35,11 +37,17 @@ object Bench {
         session: org.apache.spark.sql.SparkSession = spark): Double = {
       val t0 = System.nanoTime()
       // the query's cached relations live and die in its own scope, so
-      // queries don't degrade each other through leftover storage memory
-      val ok = try { graft.ops.TextKit.withCacheScope(fn(session, sfDir).count()); true }
-        catch { case t: Throwable =>
-          System.err.println(s"bench query failed: ${t.getClass.getName}: ${t.getMessage}")
-          false }
+      // queries don't degrade each other through leftover storage memory.
+      // The timed action materializes every column with no I/O (a noop
+      // write), the rows Verify writes: a count() would let Catalyst
+      // prune the projections it never reads.
+      val ok = try {
+        graft.ops.TextKit.withCacheScope(fn(session, sfDir).write
+          .format("noop").mode("overwrite").save())
+        true
+      } catch { case t: Throwable =>
+        System.err.println(s"bench query failed: ${t.getClass.getName}: ${t.getMessage}")
+        false }
       val dt = (System.nanoTime() - t0) / 1e9
       if (ok) dt else -1.0
     }
@@ -78,26 +86,24 @@ object Bench {
     val failed = results.collect { case (k, v) if v < 0 => s"\"$k\"" }
     val total = results.map(_._2).filter(_ >= 0).sum
     // Host load (1/5/15 min) rides in the artifact so a contended
-    // measurement window is adjudicable from the JSON alone — the
-    // driver's stdout capture has clipped past rounds to a 2000-char
-    // tail, so the full line is ALSO written to BENCH_LOCAL.json in the
-    // repo (snapshot-committed per round).
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","loadavg_start":"$loadavgStart","loadavg_end":"$readLoadavg"}"""
-    println(line)
+    // measurement window is adjudicable from the JSON alone. A full run
+    // writes the full per-query line to BENCH_LOCAL.json in the repo.
+    val loadavgEnd = readLoadavg
+    val tail = s""""failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","loadavg_start":"$loadavgStart","loadavg_end":"$loadavgEnd"}"""
     if (args.isEmpty) try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
+      java.nio.file.Paths.get("BENCH_LOCAL.json"),
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$tail""" + "\n")
     catch { case t: Throwable =>
       System.err.println(s"BENCH_LOCAL.json write failed: ${t.getMessage}") }
-    // The driver snapshots only a ~2000-char stdout TAIL; the full line
-    // above (~5 KB at 137 queries) gets clipped mid-object, which is how
-    // rounds 6 and 7 lost their headline numbers (parsed:null). Print a
-    // compact self-contained summary LAST so the tail always carries a
-    // complete JSON object: total, failure list, load evidence, the ten
-    // slowest per-query numbers, and a pointer to the committed full
-    // artifact.
+    // A reader that keeps only a ~2000-char stdout tail would clip the
+    // full line (~5 KB at 137 queries) mid-object, so stdout gets ONE
+    // compact self-contained line, printed last: total, failure list,
+    // load evidence and the ten slowest per-query numbers.
     val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"10 slowest of ${results.size}; full per-query numbers in BENCH_LOCAL.json (committed)","failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","loadavg_start":"$loadavgStart","loadavg_end":"$readLoadavg"}""")
+    val note = s"10 slowest of ${results.size}" +
+      (if (args.isEmpty) "; full per-query numbers in BENCH_LOCAL.json" else "")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"$note",$tail""")
     spark.stop()
   }
 }

@@ -1,62 +1,37 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Exact integer dot product of two `array<bigint>` columns as a native
-  * Catalyst expression with codegen.
+  * [[Kernel]] (`long_array_dot`).
   *
   * Why not `aggregate(zip_with(...))`: higher-order functions evaluate a
   * lambda per element through interpreted dispatch — fine once per row,
   * ruinous inside an O(n^2) similarity join (128 lambda evals per candidate
-  * pair). This expression is a tight primitive loop in both interpreted and
-  * generated code, keeping the whole pair-scoring stage inside
-  * whole-stage codegen. Semantics match the SQL the DuckDB oracle runs:
-  * sum over i of a[i]*b[i] (null if either array is null; treats length
-  * mismatch as min-length, which callers never hit).
+  * pair). This kernel is a tight primitive loop, keeping the whole
+  * pair-scoring stage inside whole-stage codegen. Semantics match the SQL
+  * the DuckDB oracle runs: sum over i of a[i]*b[i], null if either array
+  * is null. Arrays of different lengths fail loudly.
   */
-case class LongArrayDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+object LongArrayDot {
 
-  override def dataType: DataType = LongType
-  override def prettyName: String = "long_array_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  def dot(x: ArrayData, y: ArrayData): Long = {
+    val n = x.numElements()
+    require(n == y.numElements(),
+      s"long_array_dot: array lengths differ ($n vs ${y.numElements()})")
     var s = 0L
     var i = 0
     while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+  def apply(a: Expression, b: Expression): Expression =
+    Kernel("long_array_dot", this, "dot", LongType, Seq(a, b))
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongArrayDot =
-    copy(left = newLeft, right = newRight)
-}
-
-object LongArrayDot {
   def apply(a: Column, b: Column): Column =
-    GraftBridge.column(LongArrayDot(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
+    GraftBridge.column(apply(GraftBridge.expression(a), GraftBridge.expression(b)))
 }

@@ -3,52 +3,30 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The engine's 60-bit stable string hash as one native expression:
-  * numerically identical to `conv(substring(md5(x), 1, 15), 16, 10)` — the
-  * value of the first 15 hex digits of the MD5, i.e. the first 7.5 digest
-  * bytes big-endian — but computed straight from the digest bytes, skipping
-  * the hex-string materialization and the radix-parsing `conv` walk. This
-  * chain runs once per (doc, token, seed) in the minhash/simhash/
-  * fingerprint family, so the string round-trip was measurable. DuckDB
-  * oracle equivalent unchanged: `('0x' || substr(md5(x),1,15))::BIGINT`.
-  *
-  * Codegen emits a call to the static [[Md5Long60.hash]] helper (the
-  * companion's static forwarder), so the expression stays INSIDE
-  * whole-stage codegen — a CodegenFallback here would split the span and
-  * route every shingle row through an interpreted projection boundary on
-  * the family's hottest path.
+/** The engine's 60-bit stable string hash as one native [[Kernel]]
+  * (`md5_long60`): numerically identical to
+  * `conv(substring(md5(x), 1, 15), 16, 10)` — the value of the first 15
+  * hex digits of the MD5, i.e. the first 7.5 digest bytes big-endian — but
+  * computed straight from the digest bytes, skipping the hex-string
+  * materialization and the radix-parsing `conv` walk. This chain runs once
+  * per (doc, token, seed) in the minhash/simhash/fingerprint family, so the
+  * string round-trip was measurable. DuckDB oracle equivalent unchanged:
+  * `('0x' || substr(md5(x),1,15))::BIGINT`.
   */
-case class Md5Long60(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_long60"
-
-  override def nullSafeEval(input: Any): Any =
-    Md5Long60.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5Long60.hash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Long60 =
-    copy(child = newChild)
-}
-
 object Md5Long60 {
   // MessageDigest.digest(bytes) resets the instance after each call, so a
   // cached per-thread instance is safe for repeated single-shot use; a JCA
-  // provider lookup per row would tax the hot path this expression exists
+  // provider lookup per row would tax the hot path this kernel exists
   // to speed up
   private[functions] val digest: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** First 15 hex digits of md5(s) as a non-negative long; called from
-    * both the interpreted eval and the generated code. */
+  /** First 15 hex digits of md5(s) as a non-negative long. */
   def hash(input: UTF8String): Long = {
     val d = digest.get().digest(input.getBytes)
     // first 15 hex digits = bytes 0..6 fully + high nibble of byte 7
@@ -58,6 +36,9 @@ object Md5Long60 {
     (v << 4) | ((d(7) & 0xf0L) >> 4)
   }
 
+  def apply(c: Expression): Expression =
+    Kernel("md5_long60", this, "hash", LongType, Seq(c))
+
   def apply(c: Column): Column =
-    GraftBridge.column(Md5Long60(GraftBridge.expression(c)))
+    GraftBridge.column(apply(GraftBridge.expression(c)))
 }

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Product-quantization per-row kernels as native expressions.
+/** Product-quantization per-row kernels as native [[Kernel]]s.
   *
   * The codebook is bounded driver-side training state (m x codesPerSub x
   * subDim longs — KBs), so the per-row argmin/distance-table work is pure
@@ -18,9 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * compile per plan shape, every entry re-slices the subvector into a
   * fresh ArrayData, and the common `|sqv|^2` term evaluates per entry
   * unless CSE catches all 16 copies. Here each kernel is ONE tight loop
-  * over primitive arrays behind a static helper call, so the surrounding
-  * projection stays a small whole-stage span (the [[WordShingles]]
-  * precedent).
+  * over primitive arrays, so the surrounding projection stays a small
+  * whole-stage span.
   *
   * INTEGER MATH AND TIE-BREAKS ARE BIT-IDENTICAL to the expression form
   * (dist = |sqv|^2 + |v|^2 - 2·(sqv·v), all exact longs; argmin ties
@@ -30,8 +26,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   */
 object PqOps {
 
-  /** Frozen per-plan codebook state, shipped to executors once as a
-    * codegen reference object: per subspace the ascending code ids, their
+  /** Frozen per-plan codebook state, passed to the kernels as one
+    * `ObjectType` literal (one reference object in generated code): per
+    * subspace the ascending code ids, their
     * codebook vectors (flattened), and the plan-time-folded |v|^2 norms.
     * `slots` maps sub*codesPerSub+code -> flat entry index (-1 = absent:
     * an under-filled sample on a tiny corpus). */
@@ -77,10 +74,18 @@ object PqOps {
     new State(m, subDim, codesPerSub, subStart, codes, vecs, norms, slots)
   }
 
+  /** A vector must hold exactly m*subDim elements: a short one would
+    * read past its last element. */
+  private def checkLength(kernel: String, vec: ArrayData, st: State): Unit =
+    require(vec.numElements() == st.m * st.subDim,
+      s"PqOps.$kernel: vector has ${vec.numElements()} elements, expected " +
+        s"m*subDim = ${st.m * st.subDim}")
+
   /** argmin code per subspace of `vec` (length m*subDim): the PQ encode.
     * Ties break toward the smaller code id (codes iterate ascending and
     * only a strictly smaller distance replaces the best). */
   def encode(vec: ArrayData, st: State): GenericArrayData = {
+    checkLength("encode", vec, st)
     val out = new Array[Any](st.m)
     var s = 0
     while (s < st.m) {
@@ -117,6 +122,7 @@ object PqOps {
     * as one lookup array indexed sub*codesPerSub+code; absent slots are
     * NULL (the expression form's map-lookup miss). */
   def adcTable(vec: ArrayData, st: State): GenericArrayData = {
+    checkLength("adcTable", vec, st)
     val out = new Array[Any](st.m * st.codesPerSub)
     var s = 0
     while (s < st.m) {
@@ -145,46 +151,16 @@ object PqOps {
     new GenericArrayData(out)
   }
 
+  /** `codes` array (one argmin code id per subspace) of a quantized
+    * vector against the frozen codebook. */
   def encodeColumn(vec: Column, st: State): Column =
-    GraftBridge.column(PqEncodeCodes(GraftBridge.expression(vec), st))
+    Kernel.column("pq_encode_codes", this, "encode",
+      ArrayType(LongType, containsNull = false), Seq(vec), st)
 
+  /** Per-row ADC lookup table (m x codesPerSub exact integer distances,
+    * absent slots null) of a quantized vector against the frozen
+    * codebook. */
   def adcTableColumn(vec: Column, st: State): Column =
-    GraftBridge.column(PqAdcTable(GraftBridge.expression(vec), st))
-}
-
-/** `codes` array (one argmin code id per subspace) of a quantized
-  * vector against the frozen literal codebook. */
-case class PqEncodeCodes(child: Expression, state: PqOps.State)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pq_encode_codes"
-  override def nullSafeEval(input: Any): Any =
-    PqOps.encode(input.asInstanceOf[ArrayData], state)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val st = ctx.addReferenceObj("pqState", state,
-      classOf[PqOps.State].getName)
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqOps.encode($c, $st)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeCodes =
-    copy(child = newChild)
-}
-
-/** Per-row ADC lookup table (m x codesPerSub exact integer distances,
-  * absent slots null) of a quantized vector against the frozen literal
-  * codebook. */
-case class PqAdcTable(child: Expression, state: PqOps.State)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "pq_adc_table"
-  override def nullSafeEval(input: Any): Any =
-    PqOps.adcTable(input.asInstanceOf[ArrayData], state)
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val st = ctx.addReferenceObj("pqState", state,
-      classOf[PqOps.State].getName)
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqOps.adcTable($c, $st)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqAdcTable =
-    copy(child = newChild)
+    Kernel.column("pq_adc_table", this, "adcTable",
+      ArrayType(LongType, containsNull = true), Seq(vec), st)
 }

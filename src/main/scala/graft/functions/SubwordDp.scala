@@ -2,17 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types._
 
 /** Per-word subword segmentation — BOTH objectives of the Unigram kit
   * (Viterbi integer-lexicographic and WordPiece greedy
-  * longest-match-first) as ONE native row-local kernel over the word's
-  * own matched lexicon pieces.
+  * longest-match-first) as ONE native row-local [[Kernel]]
+  * (`subword_dp`) over the word's own matched lexicon pieces.
   *
   * Replaces the per-position DP ROUNDS (maxWordLen rounds of a
   * frontier--lexicon equi-join + min/argmax aggregation, each round a
@@ -34,38 +31,19 @@ import org.apache.spark.sql.types._
   *    NULL in that objective's fields — the caller raises loudly, as
   *    the round form did (null-cost raise_error / unfinished require).
   *
-  * Children: (wordLen: int, pieces: array<struct<pos:int, len:int,
+  * Columns: (wordLen: int, pieces: array<struct<pos:int, len:int,
   * freq:long>>), pos 0-based, piece = word[pos, pos+len). The pieces
   * array arrives in ARBITRARY collect_list order; the kernel indexes by
   * (pos, len), so order never matters. */
-case class SubwordDp(left: Expression, right: Expression,
-    big: Long, freqClamp: Long, maxPieceLen: Int)
-    extends BinaryExpression {
+object SubwordDp {
 
-  override def dataType: DataType = StructType(Seq(
+  private val result = StructType(Seq(
     StructField("v_np", LongType, nullable = true),
     StructField("v_fs", LongType, nullable = true),
     StructField("g_np", LongType, nullable = true),
     StructField("g_fs", LongType, nullable = true)))
-  override def prettyName: String = "subword_dp"
 
-  override def nullSafeEval(len: Any, pieces: Any): Any =
-    SubwordDp.segment(len.asInstanceOf[Int],
-      pieces.asInstanceOf[ArrayData], big, freqClamp, maxPieceLen)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, p) =>
-      s"graft.functions.SubwordDp.segment($l, $p, ${big}L, ${freqClamp}L, $maxPieceLen)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SubwordDp =
-    copy(left = newLeft, right = newRight)
-}
-
-object SubwordDp {
-
-  /** Both objectives over one word's matched pieces; see the case-class
+  /** Both objectives over one word's matched pieces; see the object
     * scaladoc for the exact semantics. */
   def segment(n: Int, pieces: ArrayData, big: Long, freqClamp: Long,
       maxPieceLen: Int): InternalRow = {
@@ -129,6 +107,6 @@ object SubwordDp {
 
   def apply(wordLen: Column, pieces: Column, big: Long, freqClamp: Long,
       maxPieceLen: Int): Column =
-    GraftBridge.column(SubwordDp(GraftBridge.expression(wordLen),
-      GraftBridge.expression(pieces), big, freqClamp, maxPieceLen))
+    Kernel.column("subword_dp", this, "segment", result, Seq(wordLen, pieces),
+      big, freqClamp, maxPieceLen)
 }

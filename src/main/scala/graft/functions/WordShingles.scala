@@ -1,52 +1,29 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word n-gram shingles of a whitespace-tokenized string as a native
-  * expression: one pass over the UTF8 bytes, no per-element lambda
-  * dispatch.
+  * [[Kernel]] (`word_shingles`): one pass over the UTF8 bytes, no
+  * per-element lambda dispatch.
   *
   * Replaces the `transform(sequence(1, size-1), i -> concat_ws(...))`
   * higher-order chain, which evaluates interpreted lambdas per shingle —
-  * measured ~8 s for 5k docs at sf0.1 versus milliseconds here. Codegen
-  * emits a call to the static [[WordShingles.shingle]] helper so the
-  * shingling row stays inside the surrounding whole-stage span (the
-  * explode + hash that follow are codegen'd; a fallback here would split
-  * them). Produces the same shingle strings the DuckDB oracle builds with
-  * `toks[i] || ' ' || toks[i+1]`.
+  * measured ~8 s for 5k docs at sf0.1 versus milliseconds here. The
+  * shingling row stays inside the surrounding whole-stage span, with the
+  * explode + hash that follow. Produces the same shingle strings the
+  * DuckDB oracle builds with `toks[i] || ' ' || toks[i+1]`.
   */
-case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingles.shingle(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WordShingles.shingle($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
 object WordShingles {
 
   private val space = UTF8String.fromString(" ")
 
   /** All n-token shingles of a space-split string (empty array when there
-    * are fewer than n tokens); called from both the interpreted eval and
-    * the generated code. split(' ') semantics must match Spark's
+    * are fewer than n tokens). split(' ') semantics must match Spark's
     * split(text, " ") / DuckDB's string_split: empty tokens from
     * consecutive spaces kept. */
   def shingle(input: UTF8String, n: Int): GenericArrayData = {
@@ -67,6 +44,12 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
+  def apply(text: Expression, n: Int): Expression = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    Kernel("word_shingles", this, "shingle",
+      ArrayType(StringType, containsNull = false), Seq(text), n)
+  }
+
   def apply(text: Column, n: Int): Column =
-    GraftBridge.column(WordShingles(GraftBridge.expression(text), n))
+    GraftBridge.column(apply(GraftBridge.expression(text), n))
 }

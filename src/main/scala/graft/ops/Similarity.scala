@@ -857,7 +857,7 @@ object Similarity {
           lit(sampleMod.toLong)) === 0)
     var cb = init
     for (_ <- 0 until iters) {
-      // Row-local argmin via the NATIVE PqEncodeCodes kernel (r16). The
+      // Row-local argmin via the native PqOps.encode kernel (r16). The
       // r15 attempt at a row-local rewrite — the m x codesPerSub
       // literal-distance EXPRESSION TREE in one projection — measured 3x
       // slower (codegen blowup) and was reverted; the native kernel has

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{LongArrayDot, Md5Long60, WordShingles}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions so `spark.sql` users (and the view layer)
-  * can call them without touching the Scala API.
+  * kernels and literal-model builders as SQL functions so `spark.sql`
+  * users (and the view layer) can call them without touching the Scala
+  * API.
   *
   * Usage:
   * {{{
@@ -95,74 +96,54 @@ object GraftExtensions {
     graft.ops.Layout.zValueNCatalyst(children.init, bits)
   }
 
+  /** Every SQL function the engine adds, one entry each: (name, usage,
+    * builder). Both [[register]] and the session extension read it. */
+  private[plans] val functions
+      : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("long_array_dot",
+      "long_array_dot(a, b) - exact integer dot product of two array<bigint>",
+      children => {
+        checkArity("long_array_dot", "array<bigint>, array<bigint>", children, 2)
+        LongArrayDot(children(0), children(1))
+      }),
+    ("word_shingles",
+      "word_shingles(text, n) - word n-gram shingles of a space-tokenized string",
+      children => {
+        checkArity("word_shingles", "text, n", children, 2)
+        WordShingles(children(0), literalWidth(children))
+      }),
+    ("md5_long60",
+      "md5_long60(s) - first 15 hex digits of md5(s) as a non-negative BIGINT",
+      children => {
+        checkArity("md5_long60", "string", children, 1)
+        Md5Long60(children(0))
+      }),
+    ("bpe_token_count",
+      "bpe_token_count(text, 'lhs rhs,lhs rhs,...') - BPE token count " +
+        "of text under a literalized trained merge chain ('' = char-level)",
+      bpeTokenCount),
+    ("z_value_n",
+      "z_value_n(c1, ..., ck, bits) - N-dimensional Z-order interleave " +
+        "of 2..8 quantized integer columns at a literal bit width",
+      zValueN))
+
   /** Late registration on an existing session — withExtensions only takes
     * effect for sessions created after it, so long-lived apps (and shared
     * test sessions) attach the functions this way. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graftbridge.GraftBridge.registerTempFunction
-    registerTempFunction(spark, "long_array_dot",
-      (children: Seq[Expression]) => {
-        checkArity("long_array_dot", "array<bigint>, array<bigint>", children, 2)
-        LongArrayDot(children(0), children(1))
-      })
-    registerTempFunction(spark, "word_shingles",
-      (children: Seq[Expression]) => {
-        checkArity("word_shingles", "text, n", children, 2)
-        WordShingles(children(0), literalWidth(children))
-      })
-    registerTempFunction(spark, "md5_long60",
-      (children: Seq[Expression]) => {
-        checkArity("md5_long60", "string", children, 1)
-        Md5Long60(children(0))
-      })
-    registerTempFunction(spark, "bpe_token_count", bpeTokenCount)
-    registerTempFunction(spark, "z_value_n", zValueN)
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graftbridge.GraftBridge
+        .registerTempFunction(spark, name, builder)
+    }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "scala_udf")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("long_array_dot"),
-      info("long_array_dot",
-        "long_array_dot(a, b) - exact integer dot product of two array<bigint>"),
-      (children: Seq[Expression]) => {
-        GraftExtensions.checkArity("long_array_dot",
-          "array<bigint>, array<bigint>", children, 2)
-        LongArrayDot(children(0), children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      info("word_shingles",
-        "word_shingles(text, n) - word n-gram shingles of a space-tokenized string"),
-      (children: Seq[Expression]) => {
-        GraftExtensions.checkArity("word_shingles", "text, n", children, 2)
-        WordShingles(children(0), GraftExtensions.literalWidth(children))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("md5_long60"),
-      info("md5_long60",
-        "md5_long60(s) - first 15 hex digits of md5(s) as a non-negative BIGINT"),
-      (children: Seq[Expression]) => {
-        GraftExtensions.checkArity("md5_long60", "string", children, 1)
-        Md5Long60(children(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_token_count"),
-      info("bpe_token_count",
-        "bpe_token_count(text, 'lhs rhs,lhs rhs,...') - BPE token count " +
-          "of text under a literalized trained merge chain ('' = char-level)"),
-      GraftExtensions.bpeTokenCount))
-    ext.injectFunction((
-      FunctionIdentifier("z_value_n"),
-      info("z_value_n",
-        "z_value_n(c1, ..., ck, bits) - N-dimensional Z-order interleave " +
-          "of 2..8 quantized integer columns at a literal bit width"),
-      GraftExtensions.zValueN))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name,
+          usage, "", "", "", "", "", "", "scala_udf"),
+        builder))
+    }
 }

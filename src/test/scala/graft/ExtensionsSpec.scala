@@ -29,12 +29,27 @@ class ExtensionsSpec extends AnyFunSuite {
       "SELECT long_array_dot(array(1L,2L,3L), array(4L,5L,6L)) AS d")
       .collect().head.getLong(0)
     assert(r == 32L)
+    // unaliased, the column is named after the SQL function
+    assert(spark.sql("SELECT long_array_dot(array(1L,2L,3L), array(4L,5L,6L))")
+      .columns.toSeq == Seq("long_array_dot(array(1, 2, 3), array(4, 5, 6))"))
+  }
+
+  test("long_array_dot refuses arrays of different lengths") {
+    val e = intercept[Exception] {
+      spark.sql("SELECT long_array_dot(array(1L,2L), array(1L))").collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("array lengths differ (2 vs 1)")), msgs)
   }
 
   test("word_shingles callable from SQL") {
     val r = spark.sql("SELECT word_shingles('a b c d', 2) AS s")
       .collect().head.getSeq[String](0)
     assert(r == Seq("a b", "b c", "c d"))
+    // the width is a constant: it stays out of the column name
+    assert(spark.sql("SELECT word_shingles('a b c d', 2)").columns.toSeq ==
+      Seq("word_shingles(a b c d)"))
   }
 
   test("md5_long60 callable from SQL, equals the conv chain") {
@@ -44,6 +59,8 @@ class ExtensionsSpec extends AnyFunSuite {
       .collect().head
     assert(r.getLong(0) == r.getLong(1))
     assert(r.getLong(0) >= 0L)
+    assert(spark.sql("SELECT md5_long60('abc')").columns.toSeq ==
+      Seq("md5_long60(abc)"))
   }
 
   test("bpe_token_count callable from SQL, matches the DataFrame surface") {

@@ -78,29 +78,71 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("all three native expressions compile inside whole-stage codegen") {
-    // forbid the silent interpreted fallback: a janino compile error in
-    // either expression's generated code must FAIL here, not quietly
-    // split the codegen span on the dedup family's hottest path
-    import org.apache.spark.sql.functions.{concat, lit, sum, array}
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val h = spark.range(100)
-        .select((graft.functions.Md5Long60(
-          concat(lit("x"), col("id").cast("string"))) % 1000003L).as("h"))
-        .agg(sum(col("h"))).head.getLong(0)
-      assert(h > 0L)
-      val d = spark.range(100)
-        .select(graft.functions.LongArrayDot(
-          array(col("id"), lit(2L)), array(lit(3L), col("id"))).as("d"))
-        .agg(sum(col("d"))).head.getLong(0)
-      assert(d == (0 until 100).map(i => i * 3L + 2L * i).sum)
-      val sh = spark.range(100)
-        .select(graft.functions.WordShingles(
-          concat(lit("a b c d"), col("id").cast("string")), 2).as("sh"))
-        .selectExpr("sum(size(sh)) AS s").head.getLong(0)
-      assert(sh == 300L)
-    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+  test("all six native kernels: whole-stage codegen equals the interpreted path") {
+    // CODEGEN_ONLY with fallback off: a janino compile error in any
+    // kernel's generated call must FAIL here, not quietly split the
+    // codegen span. NO_CODEGEN: the path a kernel inside a higher-order
+    // lambda takes (the method called by reflection).
+    import graft.functions._
+    import org.apache.spark.sql.functions.{array, concat, lit, struct, when}
+    import org.apache.spark.sql.types._
+    val st = PqOps.buildState((0 until 2).flatMap { s =>
+      Seq((s, 0L, Seq(1L + s, -2L)), (s, 1L, Seq(-7L, 5L + s)),
+        (s, 3L, Seq(4L, 4L)))
+    }, m = 2, subDim = 2, codesPerSub = 4)
+    val id = col("id")
+    val text = concat(lit("x"), id.cast("string"))
+    val maybe = when(id % 7 =!= 0, text)
+    val vec = array(id, -id, id % 5, lit(3L))
+    val piece = (p: Int, l: Int, f: org.apache.spark.sql.Column) =>
+      struct(lit(p).as("pos"), lit(l).as("len"), f.cast("bigint").as("freq"))
+    def kernels = spark.range(100).select(id,
+      Md5Long60(text).as("md5"),
+      Md5Long60(maybe).as("md5_null"),
+      LongArrayDot(array(id, lit(2L)), array(lit(3L), id)).as("dot"),
+      WordShingles(concat(lit("a b c d"), id.cast("string")), 2).as("sh"),
+      WordShingles(maybe, 1).as("sh_null"),
+      PqOps.encodeColumn(vec, st).as("codes"),
+      PqOps.adcTableColumn(when(id % 9 =!= 0, vec), st).as("tab"),
+      SubwordDp((id % 4 + 1).cast("int"),
+        array(piece(0, 1, id), piece(1, 1, lit(5L)), piece(0, 2, lit(7L)),
+          piece(2, 2, id % 3)), 100L, 50L, 4).as("seg"))
+    // dataType and nullable as the hand-written expressions had them
+    val longs = ArrayType(LongType, containsNull = false)
+    val strings = ArrayType(StringType, containsNull = false)
+    val seg = StructType(Seq("v_np", "v_fs", "g_np", "g_fs")
+      .map(StructField(_, LongType, nullable = true)))
+    assert(kernels.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq == Seq(
+      ("id", LongType, false), ("md5", LongType, false),
+      ("md5_null", LongType, true), ("dot", LongType, false),
+      ("sh", strings, false), ("sh_null", strings, true),
+      ("codes", longs, false),
+      ("tab", ArrayType(LongType, containsNull = true), true),
+      ("seg", seg, true)))
+    def run(mode: String) = {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try kernels.collect().map(_.toString).sorted.toSeq
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.set("spark.sql.codegen.fallback", "true")
+      }
+    }
+    val compiled = run("CODEGEN_ONLY")
+    assert(compiled == run("NO_CODEGEN"))
+    val rows = kernels.collect().sortBy(_.getLong(0))
+    assert(rows.map(_.getLong(3)).sum == (0 until 100).map(i => i * 3L + 2L * i).sum)
+    assert(rows.map(_.getSeq[String](4).size).sum == 300)
+    assert(rows.forall(r => r.isNullAt(2) == (r.getLong(0) % 7 == 0)))
+    assert(rows.forall(r => r.isNullAt(7) == (r.getLong(0) % 9 == 0)))
+    // all eight kernel calls sit inside the whole-stage Project, and the
+    // analyzed plan still names them
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val staged = kernels.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.child.expressions }.flatten
+    assert(staged.flatMap(_.collect { case k: StaticInvoke => k }).size == 8)
+    assert(kernels.queryExecution.analyzed.toString.contains("md5_long60("))
   }
 
   test("zeroGuardFidelity replaces every '0' digit (the reference bug)") {

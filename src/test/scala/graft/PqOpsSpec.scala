@@ -100,4 +100,20 @@ class PqOpsSpec extends SparkSpec {
       .select(PqOps.encodeColumn(col("qv"), st)).head.getSeq[Long](0)
     assert(codes(1) == 1L, s"expected tie-break to code 1, got ${codes(1)}")
   }
+
+  test("a zero-length or one-short vector fails loudly, never reads past its end") {
+    val st = PqOps.buildState(cb, m, subDim, codesPerSub)
+    Seq(Seq.empty[Long], Seq.fill(m * subDim - 1)(1L)).foreach { v =>
+      val in = Seq((9L, v)).toDF("vec_id", "qv")
+      Seq(PqOps.encodeColumn(col("qv"), st), PqOps.adcTableColumn(col("qv"), st))
+        .foreach { k =>
+          val e = intercept[Exception](in.select(k).collect())
+          val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+          assert(msgs.exists(_.contains(
+            s"vector has ${v.size} elements, expected m*subDim = ${m * subDim}")),
+            msgs)
+        }
+    }
+  }
 }
