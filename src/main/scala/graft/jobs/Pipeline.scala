@@ -14,9 +14,10 @@ import graft.views.Views
   * (account, check) response — from fixtures in tests, from a live-API
   * DataSourceV2 in production) and optionally a DataFrame of tag
   * observations. The reference's four Step Functions state machines
-  * collapse into this one declarative plan: the per-account/per-check `Map`
-  * fan-out is partition parallelism, the 50-account batching and poll/wait
-  * loops are obsolete under Spark's scheduler.
+  * collapse into this one declarative plan: the per-account `Map` fan-out
+  * is partition parallelism (the live-API sources read one partition per
+  * account and walk its checks inside it), the 50-account batching and
+  * poll/wait loops are obsolete under Spark's scheduler.
   */
 object Pipeline {
 
@@ -43,7 +44,25 @@ object Pipeline {
     * cache replaces the per-write `isEmpty` pre-jobs: it yields, per check,
     * the row count and the number of flaggedResources passing the
     * warning/error status filter, which decides exactly which writes the
-    * K6 empty-relation elision skips. */
+    * K6 empty-relation elision skips.
+    *
+    * The tag pivot is materialized once too, by a local checkpoint:
+    * `Lake.writeTags` runs its emptiness guard and then the write, and
+    * each execution of the pivot would otherwise be one more Tagging-API
+    * sweep ([[TaIngest.tags]]). A checkpoint, not `persist`, because it
+    * keeps the adaptive plan's coalesced partitions (a cached plan keeps
+    * all `spark.sql.shuffle.partitions` of the aggregation, 200 tasks per
+    * stage at Spark's default). Trade-off: Spark cannot recompute a local
+    * checkpoint, so an executor lost between the guard and the write
+    * fails the tag write like any other write failure.
+    *
+    * Every table write — each check, the summary and the tags — is one
+    * future in one bounded pool, so the tag sweep overlaps the check
+    * writes instead of running after them. Failure semantics: every
+    * write runs to completion before the first failure is rethrown, so no
+    * lake file appears after ingest returns or throws; when one table's
+    * write fails, the others, the tag table included, may still have
+    * appended: the lake is not atomic across tables. */
   def ingest(raw: DataFrame, tagObs: Option[DataFrame], cfg: Config): Unit = {
     import org.apache.spark.sql.functions._
     val p = TaIngest.parsed(raw).persist()
@@ -57,8 +76,8 @@ object Pipeline {
         .filterNot(_.isNullAt(0))
         .map(r => r.getString(0) -> (if (r.isNullAt(2)) 0L else r.getLong(2)))
         .toMap
-      // The per-table writes go to disjoint paths and all read the cached
-      // parse, so they are submitted CONCURRENTLY: Spark's scheduler
+      // The per-table writes go to disjoint paths and read materialized
+      // inputs, so they are submitted CONCURRENTLY: Spark's scheduler
       // interleaves their jobs instead of paying one driver round-trip per
       // table in sequence (9 sequential write jobs dominated q35's wall
       // time in round 1). Bounded pool. Every future is awaited to
@@ -83,7 +102,12 @@ object Pipeline {
               Lake.writeSummary(TaIngest.summaryParsed(p, cfg.maskPii),
                 cfg.lakeRoot, cfg.csvFidelity, assumeNonEmpty = true)
             })
-          else Nil)
+          else Nil) ++
+          tagObs.map(obs => scala.concurrent.Future {
+            Lake.writeTags(
+              TaIngest.tags(obs, cfg.tagKeys).localCheckpoint(eager = false),
+              cfg.lakeRoot, cfg.csvFidelity)
+          })
         val settled = scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(
             writes.map(_.transform(scala.util.Success(_)))),
@@ -91,10 +115,6 @@ object Pipeline {
         settled.foreach(_.get) // rethrow the first failure, if any
       } finally { pool.shutdownNow(); () }
     } finally { p.unpersist(blocking = false); () }
-    tagObs.foreach { obs =>
-      Lake.writeTags(TaIngest.tags(obs, cfg.tagKeys), cfg.lakeRoot,
-        cfg.csvFidelity)
-    }
   }
 
   /** Register lake tables + build views (entry point B). Returns the

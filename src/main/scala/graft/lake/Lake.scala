@@ -1,9 +1,12 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.ingest.TaIngest
 import graft.model.CheckSpec
+import graft.sources.TaCheckResultSource
 
 /** Partitioned-lake writers and catalog registration — the Spark
   * re-expression of the reference's S3 layout + Glue crawler
@@ -97,16 +100,26 @@ object Lake {
       kind: String = "AssumeRoleFailure"): Unit =
     write(df, s"$root/Logs/$kind", csvFidelity = false)
 
-  private def read(spark: SparkSession, path: String,
-      csvFidelity: Boolean): DataFrame =
-    if (csvFidelity)
-      spark.read.option("header", "true").csv(path)
-    else spark.read.parquet(path)
+  /** Data columns of a lake table written by an ingest projection: the
+    * projection itself, analyzed over an empty source frame. The ingest
+    * code is the one definition of the lake's columns, and registration
+    * reads no parquet footer (one Spark job per table otherwise). Parquet
+    * reads every column back nullable. */
+  private def ingestSchema(spark: SparkSession,
+      projection: DataFrame => DataFrame): StructType = {
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), TaCheckResultSource.schema)
+    StructType(projection(TaIngest.parsed(empty)).schema
+      .map(_.copy(nullable = true)))
+  }
 
   /** Register lake tables in the session catalog — the Glue-crawler step
-    * (S7). Schema comes from parquet footers (or CSV header + string types
-    * in fidelity mode, matching the crawler's all-strings inference);
-    * partition discovery picks up year/month/day automatically. Returns the
+    * (S7). A detail table or `summary` gets the schema of the ingest
+    * projection that writes it ([[ingestSchema]]); `tags`, whose column set
+    * varies with the configured CustomerKeys, merges its parquet footers;
+    * fidelity mode reads CSV headers with string types, matching the
+    * crawler's all-strings inference. Partition discovery picks up
+    * year/month/day from the directory names either way. Returns the
     * registered table names.
     *
     * `persistent = false` (default) registers session-scoped temp views —
@@ -121,15 +134,17 @@ object Lake {
   def registerTables(spark: SparkSession, root: String,
       specs: Seq[CheckSpec], tagsPresent: Boolean,
       csvFidelity: Boolean = false, persistent: Boolean = false): Seq[String] = {
-    def register(name: String, path: String, mergeSchema: Boolean): Unit = {
+    def register(name: String, path: String,
+        schema: Option[StructType]): Unit = {
       val df =
-        if (mergeSchema && !csvFidelity)
+        if (csvFidelity) spark.read.option("header", "true").csv(path)
+        else schema.fold(
           // dynamic tag schema (SURVEY §1.3): runs written under different
           // CustomerKeys configs have different column sets; mergeSchema
           // unions them (missing keys read as null) — the Glue-crawler
           // UPDATE_IN_DATABASE evolution policy, natively.
-          spark.read.option("mergeSchema", "true").parquet(path)
-        else read(spark, path, csvFidelity)
+          spark.read.option("mergeSchema", "true").parquet(path))(
+          spark.read.schema(_).parquet(path))
       if (persistent) registerExternal(spark, name, path, df, csvFidelity)
       else df.createOrReplaceTempView(name)
     }
@@ -151,18 +166,20 @@ object Lake {
     val checkTables = specs.flatMap { spec =>
       val p = detailsPath(root, spec)
       if (exists(spark, p)) {
-        register(spec.tableName, p, mergeSchema = false)
+        register(spec.tableName, p,
+          Some(ingestSchema(spark, TaIngest.detailsParsed(_, spec))))
         Some(spec.tableName)
       } else None
     }
     val summaryTable =
       if (exists(spark, summaryPath(root))) {
-        register("summary", summaryPath(root), mergeSchema = false)
+        register("summary", summaryPath(root),
+          Some(ingestSchema(spark, TaIngest.summaryParsed(_))))
         Seq("summary")
       } else Nil
     val tagTable =
       if (tagsPresent && exists(spark, tagsPath(root))) {
-        register("tags", tagsPath(root), mergeSchema = true)
+        register("tags", tagsPath(root), None)
         Seq("tags")
       } else Nil
     checkTables ++ summaryTable ++ tagTable

@@ -14,10 +14,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 source for TA check results — the live-API variant of S1
-  * (`extract-ta-data-lambda.py:70-75`): one InputPartition per
-  * (account, check), so a 1000-account x 8-check ingest fans out as 8000
-  * independent partition reads across the cluster, replacing the
-  * reference's Step Functions `Map` states (template:1704,1210).
+  * (`extract-ta-data-lambda.py:70-75`): one InputPartition per account,
+  * whose reader walks that account's checks in option order and emits one
+  * row per (account, check) response. A 1000-account x 8-check ingest runs
+  * as 1000 partition reads of 8 fetches each, replacing the reference's
+  * Step Functions `Map` states (template:1704,1210) at the account level.
+  *
+  * Trade-off: the reference's inner `Map` fans one account's checks out in
+  * parallel, where here a one-account deployment fetches them in sequence
+  * inside one task. Only the describe-result call is serialized (the
+  * refresh/poll loop stays driver-side, [[Refresh.awaitAll]]). In return
+  * each account is one task, so a live deployment assumes each account's
+  * role once, not once per (account, check), and a refresh pays one task
+  * launch per account instead of one per API request.
   *
   * The per-partition fetch is STUBBED with a deterministic synthetic
   * document (this container has no network): a production build would call
@@ -61,7 +70,7 @@ private[sources] class TaTable(props: Map[String, String])
 }
 
 private[sources] case class TaPartition(accountId: String, accountName: String,
-    accountEmail: String, checkId: String, checkName: String,
+    accountEmail: String, checks: Seq[(String, String)],
     date: String, dateTime: String) extends InputPartition
 
 private[sources] class TaScan(opts: Map[String, String])
@@ -89,12 +98,12 @@ private[sources] class TaScan(opts: Map[String, String])
     val checks = opts.getOrElse("checks", "").split(",").filter(_.nonEmpty)
     val date = opts.getOrElse("date", "01-01-2024")
     val dt = opts.getOrElse("datetime", "2024-01-01 00:00:00")
-    for {
-      (id, nm, em) <- accounts
-      c <- checks
-    } yield TaPartition(id, nm, em, c,
-      graft.model.CheckRegistry.byId.get(c).map(_.name).getOrElse(c),
-      date, dt): InputPartition
+    val named = checks.toSeq.map(c =>
+      c -> graft.model.CheckRegistry.byId.get(c).map(_.name).getOrElse(c))
+    if (named.isEmpty) Array.empty
+    else accounts.map { case (id, nm, em) =>
+      TaPartition(id, nm, em, named, date, dt): InputPartition
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -106,18 +115,21 @@ private[sources] class TaReaderFactory(fields: Array[String])
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[TaPartition]
     new PartitionReader[InternalRow] {
-      private var consumed = false
-      override def next(): Boolean = if (consumed) false else { consumed = true; true }
+      private val remaining = p.checks.iterator
+      private var check: (String, String) = _
+      override def next(): Boolean =
+        remaining.hasNext && { check = remaining.next(); true }
       override def get(): InternalRow = {
+        val (checkId, checkName) = check
         def field(name: String): Any = UTF8String.fromString(name match {
           // the fetch only happens if the json column survived pruning;
           // throttled API responses back off in place (template:1218-1236)
           // instead of failing the whole partition read
           case "json" => Retry.withTemplateRetry()(
-            TaFetchStub.fetch(p.accountId, p.checkId))
+            TaFetchStub.fetch(p.accountId, checkId))
           case "Date" => p.date
           case "DateTime" => p.dateTime
-          case "CheckName" => p.checkName
+          case "CheckName" => checkName
           case "AccountId" => p.accountId
           case "AccountName" => p.accountName
           case "AccountEmail" => p.accountEmail

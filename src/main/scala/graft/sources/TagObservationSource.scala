@@ -15,15 +15,18 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 source for tag observations — the live-API variant of S3
   * (`extract-tag-data-lambda.py:70-79`) with the reference's
-  * resourceType x region cross-product fan-out (`get-tags-lambda.py:66-87`):
-  * one InputPartition per (account, resourceType, region), so a
-  * 100-account x 6-type x 20-region extract runs as 12,000 independent
-  * partition reads, replacing the TagMap Step Functions state
-  * (template:2105). Within a partition the reader PAGES through the
-  * Tagging-API stub exactly like the boto3 paginator — rows carry a
-  * monotonically increasing `obs_seq` standing in for page order, which is
-  * what makes the A3 last-wins dedup in TaIngest.tags deterministic when a
-  * resource is re-observed on a later page.
+  * resourceType x region cross-product (`get-tags-lambda.py:66-87`): one
+  * InputPartition per account, whose reader runs one paginated sweep per
+  * (resourceType, region) in order, so a 100-account x 6-type x 20-region
+  * extract runs as 100 partition reads of 120 sweeps each, replacing the
+  * TagMap Step Functions state (template:2105) at the account level. Each
+  * sweep PAGES through the Tagging-API stub exactly like the boto3
+  * paginator — rows carry an `obs_seq` that increases across the whole
+  * partition, standing in for page order, which is what makes the A3
+  * last-wins dedup in TaIngest.tags deterministic when a resource is
+  * re-observed on a later page. An ARN belongs to exactly one (account,
+  * type, region) sweep, so every re-observation of it is ordered inside
+  * one partition.
   *
   * The per-page fetch is STUBBED with deterministic synthetic observations
   * (no network in this container); a production build swaps
@@ -66,8 +69,9 @@ private[sources] class TagTable(props: Map[String, String])
 }
 
 private[sources] case class TagPartition(accountId: String,
-    accountName: String, accountEmail: String, resourceType: String,
-    region: String, date: String, dateTime: String) extends InputPartition
+    accountName: String, accountEmail: String,
+    sweeps: Seq[(String, String)], date: String, dateTime: String)
+    extends InputPartition
 
 private[sources] class TagScan(opts: Map[String, String])
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -83,7 +87,8 @@ private[sources] class TagScan(opts: Map[String, String])
     s"graft tag-observation scan [${required.fieldNames.mkString(",")}]"
 
   /** The reference's fan-out cross product (get-tags-lambda.py:66-87):
-    * accounts x resourceTypes x regions, one partition each. */
+    * one partition per account carrying its resourceTypes x regions
+    * sweeps. */
   override def planInputPartitions(): Array[InputPartition] = {
     val accounts = opts.getOrElse("accounts", "").split(",")
       .filter(_.nonEmpty).map { a =>
@@ -96,11 +101,11 @@ private[sources] class TagScan(opts: Map[String, String])
       .filter(_.nonEmpty)
     val date = opts.getOrElse("date", "01-01-2024")
     val dt = opts.getOrElse("datetime", "2024-01-01 00:00:00")
-    for {
-      (id, nm, em) <- accounts
-      t <- types
-      r <- regions
-    } yield TagPartition(id, nm, em, t, r, date, dt): InputPartition
+    val sweeps = for { t <- types.toSeq; r <- regions.toSeq } yield (t, r)
+    if (sweeps.isEmpty) Array.empty
+    else accounts.map { case (id, nm, em) =>
+      TagPartition(id, nm, em, sweeps, date, dt): InputPartition
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -113,17 +118,20 @@ private[sources] class TagReaderFactory(fields: Array[String])
     val p = partition.asInstanceOf[TagPartition]
     new PartitionReader[InternalRow] {
       // paginator state: buffered current page + next token, exactly the
-      // boto3 paginate() loop shape (extract-tag-data-lambda.py:70-79)
+      // boto3 paginate() loop shape (extract-tag-data-lambda.py:70-79),
+      // restarted at token 0 for each (type, region) sweep
+      private val sweeps = p.sweeps.iterator
+      private var sweep: (String, String) = _
       private var buffer: Iterator[TagFetchStub.Obs] = Iterator.empty
-      private var nextToken: Option[Int] = Some(0)
+      private var nextToken: Option[Int] = None
       private var current: TagFetchStub.Obs = _
       private var seq = 0L
 
       override def next(): Boolean = {
-        while (!buffer.hasNext && nextToken.isDefined) {
+        while (!buffer.hasNext && (nextToken.isDefined || sweeps.hasNext)) {
+          if (nextToken.isEmpty) { sweep = sweeps.next(); nextToken = Some(0) }
           val (rows, tok) =
-            TagFetchStub.page(p.accountId, p.resourceType, p.region,
-              nextToken.get)
+            TagFetchStub.page(p.accountId, sweep._1, sweep._2, nextToken.get)
           buffer = rows.iterator
           nextToken = tok
         }
@@ -138,8 +146,8 @@ private[sources] class TagReaderFactory(fields: Array[String])
             case "ResourceArn" => current.arn
             case "Key" => current.key
             case "Value" => current.value
-            case "RegionName" => p.region
-            case "ResourceType" => p.resourceType
+            case "RegionName" => sweep._2
+            case "ResourceType" => sweep._1
             case "Date" => p.date
             case "DateTime" => p.dateTime
             case "AccountId" => p.accountId

@@ -14,16 +14,24 @@ import graft.model.CheckRegistry
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
-  test("DSv2 source: one partition per (account, check), ingest-ready rows") {
+  private val twoAccounts =
+    "123456789012:Acme:ops@acme.example,999988887777:Beta:eng@beta.example"
+
+  test("DSv2 source: one partition per account, one row per (account, check)") {
     val df = spark.read.format("graft.sources.TaCheckResultSource")
-      .option("accounts",
-        "123456789012:Acme:ops@acme.example,999988887777:Beta:eng@beta.example")
+      .option("accounts", twoAccounts)
       .option("checks", "Qch7DwouX1,hjLMh88uM8")
       .option("date", "01-15-2024")
       .option("datetime", "2024-01-15 09:00:00")
       .load()
-    assert(df.rdd.getNumPartitions == 4) // 2 accounts x 2 checks
+    assert(df.rdd.getNumPartitions == 2) // 2 accounts, 2 checks each
     assert(df.count() == 4)
+    // each partition walks its account's checks in option order
+    val perPartition = df.select("AccountId", "CheckName").rdd.glom()
+      .collect().map(_.map(r => (r.getString(0), r.getString(1))).toSeq)
+    assert(perPartition.toSeq == Seq("123456789012", "999988887777").map(a =>
+      Seq(a -> "Low Utilization Amazon EC2 Instances",
+        a -> "Idle Load Balancers")))
     assert(df.columns.toSeq == Seq("json", "Date", "DateTime", "CheckName",
       "AccountId", "AccountName", "AccountEmail"))
     // and it feeds straight into the normalizer
@@ -31,6 +39,40 @@ class SourcesSpec extends SparkSpec {
     assert(details.count() > 0)
     val r = details.collect().head
     assert(r.getAs[String]("checkname") == "Low Utilization Amazon EC2 Instances")
+  }
+
+  test("an empty checks, resourceTypes or accounts option plans zero partitions") {
+    def ta(accounts: String, checks: String) =
+      spark.read.format("graft.sources.TaCheckResultSource")
+        .option("accounts", accounts).option("checks", checks).load()
+    def tags(accounts: String, types: String) =
+      spark.read.format("graft.sources.TagObservationSource")
+        .option("accounts", accounts).option("resourceTypes", types).load()
+    for (df <- Seq(ta(twoAccounts, ""), ta("", "Qch7DwouX1"),
+        tags(twoAccounts, ""), tags("", "ec2:instance"))) {
+      assert(df.rdd.getNumPartitions == 0)
+      assert(df.count() == 0)
+    }
+  }
+
+  test("tags DSv2 source: obs_seq strictly increases across a partition's sweeps") {
+    val obs = spark.read.format("graft.sources.TagObservationSource")
+      .option("accounts", twoAccounts)
+      .option("resourceTypes", "ec2:instance,ec2:volume")
+      .option("regions", "us-east-1,eu-west-1")
+      .load()
+    val parts = obs.select("obs_seq", "ResourceType", "RegionName").rdd
+      .glom().collect()
+    assert(parts.length == 2)
+    parts.foreach { rows =>
+      val seqs = rows.map(_.getLong(0)).toSeq
+      assert(seqs.nonEmpty && seqs.zip(seqs.tail).forall { case (a, b) => a < b })
+      // the sweeps run in (type, region) order, each one contiguous
+      val sweeps = rows.map(r => (r.getString(1), r.getString(2))).toSeq
+      assert(sweeps.distinct == Seq("ec2:instance", "ec2:volume").flatMap(t =>
+        Seq(t -> "us-east-1", t -> "eu-west-1")))
+      assert(sweeps.zip(sweeps.tail).count { case (a, b) => a != b } == 3)
+    }
   }
 
   test("tags DSv2 source: type x region fan-out, paginated last-wins, e2e tag join") {
@@ -42,8 +84,9 @@ class SourcesSpec extends SparkSpec {
       .option("date", "01-15-2024")
       .option("datetime", "2024-01-15 09:00:00")
       .load()
-    // fan-out: 1 account x 2 types x 2 regions (get-tags-lambda.py:66-87)
-    assert(obs.rdd.getNumPartitions == 4)
+    // 1 account, whose partition sweeps 2 types x 2 regions
+    // (get-tags-lambda.py:66-87)
+    assert(obs.rdd.getNumPartitions == 1)
     assert(obs.select("ResourceType").distinct().count() == 2)
     assert(obs.select("RegionName").distinct().count() == 2)
     // pagination: the trailing page re-observes resource 0's CostCenter;
