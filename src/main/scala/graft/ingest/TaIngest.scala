@@ -16,8 +16,8 @@ import graft.model._
   * at once: `from_json` -> `explode(flaggedResources)` (the ref's for-loop is
   * a Generator shape, covered by explode) -> status filter -> schema-token
   * projection -> standard prefix/suffix columns. Everything stays inside
-  * whole-stage codegen; at 100 TB the only shuffle anywhere in ingest is the
-  * optional repartition before the partitioned lake write.
+  * whole-stage codegen; at 100 TB the only shuffles anywhere in ingest are
+  * the tag pivot's aggregation and the REBALANCE before the lake write.
   */
 object TaIngest {
 
@@ -54,25 +54,13 @@ object TaIngest {
   private def maskIf(maskPii: Boolean, c: Column, isName: Boolean): Column =
     if (!maskPii) c else if (isName) maskNameEmail(c) else maskAccountId(c)
 
-  /** Detail rows for one check: the schema-token projection (P1) + status
-    * filter (P2) + comma strip (P3/P4) + prefix/suffix (P5) + PII mask (P12).
+  /** Detail columns of one check, as a select list over the document
+    * columns and `r`, one flagged resource: the schema-token projection
+    * (P1) + comma strip (P3/P4) + prefix/suffix (P5) + PII mask (P12).
     * Output column names are the lowercased `Header_<id>` names — the same
     * lowercasing the Glue crawler applies (SURVEY.md §7 case-sensitivity
     * note). All columns are strings (fidelity with the CSV/crawler lake). */
-  def details(raw: DataFrame, spec: CheckSpec, maskPii: Boolean = false): DataFrame =
-    detailsParsed(parsed(raw), spec, maskPii)
-
-  /** details() over an already-`parsed` DataFrame — lets a pipeline parse
-    * (and persist) the source once and derive all per-check projections from
-    * it, instead of re-scanning the source per check (with a live Support
-    * API source each extra scan is a full re-fetch). */
-  def detailsParsed(p: DataFrame, spec: CheckSpec, maskPii: Boolean = false): DataFrame = {
-    val fr = p
-      .filter(col("ta.result.checkId") === spec.id)
-      .select(col("Date"), col("DateTime"), col("CheckName"),
-        col("AccountId"), col("AccountName"), col("AccountEmail"),
-        explode(col("ta.result.flaggedResources")).as("r"))
-      .filter(col("r.status").isin("warning", "error"))
+  def detailColumns(spec: CheckSpec, maskPii: Boolean): Seq[Column] = {
     val projected = spec.header.zip(spec.mapping).map {
       // digit token: positional metadata cell, comma-stripped
       // (extract-ta-data-lambda.py:169-175); null cells stay null.
@@ -86,26 +74,17 @@ object TaIngest {
       // name token: field on the flaggedResource object
       case (name, Field(f)) => col(s"r.$f").cast(StringType).as(name.toLowerCase)
     }
-    fr.select(
-      Seq(col("Date").as("date"), col("DateTime").as("datetime"),
-        col("CheckName").as("checkname")) ++
-      projected ++
-      Seq(maskIf(maskPii, col("AccountId").cast(StringType), isName = false).as("accountid"),
-        maskIf(maskPii, col("AccountName"), isName = true).as("accountname"),
-        maskIf(maskPii, col("AccountEmail"), isName = true).as("accountemail")): _*)
+    Seq(col("Date").as("date"), col("DateTime").as("datetime"),
+      col("CheckName").as("checkname")) ++
+      projected ++ accountColumns(maskPii)
   }
 
-  /** Summary rows: one per (account, check) document, copying the
-    * service-computed aggregate fields with `0` defaults when the
+  /** Summary columns, as a select list over the document columns and
+    * `ta`: the service-computed aggregate fields with `0` defaults when the
     * costOptimizing block is absent (extract-ta-data-lambda.py:133-147).
     * String-typed like the CSV lake. */
-  def summary(raw: DataFrame, maskPii: Boolean = false): DataFrame =
-    summaryParsed(parsed(raw), maskPii)
-
-  /** summary() over an already-`parsed` DataFrame (see detailsParsed). */
-  def summaryParsed(p: DataFrame, maskPii: Boolean = false): DataFrame = {
-    p.select(
-      col("Date").as("date"), col("DateTime").as("datetime"),
+  def summaryColumns(maskPii: Boolean): Seq[Column] =
+    Seq(col("Date").as("date"), col("DateTime").as("datetime"),
       col("CheckName").as("checkname"),
       col("ta.result.checkId").cast(StringType).as("checkid"),
       col("ta.result.status").cast(StringType).as("status"),
@@ -120,10 +99,82 @@ object TaIngest {
       coalesce(col("ta.result.categorySpecificSummary.costOptimizing.estimatedMonthlySavings"),
         lit(0d)).cast(StringType).as("estimatedmonthlysavings"),
       coalesce(col("ta.result.categorySpecificSummary.costOptimizing.estimatedPercentMonthlySavings"),
-        lit(0d)).cast(StringType).as("estimatedpercentmonthlysavings"),
-      maskIf(maskPii, col("AccountId").cast(StringType), isName = false).as("accountid"),
+        lit(0d)).cast(StringType).as("estimatedpercentmonthlysavings")) ++
+      accountColumns(maskPii)
+
+  private def accountColumns(maskPii: Boolean): Seq[Column] =
+    Seq(maskIf(maskPii, col("AccountId").cast(StringType), isName = false).as("accountid"),
       maskIf(maskPii, col("AccountName"), isName = true).as("accountname"),
       maskIf(maskPii, col("AccountEmail"), isName = true).as("accountemail"))
+
+  /** The per-document columns every lake row copies. */
+  private val docColumns = Seq("Date", "DateTime", "CheckName", "AccountId",
+    "AccountName", "AccountEmail").map(col)
+
+  /** The reference's warning/error status filter (P2). */
+  private def flagged(r: Column): Column = r.getField("status").isin("warning", "error")
+
+  /** Detail rows for one check: [[detailColumns]] over each of the
+    * check's flagged resources. */
+  def details(raw: DataFrame, spec: CheckSpec, maskPii: Boolean = false): DataFrame =
+    detailsParsed(parsed(raw), spec, maskPii)
+
+  /** details() over an already-`parsed` DataFrame. */
+  def detailsParsed(p: DataFrame, spec: CheckSpec, maskPii: Boolean = false): DataFrame =
+    p.filter(col("ta.result.checkId") === spec.id)
+      .select(docColumns :+
+        explode(col("ta.result.flaggedResources")).as("r"): _*)
+      .filter(flagged(col("r")))
+      .select(detailColumns(spec, maskPii): _*)
+
+  /** Summary rows: [[summaryColumns]], one row per (account, check)
+    * document. */
+  def summary(raw: DataFrame, maskPii: Boolean = false): DataFrame =
+    summaryParsed(parsed(raw), maskPii)
+
+  /** summary() over an already-`parsed` DataFrame. */
+  def summaryParsed(p: DataFrame, maskPii: Boolean = false): DataFrame =
+    p.select(summaryColumns(maskPii): _*)
+
+  /** Routing column of a routed frame: the key of a row's lake table
+    * ([[routed]], [[graft.lake.Lake.routed]]). */
+  val TableCol = "tbl"
+
+  /** Lake table key of the summary rows in a [[routed]] frame. */
+  val SummaryTable = "summary"
+
+  private val resourceType = taResultSchema("result").dataType
+    .asInstanceOf[StructType]("flaggedResources").dataType
+    .asInstanceOf[ArrayType].elementType
+
+  /** Every lake row of a parsed batch, routed by table for
+    * [[graft.lake.Lake.writeTables]]: ONE generator over the parse, where
+    * one projection per table would scan the source once per table.
+    * Per document it emits the summary row (position 0, a null resource)
+    * and each warning/error flagged resource when the document's check is
+    * in `specs`. A row carries its table key [[TableCol]]
+    * (`spec.tableName` or [[SummaryTable]]), the document's `date` and one
+    * nullable struct column per table, named by the table key and set only
+    * for its own table: [[detailColumns]] or [[summaryColumns]]. */
+  def routed(p: DataFrame, specs: Seq[CheckSpec], maskPii: Boolean): DataFrame = {
+    val checks = specs.distinct
+    val docs = p.select(docColumns ++ Seq(col("ta"),
+      posexplode(concat(array(lit(null).cast(resourceType)),
+        coalesce(col("ta.result.flaggedResources"),
+          array().cast(ArrayType(resourceType))))).as(Seq("pos", "r"))): _*)
+    val isSummary = col("pos") === 0
+    val checkId = col("ta.result.checkId")
+    val table = checks.foldLeft(when(isSummary, lit(SummaryTable))) {
+      (t, s) => t.when(checkId === s.id, lit(s.tableName))
+    }
+    val tbl = col(TableCol)
+    docs.withColumn(TableCol, table)
+      .filter(isSummary || (tbl.isNotNull && flagged(col("r"))))
+      .select(Seq(tbl, col("Date").as("date")) ++
+        checks.map(s => when(tbl === s.tableName,
+          struct(detailColumns(s, maskPii): _*)).as(s.tableName)) :+
+        when(isSummary, struct(summaryColumns(maskPii): _*))
+          .as(SummaryTable): _*)
   }
 
   /** Tags normalizer (extract-tag-data-lambda.py:60-105): input is one row

@@ -34,87 +34,38 @@ object Pipeline {
         * (template:3284-3339); swap for an SNS publisher in deployment. */
       notifier: Notify.Notifier = Notify.Log)
 
-  /** Ingest one batch of raw docs (+ tag observations) into the lake.
+  /** Ingest one batch of raw docs (+ tag observations) into the lake as
+    * ONE [[Lake.writeTables]] job chain: one generator pass over the parse
+    * routes every detail and summary row to its table
+    * ([[TaIngest.routed]]), the tag pivot ([[TaIngest.tags]]) joins as
+    * one more routed table, and one REBALANCE and one fan-out write job
+    * append every table — 3 Spark jobs with tags (the tag aggregation's
+    * map stage, the REBALANCE map stage, the write). The source and the
+    * Tagging API are each read once, with no cache or checkpoint, since
+    * one plan reads them.
     *
-    * The source is scanned ONCE: the parsed batch is persisted, so the
-    * per-check detail writes and the summary write all read the cached
-    * parse instead of re-scanning (with a live Support-API source every
-    * extra scan is a full re-fetch of all (account, check) responses — 9
-    * re-fetches per run in the naive form). One small aggregation over the
-    * cache replaces the per-write `isEmpty` pre-jobs: it yields, per check,
-    * the row count and the number of flaggedResources passing the
-    * warning/error status filter, which decides exactly which writes the
-    * K6 empty-relation elision skips.
+    * Failure semantics: the driver commits after the job succeeds, so a
+    * failed ingest — a failing task, or a refused csvFidelity tag column
+    * set ([[Lake.requireTagColumns]], checked before the job) — appends
+    * nothing to any table. The commit itself is file moves, not one atomic swap: a
+    * driver dying mid-commit can leave some files moved. Tables with no
+    * rows get no file (K6).
     *
-    * The tag pivot is materialized once too, by a local checkpoint:
-    * `Lake.writeTags` runs its emptiness guard and then the write, and
-    * each execution of the pivot would otherwise be one more Tagging-API
-    * sweep ([[TaIngest.tags]]). A checkpoint, not `persist`, because it
-    * keeps the adaptive plan's coalesced partitions (a cached plan keeps
-    * all `spark.sql.shuffle.partitions` of the aggregation, 200 tasks per
-    * stage at Spark's default). Trade-off: Spark cannot recompute a local
-    * checkpoint, so an executor lost between the guard and the write
-    * fails the tag write like any other write failure.
-    *
-    * Every table write — each check, the summary and the tags — is one
-    * future in one bounded pool, so the tag sweep overlaps the check
-    * writes instead of running after them. Failure semantics: every
-    * write runs to completion before the first failure is rethrown, so no
-    * lake file appears after ingest returns or throws; when one table's
-    * write fails, the others, the tag table included, may still have
-    * appended: the lake is not atomic across tables. */
+    * [[ingestStream]] runs this once per micro-batch. */
   def ingest(raw: DataFrame, tagObs: Option[DataFrame], cfg: Config): Unit = {
-    import org.apache.spark.sql.functions._
-    val p = TaIngest.parsed(raw).persist()
-    try {
-      val stats = p.groupBy(col("ta.result.checkId").as("cid"))
-        .agg(count(lit(1)).as("n"),
-          sum(size(filter(col("ta.result.flaggedResources"),
-            r => r.getField("status").isin("warning", "error")))).as("flagged"))
-        .collect()
-      val flaggedByCheck = stats.iterator
-        .filterNot(_.isNullAt(0))
-        .map(r => r.getString(0) -> (if (r.isNullAt(2)) 0L else r.getLong(2)))
-        .toMap
-      // The per-table writes go to disjoint paths and read materialized
-      // inputs, so they are submitted CONCURRENTLY: Spark's scheduler
-      // interleaves their jobs instead of paying one driver round-trip per
-      // table in sequence (9 sequential write jobs dominated q35's wall
-      // time in round 1). Bounded pool. Every future is awaited to
-      // COMPLETION (not fail-fast) before the first failure is rethrown —
-      // otherwise a sibling write would outlive ingest, re-deriving the
-      // unpersisted parse (a full live-API refetch) and appending lake
-      // files after the caller has already seen the error.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val writes =
-          cfg.specs.filter(s => flaggedByCheck.getOrElse(s.id, 0L) > 0L)
-            .map { spec =>
-              scala.concurrent.Future {
-                Lake.writeDetails(TaIngest.detailsParsed(p, spec, cfg.maskPii),
-                  cfg.lakeRoot, spec, cfg.csvFidelity, assumeNonEmpty = true)
-              }
-            } ++
-          (if (stats.map(_.getLong(1)).sum > 0L)
-            Seq(scala.concurrent.Future {
-              Lake.writeSummary(TaIngest.summaryParsed(p, cfg.maskPii),
-                cfg.lakeRoot, cfg.csvFidelity, assumeNonEmpty = true)
-            })
-          else Nil) ++
-          tagObs.map(obs => scala.concurrent.Future {
-            Lake.writeTags(
-              TaIngest.tags(obs, cfg.tagKeys).localCheckpoint(eager = false),
-              cfg.lakeRoot, cfg.csvFidelity)
-          })
-        val settled = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            writes.map(_.transform(scala.util.Success(_)))),
-          scala.concurrent.duration.Duration.Inf)
-        settled.foreach(_.get) // rethrow the first failure, if any
-      } finally { pool.shutdownNow(); () }
-    } finally { p.unpersist(blocking = false); () }
+    val checks = TaIngest.routed(TaIngest.parsed(raw), cfg.specs, cfg.maskPii)
+    val tags = tagObs.map { obs =>
+      val t = TaIngest.tags(obs, cfg.tagKeys)
+      Lake.requireTagColumns(t, cfg.lakeRoot, cfg.csvFidelity)
+      Lake.routed(t, "tags")
+    }
+    val targets =
+      cfg.specs.map(s => s.tableName -> Lake.detailsPath(cfg.lakeRoot, s)) ++
+        Seq(TaIngest.SummaryTable -> Lake.summaryPath(cfg.lakeRoot)) ++
+        tags.map(_ => "tags" -> Lake.tagsPath(cfg.lakeRoot))
+    Lake.writeTables(
+      tags.fold(checks)(checks.unionByName(_, allowMissingColumns = true)),
+      targets.toMap, cfg.csvFidelity)
   }
 
   /** Register lake tables + build views (entry point B). Returns the
@@ -156,12 +107,13 @@ object Pipeline {
   /** Incremental ingest: a Structured Streaming file source watches a
     * landing directory of JSON-lines TA response envelopes (same schema the
     * DSv2 source emits) and appends each micro-batch into the partitioned
-    * lake via foreachBatch — the continuous replacement for the reference's
+    * lake via foreachBatch, one [[ingest]] (one write job) per
+    * micro-batch — the continuous replacement for the reference's
     * monthly cron (template:17-21): drop files, partitions appear. The
     * checkpoint reads each landing FILE exactly once (source-side); the
-    * SINK side is at-least-once — a crash after some of a batch's lake
-    * appends but before the checkpoint commit replays the batch on
-    * restart, duplicating those appends. Make the consumer idempotent
+    * SINK side is at-least-once — a failed batch appends nothing, but a
+    * crash after a batch's lake commit and before the checkpoint commit
+    * replays the batch on restart, duplicating its appends. Make the consumer idempotent
     * (exact dedup downstream — q21/q74 are the operators) or swap the
     * foreachBatch body for a transactional table format when end-to-end
     * exactly-once matters. Runs to completion with AvailableNow

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Multi-day small-file compaction for the partitioned lake.
   *
-  * The lake's writers append one run per day (Lake.write: REBALANCE keeps
-  * each run's file count low), but the reference's monthly cadence over
+  * The lake's writer appends one run per day (Lake.writeTables' REBALANCE
+  * keeps each run's file count low), but the reference's monthly cadence over
   * years — or the streaming ingest's per-micro-batch appends
   * (Pipeline.ingestStream) — still accretes many small files per y/m/d
   * partition, and at 100 TB the scan's task count (and the namenode/S3

@@ -1,8 +1,21 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.ingest.TaIngest
 import graft.model.CheckSpec
@@ -22,17 +35,35 @@ import graft.sources.TaCheckResultSource
   * Parquet by default (columnar, vectorized scan); `csvFidelity = true`
   * reproduces the reference's CSV bytes for fidelity tests. Writes are
   * append-mode: each run adds a new y/m/d partition, exactly like the
-  * reference's per-run S3 prefixes (SURVEY.md §2.8).
+  * reference's per-run S3 prefixes (SURVEY.md §2.8). [[writeTables]] is
+  * the one write path: a whole ingest — every check table, the summary
+  * and the tags — is one REBALANCE and one fan-out write job, the
+  * reference's Step Functions `Map` fan-out over (account, check) as one
+  * Spark stage; the single-table writers are its one-table calls.
   */
 object Lake {
 
-  /** Derive partition columns from the ingest `date` column (MM-dd-yyyy,
-    * get-accounts-info-lambda.py:110). Non-padded month/day values match
-    * the reference's `str(date.today().month)` path segments. */
-  private def withYmd(df: DataFrame): DataFrame = df
-    .withColumn("year", split(col("date"), "-").getItem(2).cast("int"))
-    .withColumn("month", split(col("date"), "-").getItem(0).cast("int"))
-    .withColumn("day", split(col("date"), "-").getItem(1).cast("int"))
+  private[lake] val partitionCols = Seq("year", "month", "day")
+
+  /** The partition values of a `date` column (MM-dd-yyyy,
+    * get-accounts-info-lambda.py:110) as `year`, `month`, `day` ints.
+    * Non-padded month/day values match the reference's
+    * `str(date.today().month)` path segments. */
+  private def ymd(date: Column): Seq[Column] = {
+    val parts = split(date, "-")
+    Seq(parts.getItem(2).cast("int").as("year"),
+      parts.getItem(0).cast("int").as("month"),
+      parts.getItem(1).cast("int").as("day"))
+  }
+
+  /** `df` as a one-table routed frame for [[writeTables]]: every row goes
+    * to `table`, partitioned by its `date` column. */
+  def routed(df: DataFrame, table: String): DataFrame = {
+    val data = df.columns.toSeq
+      .filterNot(c => partitionCols.exists(_.equalsIgnoreCase(c)))
+    df.select(lit(table).as(TaIngest.TableCol), col("date"),
+      struct(data.map(c => col(s"`$c`")): _*).as(table))
+  }
 
   def detailsPath(root: String, spec: CheckSpec): String =
     s"$root/TA-Reports/${spec.category}/${spec.tableName}"
@@ -42,54 +73,116 @@ object Lake {
 
   def tagsPath(root: String): String = s"$root/Tags"
 
-  private def write(df: DataFrame, path: String, csvFidelity: Boolean,
-      assumeNonEmpty: Boolean = false): Unit = {
-    // K6 empty-relation elision (extract-ta-data-lambda.py:153,187): an
-    // empty write would leave a file-less directory that later breaks
-    // schema inference at registration. The isEmpty guard is a limit-1 job;
-    // pipelines that already established non-emptiness in one upstream
-    // aggregation (Pipeline.ingest) pass assumeNonEmpty to skip it.
-    if (!assumeNonEmpty && df.isEmpty) return
-    // REBALANCE on the partition keys (AQE) collapses the one-tiny-file-
-    // per-source-partition write pattern into few right-sized files per
-    // y/m/d dir, and — unlike a plain repartition(ymd) — still SPLITS a
-    // hot day across tasks when a single partition's data is large, so
-    // the same write path holds at 100 TB/day.
-    val ymd = withYmd(df)
-    val w = ymd.hint("rebalance", col("year"), col("month"), col("day"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("year", "month", "day")
-    if (csvFidelity) w.option("header", "true").csv(path) else w.parquet(path)
+  /** Appends a routed frame to its lake tables in ONE Spark job chain —
+    * the lake's only writer. `routed` has the [[TaIngest.TableCol]] key,
+    * the `date` column the partition values come from, and one struct
+    * column per table, named by its key and holding that table's data
+    * columns (see [[routed]] and [[graft.ingest.TaIngest.routed]]); other
+    * columns and the column order do not matter. `targets` maps each key
+    * to its table path.
+    *
+    * REBALANCE on (table, year, month, day) (AQE) collapses the
+    * one-tiny-file-per-source-partition pattern into few right-sized
+    * files per leaf, and — unlike a plain repartition — still SPLITS a hot
+    * leaf across tasks when it is large, so the same write holds at
+    * 100 TB/day. Each write task then fans its rows out to one Spark
+    * `OutputWriter` per touched (table, leaf) — Spark's own parquet or
+    * header-CSV writer, so footers, codec and CSV bytes are the ones
+    * `DataFrameWriter` writes — with leaves rendered as `partitionBy`
+    * renders them (`__HIVE_DEFAULT_PARTITION__` for a null date). Files
+    * stage under the table's hidden `_temporary/<job>/<attempt>/`; after
+    * the job succeeds the driver moves the files of the winning attempts
+    * into their leaves and writes each touched table's root `_SUCCESS`
+    * (the marker [[graft.sources.TableFeedSource]] adopts a log-less leaf
+    * by). A failed job moves nothing: no table gains a file or, if it
+    * had none, a directory. K6
+    * empty-relation elision (extract-ta-data-lambda.py:153,187): a table
+    * with no rows gets no file and no directory. */
+  def writeTables(routed: DataFrame, targets: Map[String, String],
+      csvFidelity: Boolean): Unit = {
+    val spark = routed.sparkSession
+    val sinks = targets.toSeq.sortBy(_._1).map { case (table, path) =>
+      FanoutSink.prepare(spark, table, path,
+        routed.schema(table).dataType.asInstanceOf[StructType], csvFidelity)
+    }.toArray
+    // the row layout the write tasks read (FanoutSink.writeTask)
+    val rows = routed.select(Seq(col(TaIngest.TableCol)) ++
+      ymd(col("date")) ++ sinks.map(s => col(s"`${s.table}`")): _*)
+    val job = java.util.UUID.randomUUID.toString
+    val qe = rows.hint("rebalance", col(TaIngest.TableCol), col("year"),
+      col("month"), col("day")).queryExecution
+    val conf = spark.sparkContext.hadoopConfiguration
+    try {
+      val staged = SQLExecution.withNewExecutionId(qe, Some("lake write")) {
+        qe.toRdd.mapPartitionsWithIndex(FanoutSink.writeTask(job, sinks))
+          .collect()
+      }
+      staged.foreach { f =>
+        val leaf = new Path(sinks(f.sink).path, f.leaf)
+        val fs = leaf.getFileSystem(conf)
+        fs.mkdirs(leaf)
+        val to = new Path(leaf, f.name)
+        if (!fs.rename(new Path(f.staged), to))
+          throw new java.io.IOException(s"lake write: cannot move ${f.staged} to $to")
+      }
+      staged.map(_.sink).distinct.foreach { i =>
+        val marker = new Path(sinks(i).path, "_SUCCESS")
+        marker.getFileSystem(conf).create(marker, true).close()
+      }
+    } finally sinks.foreach { s =>
+      val table = new Path(s.path)
+      val fs = table.getFileSystem(conf)
+      fs.delete(new Path(table, s"_temporary/$job"), true)
+      // the shared `_temporary`, then a table dir that only this job's
+      // staging created (a failed first write), go once they are empty
+      Seq(new Path(table, "_temporary"), table).foreach { d =>
+        if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+      }
+    }
   }
 
+  /** One-table [[writeTables]] into `path`. */
+  private def write(df: DataFrame, path: String, csvFidelity: Boolean): Unit =
+    writeTables(routed(df, "t"), Map("t" -> path), csvFidelity)
+
   def writeDetails(df: DataFrame, root: String, spec: CheckSpec,
-      csvFidelity: Boolean = false, assumeNonEmpty: Boolean = false): Unit =
-    write(df, detailsPath(root, spec), csvFidelity, assumeNonEmpty)
+      csvFidelity: Boolean = false): Unit =
+    write(df, detailsPath(root, spec), csvFidelity)
 
   def writeSummary(df: DataFrame, root: String,
-      csvFidelity: Boolean = false, assumeNonEmpty: Boolean = false): Unit =
-    write(df, summaryPath(root), csvFidelity, assumeNonEmpty)
+      csvFidelity: Boolean = false): Unit =
+    write(df, summaryPath(root), csvFidelity)
 
   def writeTags(df: DataFrame, root: String,
       csvFidelity: Boolean = false): Unit = {
-    // CSV is read back POSITIONALLY with one header for the whole tree:
-    // appending runs whose column set changed (reordered/shrunken
-    // CustomerKeys) would silently misalign every later column across the
-    // table. Parquet tolerates drift (mergeSchema resolves by NAME);
-    // fidelity mode must refuse it at write time, loudly.
-    if (csvFidelity) {
-      val path = tagsPath(root)
-      val spark = df.sparkSession
-      if (exists(spark, path)) {
-        val existing = spark.read.option("header", "true").csv(path).columns
-        require(existing.sameElements(df.columns),
-          s"csvFidelity tags append changes the column set: table has " +
-            s"[${existing.mkString(",")}], append has " +
-            s"[${df.columns.mkString(",")}] — rewrite the table (or drop " +
-            "fidelity mode, whose parquet path merges schemas by name)")
-      }
-    }
+    requireTagColumns(df, root, csvFidelity)
     write(df, tagsPath(root), csvFidelity)
+  }
+
+  /** csvFidelity: CSV is read back POSITIONALLY with one header for the
+    * whole tree, so appending tag rows whose column set differs from the
+    * existing table's header (a reordered or shrunken CustomerKeys set)
+    * would silently misalign every later column; that append is refused
+    * on the driver, before any write, loudly. `tags` is the one table
+    * whose column set varies (with the configured CustomerKeys); the
+    * other tables' columns are fixed by the ingest code. Parquet
+    * tolerates drift (mergeSchema resolves by name), so parquet mode
+    * checks nothing. One header-read Spark job when the table exists. */
+  def requireTagColumns(tags: DataFrame, root: String,
+      csvFidelity: Boolean): Unit = {
+    val path = tagsPath(root)
+    val spark = tags.sparkSession
+    if (csvFidelity && exists(spark, path)) {
+      // partition discovery adds year/month/day to the header read
+      def data(cols: Array[String]) = cols.filterNot(partitionCols.contains)
+      val existing = data(spark.read.option("header", "true").csv(path).columns)
+      val appended = data(tags.columns)
+      require(existing.sameElements(appended),
+        s"csvFidelity tags append changes the column set: table has " +
+          s"[${existing.mkString(",")}], append has " +
+          s"[${appended.mkString(",")}] — rewrite the table (or drop " +
+          "fidelity mode, whose parquet path merges schemas by name)")
+    }
   }
 
   /** K7 error-log sink (refresh-ta-check-lambda.py:54-63): failure records
@@ -185,8 +278,6 @@ object Lake {
     checkTables ++ summaryTable ++ tagTable
   }
 
-  private val partitionCols = Seq("year", "month", "day")
-
   /** Durable external table over a partitioned lake path: explicit schema
     * (from `df`, the already-inferred read), Hive-style partition columns,
     * then partition recovery. Clears any temp view shadowing the name
@@ -272,5 +363,90 @@ object Lake {
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+}
+
+/** One table of a [[Lake.writeTables]] job, as its write tasks see it:
+  * its data schema, and the output-writer factory and job conf Spark's
+  * file format prepared for it. */
+private[lake] final case class FanoutSink(table: String, path: String,
+    schema: StructType, factory: OutputWriterFactory,
+    conf: SerializableConfiguration)
+
+/** A file one write task staged: its sink's index, the leaf it belongs
+  * in, its staged path and its file name. */
+private[lake] final case class StagedFile(sink: Int, leaf: String,
+    staged: String, name: String)
+
+private[lake] object FanoutSink {
+
+  /** The sink of `table`, prepared as `DataFrameWriter` prepares a
+    * partitioned append to `path`: the header-CSV or parquet format's
+    * `prepareWrite` over a job conf of its own. */
+  def prepare(spark: SparkSession, table: String, path: String,
+      schema: StructType, csv: Boolean): FanoutSink = {
+    val options =
+      if (csv) Map("header" -> "true") else Map.empty[String, String]
+    val job = Job.getInstance(
+      spark.sessionState.newHadoopConfWithOptions(options))
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    FileOutputFormat.setOutputPath(job, new Path(path))
+    val format = if (csv) new CSVFileFormat else new ParquetFileFormat
+    FanoutSink(table, path, schema,
+      format.prepareWrite(spark, job, options, schema),
+      new SerializableConfiguration(job.getConfiguration))
+  }
+
+  /** One write task: each row goes to the writer of its (table, leaf),
+    * opened at the leaf's first row, under the attempt's staging dir.
+    * Returns the staged files once every writer closed. Rows are
+    * (table key, year, month, day, then sink i's struct at ordinal 4 + i),
+    * the layout [[Lake.writeTables]] selects. */
+  def writeTask(job: String, sinks: Array[FanoutSink])(part: Int,
+      rows: Iterator[InternalRow]): Iterator[StagedFile] = {
+    val task = TaskContext.get()
+    val attempt = new TaskAttemptID(new TaskID(new JobID(job, task.stageId()),
+      TaskType.MAP, part), task.attemptNumber())
+    val staging = s"_temporary/$job/$part-${task.taskAttemptId()}"
+    val keys = new java.util.HashMap[UTF8String, Integer]
+    sinks.indices.foreach(i => keys.put(UTF8String.fromString(sinks(i).table), i))
+    val contexts = new Array[TaskAttemptContext](sinks.length)
+    val open = scala.collection.mutable.LinkedHashMap
+      .empty[(Int, Seq[Any]), (OutputWriter, StagedFile)]
+    def openWriter(i: Int, values: Seq[Any]): (OutputWriter, StagedFile) = {
+      val s = sinks(i)
+      if (contexts(i) == null)
+        contexts(i) = new TaskAttemptContextImpl(s.conf.value, attempt)
+      val leaf = Lake.partitionCols.zip(values).map { case (c, v) =>
+        ExternalCatalogUtils.getPartitionPathString(c,
+          if (v == null) null else v.toString)
+      }.mkString("/")
+      val name = f"part-$part%05d-$job.c000" +
+        s.factory.getFileExtension(contexts(i))
+      val staged = new Path(s.path, s"$staging/$leaf/$name").toString
+      (s.factory.newInstance(staged, s.schema, contexts(i)),
+        StagedFile(i, leaf, staged, name))
+    }
+    try {
+      rows.foreach { row =>
+        val key = keys.get(row.getUTF8String(0))
+        require(key != null, s"lake write: row for table '${row.getUTF8String(0)}' " +
+          s"outside the targets [${sinks.map(_.table).mkString(",")}]")
+        val i = key.intValue
+        val values = Lake.partitionCols.indices.map(j =>
+          if (row.isNullAt(j + 1)) null else row.getInt(j + 1))
+        open.getOrElseUpdate((i, values), openWriter(i, values))
+          ._1.write(row.getStruct(4 + i, sinks(i).schema.length))
+      }
+      open.values.foreach(_._1.close())
+      open.values.map(_._2).toList.iterator
+    } catch {
+      case e: Throwable =>
+        // staged files of a failed attempt are swept with the job's staging
+        open.values.foreach(w =>
+          try w._1.close() catch { case scala.util.control.NonFatal(_) => () })
+        throw e
+    }
   }
 }

@@ -1113,7 +1113,7 @@ object ManifestCommit {
   }
 
   /** Commit any visible data files a plain directory-append writer (e.g.
-    * Lake.write running in a manifest-mode deployment) added since the
+    * Lake.writeTables running in a manifest-mode deployment) added since the
     * last commit: every visible data file that is neither live nor
     * tombstoned joins the live set. `compact-*` names are NEVER adopted:
     * a [[CompactedPrefix]] file only enters the live set through its own

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a near-duplicate pair table — the clustering
   * step that turns pairwise dedup output (minhashLshPairs,
@@ -48,21 +49,50 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * 3 s truncated). Truncation goes through the CacheManager (not
   * localCheckpoint, whose blocks Dataset.unpersist cannot release), so
   * each round frees the previous round's storage.
+  *
+  * Ownership: every round's cache is the call's own and is freed before
+  * it returns. The relation a call RETURNS ([[connectedComponents]],
+  * [[connectedComponentsStars]] and [[kCore]]) is [[handedOver]]: a
+  * persisted RDD that the caller's open cache scope owns, or, with no
+  * scope open, that Spark's ContextCleaner frees once the caller drops
+  * the frame. No returned result is a CacheManager entry, which only an
+  * explicit unpersist would free and whose lineage would keep every
+  * round's shuffles alive with it.
   */
 object Components {
 
-  /** Constant-size cached plan over `df`'s result: a LogicalRDD wrapping
-    * the executed plan's InternalRow RDD, persisted through the
-    * CacheManager so unpersist() actually frees the blocks (the
-    * localCheckpoint alternative truncates lineage too, but its blocks
-    * live outside the CacheManager and Dataset.unpersist can't release
-    * them). Lazy: the first action on the returned frame materializes
-    * the cache; a cache miss (executor loss) recomputes through the
-    * wrapped RDD's own lineage. */
+  /** Constant-size cached plan over `df`'s result, for state a call
+    * reads again and frees itself: a LogicalRDD wrapping the executed
+    * plan's InternalRow RDD, persisted through the CacheManager so
+    * unpersist() actually frees the blocks (the localCheckpoint
+    * alternative truncates lineage too, but its blocks live outside the
+    * CacheManager and Dataset.unpersist can't release them). The
+    * CacheManager entry lives until that unpersist, so a relation
+    * RETURNED to the caller goes through [[handedOver]] instead. Lazy:
+    * the first action on the returned frame materializes the cache; a
+    * cache miss (executor loss) recomputes through the wrapped RDD's own
+    * lineage. */
   private[ops] def truncated(df: DataFrame): DataFrame =
     GraftBridge.internalCreateDataFrame(df.sparkSession,
         df.queryExecution.toRdd, df.schema)
       .persist()
+
+  /** The relation a call returns: `df`'s rows persisted at the RDD level
+    * and materialized by one job, as a constant-size LogicalRDD frame
+    * that carries the row count. It makes no CacheManager entry: the
+    * caller's open cache scope owns the RDD
+    * ([[TextKit.registerResult]]), and with none open Spark's
+    * ContextCleaner unpersists it, with the shuffles of its lineage,
+    * once the caller's frames over it are unreachable. The caches `df`
+    * reads may be freed as soon as this returns; a lost block recomputes
+    * through `df`'s own lineage. */
+  private[ops] def handedOver(df: DataFrame): DataFrame = {
+    val rdd = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = rdd.count()
+    TextKit.registerResult(rdd)
+    GraftBridge.countedDataFrame(df.sparkSession, rdd, df.schema, n)
+  }
 
   /** The local phase shared by both variants: `pairs`' (aCol, bCol)
     * edges contracted partition by partition into star forests, as a
@@ -118,7 +148,11 @@ object Components {
     * converged exactly when sum(label) stops falling — ONE
     * map-side-combinable aggregate per round (decimal(38,0) sums stay
     * exact at any id range). Peak memory is two label generations plus
-    * the edge set. */
+    * the edge set.
+    *
+    * Returns a [[handedOver]] relation (one extra job reads the last
+    * round's cache once): the caller's open cache scope owns it, and with
+    * none open it frees itself once the caller drops it. */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 50): DataFrame = {
     val e0 = contracted(pairs, aCol, bCol)
@@ -184,12 +218,13 @@ object Components {
     if (!converged) labels.unpersist(blocking = false)
     require(converged,
       s"connectedComponents did not converge in $maxIters rounds")
-    // the returned frame reads the still-persisted labels cache (callers
-    // usually aggregate over it repeatedly); the CACHED frame itself is
-    // registered so its cache scope frees it like every other ops-layer
-    // cache (a projection would not match the cache entry)
-    TextKit.register(labels)
-    labels.select(col("id").as("doc_id"), col("label").as("component_id"))
+    // callers usually aggregate over the labels repeatedly, so they get
+    // them persisted — handed over, since the round cache would live in
+    // the CacheManager until someone unpersists it
+    val out = handedOver(
+      labels.select(col("id").as("doc_id"), col("label").as("component_id")))
+    labels.unpersist(blocking = false)
+    out
   }
 
   /** Alternating large-star / small-star connected components (Kiveris
@@ -220,7 +255,9 @@ object Components {
     * when the count matches. Rounds run until that probe holds: at least
     * one, more while stars from different partitions share ids. Same
     * lineage-truncation discipline as connectedComponents (each round
-    * re-references the previous edge set several times). */
+    * re-references the previous edge set several times). Returns a
+    * [[handedOver]] relation, like [[connectedComponents]]; here the
+    * hand-over is the job that materializes the labels. */
   def connectedComponentsStars(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 50): DataFrame = {
     val e00 = contracted(pairs, aCol, bCol)
@@ -287,15 +324,14 @@ object Components {
     val roots = allNodes.join(nonRoot.select(col("id")), Seq("id"),
         "left_anti")
       .select(col("id"), col("id").as("label"))
-    val labels = truncated(nonRoot.union(roots))
-    // materialize the labels cache BEFORE dropping its inputs — otherwise
-    // the caller's first action re-runs the final round's joins and the
-    // contraction through lineage with the caches already gone
-    labels.count()
+    // handedOver materializes the labels BEFORE their inputs are dropped —
+    // otherwise the caller's first action re-runs the final round's joins
+    // and the contraction through lineage with the caches already gone
+    val out = handedOver(nonRoot.union(roots)
+      .select(col("id").as("doc_id"), col("label").as("component_id")))
     edges.unpersist(blocking = false)
     e00.unpersist(blocking = false)
-    TextKit.register(labels)
-    labels.select(col("id").as("doc_id"), col("label").as("component_id"))
+    out
   }
 
   /** Keep at most `m` deterministic representatives per cluster — the
@@ -363,7 +399,9 @@ object Components {
     * and cached exactly as in [[connectedComponents]] — constant-size
     * plans, two edge generations in memory. Fixpoint is detected by
     * the (monotone-decreasing) edge count; hitting `maxIters` fails
-    * loudly rather than returning a half-peeled graph. */
+    * loudly rather than returning a half-peeled graph. The degrees are
+    * computed before the call returns and [[handedOver]], like
+    * [[connectedComponents]]' labels; the last round's edges are freed. */
   def kCore(pairs: DataFrame, k: Int, maxIters: Int = 30): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val e0 = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -391,8 +429,10 @@ object Components {
     }
     if (!converged) edges.unpersist(blocking = false)
     require(converged, s"kCore did not reach fixpoint in $maxIters rounds")
-    edges.groupBy(col("src").as("doc_id"))
-      .agg(count(lit(1)).as("degree"))
+    val out = handedOver(edges.groupBy(col("src").as("doc_id"))
+      .agg(count(lit(1)).as("degree")))
+    edges.unpersist(blocking = false)
+    out
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over the

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,12 +27,20 @@ object TextKit {
     * scope open belong to the process root scope, which [[releaseCaches]]
     * empties. The scoped work must materialize what it needs (write,
     * count, collect) before the scope closes. Side-by-side queries (the
-    * pooled Verify) and per-micro-batch loops each own one scope. */
+    * pooled Verify) and per-micro-batch loops each own one scope.
+    *
+    * A result an operator RETURNS (Components' labels and k-cores) is not
+    * a CacheManager entry but a persisted RDD ([[registerResult]]): an
+    * open scope owns it like a relation, while with no scope open nothing
+    * does — the root holds no reference, so Spark's ContextCleaner frees
+    * it once the caller drops the frame. */
   final class CacheScope private[TextKit] (parent: CacheScope)
       extends AutoCloseable {
-    private[TextKit] val owned = new java.util.ArrayList[DataFrame]()
+    private[TextKit] val owned = new java.util.ArrayList[() => Unit]()
+    private[TextKit] def own(unpersist: () => Unit): Unit =
+      owned.synchronized { owned.add(unpersist); () }
     private[TextKit] def release(): Unit = owned.synchronized {
-      owned.forEach { df => df.unpersist(blocking = false); () }
+      owned.forEach(_())
       owned.clear()
     }
     def close(): Unit = {
@@ -65,12 +74,22 @@ object TextKit {
   private[ops] def trackedLeaf(df: DataFrame): DataFrame =
     register(Components.truncated(df))
 
-  /** Hand an ALREADY-persisted relation (e.g. connectedComponents' final
-    * labels, returned to the caller still cached) to the current scope. */
+  /** Hand an ALREADY-persisted relation (a CacheManager entry the
+    * operator reads again, e.g. labelPropagation's edge leaf) to the
+    * current scope, which unpersists it at `close()` (the root: at
+    * [[releaseCaches]]). */
   private[ops] def register(df: DataFrame): DataFrame = {
-    val owned = current.get.owned
-    owned.synchronized { owned.add(df) }
+    current.get.own(() => { df.unpersist(blocking = false); () })
     df
+  }
+
+  /** Hand a persisted RDD that backs an operator's RETURNED result to the
+    * current scope if one is open; with none open it is left to Spark's
+    * ContextCleaner, which unpersists it (and the shuffles of its
+    * lineage) once the caller's frames over it are unreachable. */
+  private[ops] def registerResult(rdd: RDD[_]): Unit = {
+    val scope = current.get
+    if (scope ne root) scope.own(() => { rdd.unpersist(blocking = false); () })
   }
 
   /** Unpersist every relation cached with no scope open. */

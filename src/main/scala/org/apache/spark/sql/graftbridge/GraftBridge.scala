@@ -77,4 +77,23 @@ object GraftBridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** [[internalCreateDataFrame]] over an RDD whose row count is known:
+    * the LogicalRDD carries that count and the size estimated from it, so
+    * a join over the frame plans as over any relation of that size (a
+    * bare LogicalRDD reads as unboundedly large and is never broadcast). */
+  def countedDataFrame(spark: org.apache.spark.sql.SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType,
+      rowCount: Long): org.apache.spark.sql.DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils
+      .toAttributes(schema)
+    val n = BigInt(rowCount)
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+        .EstimationUtils.getOutputSize(output, n), Some(n))
+    org.apache.spark.sql.classic.Dataset.ofRows(s,
+      org.apache.spark.sql.execution.LogicalRDD(output, rdd)(s, Some(stats)))
+  }
 }

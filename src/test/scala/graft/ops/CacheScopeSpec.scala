@@ -80,8 +80,39 @@ class CacheScopeSpec extends SparkSpec {
     assert(Set(e.getMessage, e.getSuppressed.head.getMessage) == Set("a", "b"))
   }
 
+  test("a components result returned with no scope open frees itself") {
+    val sc = spark.sparkContext
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // private[sql] in Scala, a public method in bytecode
+    def entries = cacheManager.getClass.getMethod("numCachedEntries")
+      .invoke(cacheManager).asInstanceOf[Int]
+    val before = sc.getPersistentRDDs.keySet
+    val entriesBefore = entries
+    // three chains of 10 ids: 30 labeled ids; the frames die with this call
+    def labelAndDrop(): Seq[Long] = {
+      val pairs = spark.range(30).where("id % 10 != 9")
+        .selectExpr("id AS doc_a", "id + 1 AS doc_b")
+      Seq(Components.connectedComponentsStars(pairs),
+          Components.connectedComponents(pairs))
+        .map(_.where("component_id % 10 = 0").count())
+    }
+    assert(labelAndDrop() == Seq(30L, 30L))
+    assert(entries == entriesBefore,
+      "a returned result must not be a CacheManager entry")
+    val deadline = System.nanoTime() + 10000000000L
+    def left = sc.getPersistentRDDs.keySet -- before
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(100)
+    }
+    assert(left.isEmpty, s"dropped results still persist RDDs ${left.mkString(",")}")
+  }
+
   for (q <- Seq("q84_ann_pq", "q64_components_stars", "q137_abtt",
-      "q212_stream_index_maintain", "q128_bpe_token_mix", "q129_stream_bpe"))
+      "q212_stream_index_maintain", "q128_bpe_token_mix", "q129_stream_bpe",
+      "q200_kcore"))
     test(s"$q leaves no persisted RDD once its scope closes") {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       TextKit.withCacheScope {
