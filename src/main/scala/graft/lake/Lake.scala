@@ -167,12 +167,14 @@ object Lake {
     * whose column set varies (with the configured CustomerKeys); the
     * other tables' columns are fixed by the ingest code. Parquet
     * tolerates drift (mergeSchema resolves by name), so parquet mode
-    * checks nothing. One header-read Spark job when the table exists. */
+    * checks nothing. One header-read Spark job when the table has a data
+    * file; a table directory with none (created empty, or left by a
+    * writer that failed) is a first write and checks nothing either. */
   def requireTagColumns(tags: DataFrame, root: String,
       csvFidelity: Boolean): Unit = {
     val path = tagsPath(root)
     val spark = tags.sparkSession
-    if (csvFidelity && exists(spark, path)) {
+    if (csvFidelity && hasDataFile(spark, path)) {
       // partition discovery adds year/month/day to the header read
       def data(cols: Array[String]) = cols.filterNot(partitionCols.contains)
       val existing = data(spark.read.option("header", "true").csv(path).columns)
@@ -193,18 +195,25 @@ object Lake {
       kind: String = "AssumeRoleFailure"): Unit =
     write(df, s"$root/Logs/$kind", csvFidelity = false)
 
-  /** Data columns of a lake table written by an ingest projection: the
+  private val ingestSchemas =
+    new java.util.concurrent.ConcurrentHashMap[Option[CheckSpec], StructType]()
+
+  /** Data columns of a lake table written by an ingest projection — the
+    * detail projection of `spec`, or the summary's for None: the
     * projection itself, analyzed over an empty source frame. The ingest
     * code is the one definition of the lake's columns, and registration
     * reads no parquet footer (one Spark job per table otherwise). Parquet
-    * reads every column back nullable. */
+    * reads every column back nullable. The schema depends on the spec
+    * alone, so each is analyzed once per JVM. */
   private def ingestSchema(spark: SparkSession,
-      projection: DataFrame => DataFrame): StructType = {
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](), TaCheckResultSource.schema)
-    StructType(projection(TaIngest.parsed(empty)).schema
-      .map(_.copy(nullable = true)))
-  }
+      spec: Option[CheckSpec]): StructType =
+    ingestSchemas.computeIfAbsent(spec, { _ =>
+      val parsed = TaIngest.parsed(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), TaCheckResultSource.schema))
+      val projected = spec.fold(TaIngest.summaryParsed(parsed))(
+        TaIngest.detailsParsed(parsed, _))
+      StructType(projected.schema.map(_.copy(nullable = true)))
+    })
 
   /** Register lake tables in the session catalog — the Glue-crawler step
     * (S7). A detail table or `summary` gets the schema of the ingest
@@ -259,15 +268,13 @@ object Lake {
     val checkTables = specs.flatMap { spec =>
       val p = detailsPath(root, spec)
       if (exists(spark, p)) {
-        register(spec.tableName, p,
-          Some(ingestSchema(spark, TaIngest.detailsParsed(_, spec))))
+        register(spec.tableName, p, Some(ingestSchema(spark, Some(spec))))
         Some(spec.tableName)
       } else None
     }
     val summaryTable =
       if (exists(spark, summaryPath(root))) {
-        register("summary", summaryPath(root),
-          Some(ingestSchema(spark, TaIngest.summaryParsed(_))))
+        register("summary", summaryPath(root), Some(ingestSchema(spark, None)))
         Seq("summary")
       } else Nil
     val tagTable =
@@ -364,6 +371,26 @@ object Lake {
     val p = new org.apache.hadoop.fs.Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** Whether the table at `path` holds a file a read would see: one whose
+    * path below the table has no part that Spark's file listing hides
+    * (a name starting with `.`, or with `_` and no `=`, like the staging
+    * `_temporary` or the `_SUCCESS` marker). */
+  private def hasDataFile(spark: SparkSession, path: String): Boolean =
+    exists(spark, path) && {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val prefix = fs.makeQualified(root).toUri.getPath.length
+      val files = fs.listFiles(root, true)
+      def hidden(part: String) = part.startsWith(".") ||
+        (part.startsWith("_") && !part.contains("="))
+      var found = false
+      while (!found && files.hasNext) {
+        found = !files.next().getPath.toUri.getPath.substring(prefix)
+          .split('/').exists(hidden)
+      }
+      found
+    }
 }
 
 /** One table of a [[Lake.writeTables]] job, as its write tasks see it:

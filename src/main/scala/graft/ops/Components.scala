@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.functions._
@@ -32,12 +32,19 @@ import org.apache.spark.storage.StorageLevel
   * distinct ids (an open-addressing id table plus id, parent and flag
   * arrays, 21-42 bytes an id), never per edge and never boxed.
   *
-  * Global phase: the variant's own rounds over the contracted edges,
-  * unchanged in logic, convergence probe and `maxIters`. They still run
-  * at least one confirming round, and more when a component spans
-  * partitions (pairs hash-partitioned by a shuffle spread almost every
-  * component that way); their count then follows the diameter of the
-  * graph of local stars, not of the input.
+  * Star-forest check ([[starNode]]): when the contracted edges are
+  * already a forest of stars centred at each component's minimum — the
+  * fixed point of both variants' rounds, and what every component whose
+  * edges sit in one partition becomes — the call skips the global phase.
+  * The check rides in an aggregate the call runs anyway, so it costs at
+  * most one job when it fails.
+  *
+  * Global phase: when the check fails, the variant's own rounds over the
+  * contracted edges, unchanged in logic, convergence probe and
+  * `maxIters`. A component spans partitions then (pairs hash-partitioned
+  * by a shuffle spread almost every component that way), and the round
+  * count follows the diameter of the graph of local stars, not of the
+  * input.
   *
   * Scale design (100 TB): each global round is keyed shuffle joins and
   * aggregations — no driver-side graph, no per-component state. Each
@@ -126,6 +133,23 @@ object Components {
       .persist()
   }
 
+  /** Per node of symmetric (src, dst) edges, aggregated under a
+    * `groupBy("src")`: whether the node fits a forest of stars centred at
+    * each component's minimum. It does when it has at most one distinct
+    * smaller neighbour, and a node that has one has no other neighbour, a
+    * NULL partner included (then its smallest smaller neighbour equals
+    * its largest neighbour). Edges that fit at every node (`bool_and`;
+    * an empty edge set reads NULL and fits) are the fixed point of both
+    * variants' rounds, and the labels `least(min(dst), src)` are final:
+    * a centre's neighbours are all leaves, a leaf's one neighbour is its
+    * centre, and a NULL endpoint's partners are all centres. min/max, not
+    * counts, so an edge that two partitions both emit counts once. */
+  private def starNode: Column = {
+    val smaller = min(when(col("dst") < col("src"), col("dst")))
+    smaller.isNull ||
+      (smaller === max(col("dst")) && !max(col("dst").isNull))
+  }
+
   /** (doc_id, component_id) for every id appearing in `pairs`, where
     * component_id is the minimum doc id of the connected component.
     * Deterministic; only ids present in at least one pair are returned
@@ -140,18 +164,20 @@ object Components {
     * its label with its label's label (pointer jumping — the shortcut
     * step of Shiloach-Vishkin-style CC). Step 1 alone needs diameter
     * rounds; step 2 halves the remaining pointer depth each round, so
-    * convergence is O(log diameter) rounds — a component that the local
-    * phase already made a star needs none beyond the confirming round.
-    * Each round is two shuffle joins (edges × labels and labels × labels,
-    * keyed by id) plus one min-aggregation. The convergence probe
-    * exploits monotonicity: labels only ever DECREASE, so the rounds
-    * converged exactly when sum(label) stops falling — ONE
+    * convergence is O(log diameter) rounds. The seeding aggregation also
+    * runs the star-forest check ([[starNode]]) and the first label sum
+    * folds it: when the local phase already made every component a star,
+    * the seeded labels are final and no round runs (nor when
+    * `maxIters` is 0). Each round is two shuffle joins (edges × labels
+    * and labels × labels, keyed by id) plus one min-aggregation. The
+    * convergence probe exploits monotonicity: labels only ever DECREASE,
+    * so the rounds converged exactly when sum(label) stops falling — ONE
     * map-side-combinable aggregate per round (decimal(38,0) sums stay
     * exact at any id range). Peak memory is two label generations plus
     * the edge set.
     *
     * Returns a [[handedOver]] relation (one extra job reads the last
-    * round's cache once): the caller's open cache scope owns it, and with
+    * label cache once): the caller's open cache scope owns it, and with
     * none open it frees itself once the caller drops it. */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIters: Int = 50): DataFrame = {
@@ -166,23 +192,26 @@ object Components {
     // distinct(). Every component converges one round earlier; the
     // monotone-decrease invariant and the final component-min labels are
     // unchanged (labels stay node ids of the same component).
+    // The same aggregation flags every node for the star-forest check.
     var labels = truncated(edges.groupBy(col("src")).agg(
-        least(min(col("dst")), col("src")).as("label"))
-      .select(col("src").as("id"), col("label")))
+        least(min(col("dst")), col("src")).as("label"), starNode.as("star"))
+      .select(col("src").as("id"), col("label"), col("star")))
     // exact at any scale: 10^12 ids each up to 10^12 still fit decimal(38,0).
     // sum() over ZERO rows is NULL — an empty pair table is a normal input
     // (a clean corpus has no near-dups), so it must read as 0, not NPE.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(
-          sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels) // also materializes the initial caches
+    val labelSum =
+      sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+    def sumOf(r: Row): java.math.BigDecimal =
+      Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+    // also materializes the initial caches
+    val seeded = labels.agg(labelSum, bool_and(col("star"))).head
+    var prevSum = sumOf(seeded)
     e0.unpersist(blocking = false)
     var iter = 0
-    var converged = false
+    var converged = seeded.isNullAt(1) || seeded.getBoolean(1)
     while (!converged && iter < maxIters) {
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
+      val prop = edges
+        .join(labels.select(col("id").as("src"), col("label")), "src")
         .select(col("dst").as("id"), col("label"))
       // the pointer-jump self-join reads hop on both sides, but both
       // sides are the IDENTICAL aggregate subtree over truncated leaves,
@@ -191,7 +220,7 @@ object Components {
       // than the previous truncated-hop form, and only the post-shuffle
       // final aggregation evaluates twice (same shuffle data, no extra
       // network or label generation held in memory)
-      val hop = labels.union(prop)
+      val hop = labels.select(col("id"), col("label")).union(prop)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
       // pointer jump: follow the label one more step (labels are node ids,
       // so every label resolves; coalesce is belt-and-braces for roots)
@@ -202,7 +231,7 @@ object Components {
       // labels only ever decrease, so an unchanged sum means NO label
       // moved — one aggregate action (which also materializes next's
       // cache), no per-round probe join
-      val curSum = labelSum(next)
+      val curSum = sumOf(next.agg(labelSum).head)
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       labels.unpersist(blocking = false)
@@ -238,10 +267,14 @@ object Components {
     * [[connectedComponents]].
     *
     * Local phase: [[contracted]] — the same star contraction the global
-    * rounds perform, done inside each partition with no shuffle; a
-    * partition that holds whole components hands the rounds stars that
-    * only need confirming. The node universe is read from the same
-    * cached contracted relation, so the pair lineage runs once.
+    * rounds perform, done inside each partition with no shuffle. The node
+    * universe is read from the same cached contracted relation, so the
+    * pair lineage runs once. The aggregate that counts the symmetric
+    * edges also runs the star-forest check ([[starNode]]): when every
+    * component left the local phase a star centred at its minimum (a
+    * partition held whole components), the edges are the rounds' fixed
+    * point and no round runs (nor when `maxIters` is 0); a failed check
+    * costs one job, the per-node shuffle under the count.
     *
     * Global phase: one round = large-star then small-star, each a
     * groupBy-min plus a projection over the symmetric edge set:
@@ -252,8 +285,8 @@ object Components {
     * Both preserve connectivity; alternation converges to a forest of
     * stars whose centers are the component minima. Convergence probe:
     * the (distinct) edge set is unchanged — a count, and an except only
-    * when the count matches. Rounds run until that probe holds: at least
-    * one, more while stars from different partitions share ids. Same
+    * when the count matches. Rounds run until that probe holds, as long
+    * as stars from different partitions share ids. Same
     * lineage-truncation discipline as connectedComponents (each round
     * re-references the previous edge set several times). Returns a
     * [[handedOver]] relation, like [[connectedComponents]]; here the
@@ -274,10 +307,14 @@ object Components {
     var edges = truncated(symmetric(e0))
     // the previous round's count is already known — carrying it in a
     // var saves one count job per round (edges is cached; the count was
-    // pure bookkeeping)
-    var nEdges = edges.count()
+    // pure bookkeeping). The first count sums per-node edge counts, so
+    // the star-forest check shares its aggregate.
+    val probe = edges.groupBy(col("src"))
+      .agg(count(lit(1)).as("n"), starNode.as("star"))
+      .agg(sum(col("n")), bool_and(col("star"))).head
+    var nEdges = if (probe.isNullAt(0)) 0L else probe.getLong(0)
     var iter = 0
-    var converged = false
+    var converged = probe.isNullAt(1) || probe.getBoolean(1)
     while (!converged && iter < maxIters) {
       // large-star: for each directed (src, dst > src): (dst, m) with
       // m = min over src's FULL neighborhood (and src itself)
@@ -317,8 +354,9 @@ object Components {
     }
     require(converged,
       s"connectedComponentsStars did not converge in $maxIters rounds")
-    // converged star forest: every non-root has exactly one (larger ->
-    // smaller) edge, to its component's minimum; roots label themselves
+    // converged star forest (the rounds', or the contraction's when the
+    // check passed): every non-root has exactly one (larger -> smaller)
+    // edge, to its component's minimum; roots label themselves
     val nonRoot = edges.filter(col("src") > col("dst"))
       .select(col("src").as("id"), col("dst").as("label"))
     val roots = allNodes.join(nonRoot.select(col("id")), Seq("id"),

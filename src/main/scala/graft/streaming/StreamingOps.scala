@@ -1263,7 +1263,13 @@ object StreamingOps {
     * added-since), so the final state equals one rebuild at the head —
     * q212 shares q211's batch oracle. Work per batch ∝ the window's
     * change volume (+ the rare flagged-sentinel rebuild); the
-    * unchanged corpus is never re-shingled. */
+    * unchanged corpus is never re-shingled.
+    *
+    * The stream runs in one child session per caller session
+    * ([[feedIndexSession]]), not a new one per call: a session that has
+    * started a stream stays reachable from the SparkContext's listener
+    * bus (its streaming query manager registers a listener there), so a
+    * session per call leaked one session's state per call. */
   def streamFeedIndexMaintain(spark: SparkSession, tablePath: String,
       fromV: Long, maxBucket: Int = 64,
       indexStateDir: Option[String] = None,
@@ -1273,8 +1279,7 @@ object StreamingOps {
     import graft.sources.FeedSource
     require(keepVersions >= 1,
       s"keepVersions must be >= 1 (got $keepVersions)")
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    val ss = feedIndexSession(spark)
     val stateDir = indexStateDir.getOrElse(java.nio.file.Files
       .createTempDirectory("graft-feedix").toString)
     // restart path: a consumer resuming at its checkpointed cursor finds
@@ -1326,6 +1331,21 @@ object StreamingOps {
       .awaitTermination()
     spark.read.parquet(s"$stateDir/v${cur.get}")
   }
+
+  private val feedIndexSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  /** [[streamFeedIndexMaintain]]'s session for callers on `spark`: one
+    * child session (same SparkContext, isolated SQL conf) with 4 shuffle
+    * partitions, made on the first call and reused by every later one
+    * (also by concurrent calls, which set nothing else on it). Keyed
+    * weakly by the caller's session. */
+  private def feedIndexSession(spark: SparkSession): SparkSession =
+    feedIndexSessions.computeIfAbsent(spark, { parent =>
+      val ss = parent.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", "4")
+      ss
+    })
 
   /** TABLE-level streaming change feed over a Hive-partitioned lake —
     * [[graft.lake.ChangeFeed.changeFeedTable]]'s streaming twin: ONE

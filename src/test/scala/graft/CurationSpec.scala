@@ -370,6 +370,79 @@ class CurationSpec extends SparkSpec {
     TextKit.releaseCaches()
   }
 
+  test("connected components: the star-forest check and the global " +
+      "rounds label alike") {
+    import org.apache.spark.sql.{DataFrame, Encoder}
+    import scala.reflect.ClassTag
+    type Labels = Map[Option[Any], Option[Any]]
+    // one partition per slice
+    def pairs[A: Encoder: ClassTag](slices: Seq[Seq[A]]): DataFrame =
+      spark.sparkContext.parallelize(slices, slices.size).flatMap(s => s)
+        .toDF("doc_a", "doc_b")
+    def run(df: DataFrame, stars: Boolean, maxIters: Int): Labels =
+      (if (stars) Components.connectedComponentsStars(df, maxIters = maxIters)
+        else Components.connectedComponents(df, maxIters = maxIters))
+        .collect().map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    def labels(kv: (Any, Any)*): Labels =
+      kv.map { case (k, v) => Option(k) -> Option(v) }.toMap
+    // Alone, each fixture leaves the local phase as stars: the check
+    // passes, so even maxIters = 0 answers. With a 3-node chain split
+    // over two more partitions the check fails, no answer comes without
+    // rounds, and the rounds label the fixture the same.
+    def alike[A: Encoder: ClassTag](fixture: String, slices: Seq[Seq[A]],
+        chain: Seq[A], chainIds: Seq[Any], cc: Labels, stars: Labels): Unit = {
+      val spread = pairs(slices ++ chain.map(Seq(_)))
+      val chainLabels = labels(chainIds.map(_ -> chainIds.head): _*)
+      for ((variant, want) <- Seq(false -> cc, true -> stars)) {
+        val name = s"$fixture, ${if (variant) "stars" else "min-label"}"
+        assert(run(pairs(slices), variant, maxIters = 0) == want, name)
+        intercept[IllegalArgumentException](run(spread, variant, 0))
+        assert(run(spread, variant, maxIters = 50) == want ++ chainLabels,
+          name)
+      }
+    }
+    val chain = Seq((100L, 101L), (101L, 102L))
+    val chainIds = Seq(100L, 101L, 102L)
+    alike("empty", Seq(Seq.empty[(Long, Long)]), chain, chainIds,
+      labels(), labels())
+    val selfOnly = labels(42L -> 42L, 7L -> 7L)
+    alike("reflexive only", Seq(Seq((42L, 42L), (7L, 7L), (7L, 7L))),
+      chain, chainIds, selfOnly, selfOnly)
+    val reflexive = labels(42L -> 42L, 1L -> 1L, 2L -> 1L)
+    alike("reflexive and one pair", Seq(Seq((42L, 42L), (1L, 2L))),
+      chain, chainIds, reflexive, reflexive)
+    // the same star emitted by two partitions: min/max, not counts
+    val dup = labels(1L -> 1L, 2L -> 1L, 3L -> 1L)
+    alike("duplicate pairs", Seq(Seq((1L, 2L), (1L, 3L), (2L, 1L)),
+      Seq((1L, 2L), (3L, 1L), (1L, 3L))), chain, chainIds, dup, dup)
+    // NULL partners of centres only: NULL gets the smallest partner
+    // (min-label) or stays NULL (stars)
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(4L), None), (None, Some(2L)), (Some(2L), Some(3L)),
+      (Some(5L), Some(4L)), (None, None), (Some(9L), Some(9L)))
+    val nullCc = labels((null, 2L), 2L -> 2L, 3L -> 2L, 4L -> 4L,
+      5L -> 4L, 9L -> 9L)
+    alike("NULL endpoint", Seq(withNulls),
+      chain.map { case (a, b) => (Option(a), Option(b)) }, chainIds,
+      nullCc, nullCc + (None -> None))
+    val ints = labels(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 1, 10 -> 10, 11 -> 10,
+      12 -> 10, 20 -> 20, 21 -> 20)
+    alike("int ids", Seq(Seq((1, 2), (2, 3), (3, 4), (10, 11), (11, 12),
+      (10, 12), (20, 21))), Seq((100, 101), (101, 102)), Seq(100, 101, 102),
+      ints, ints)
+    // a NULL partner of a leaf: its min-label is the leaf's centre, which
+    // only the rounds give it, so that check fails (the stars check drops
+    // NULL edges and passes)
+    val leafNull = pairs(Seq(Seq[(Option[Long], Option[Long])](
+      (Some(10L), Some(11L)), (Some(11L), None))))
+    intercept[IllegalArgumentException](run(leafNull, stars = false, 0))
+    assert(run(leafNull, stars = false, 50) ==
+      labels(10L -> 10L, 11L -> 10L, (null, 10L)))
+    assert(run(leafNull, stars = true, 0) ==
+      labels(10L -> 10L, 11L -> 10L, (null, null)))
+    TextKit.releaseCaches()
+  }
+
   // ---- row-local signatures ----
 
   test("row-local minhash signatures equal the aggregated form") {

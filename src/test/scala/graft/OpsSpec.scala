@@ -241,11 +241,25 @@ class OpsSpec extends SparkSpec {
       .connectedComponents(Seq(("a", "b")).toDF("doc_a", "doc_b")))
     assert(bad.getMessage.contains("doc_a"))
     // 500 ten-node chains (q64's shape) in ONE partition: the local
-    // union-find hands the global rounds finished stars, so the job count
-    // no longer grows with the chain diameter
-    val chains = spark.sparkContext.parallelize(
-      (0L until 5000L).filter(_ % 10 != 9).map(i => (i, i + 1)), 1)
+    // union-find leaves finished stars, the star-forest check passes and
+    // no global round runs
+    val chains = spark.sparkContext.parallelize(chainEdges, 1)
       .toDF("doc_a", "doc_b")
+    val (labels, jobs) =
+      jobCount(Components.connectedComponentsStars(chains).collect())
+    assert(labels.length == 5000 &&
+      labels.forall(r => r.getLong(1) == r.getLong(0) / 10 * 10))
+    // 12 measured; 34 with a confirming round, 126 with no local phase
+    assert(jobs <= 14, s"star CC over one-partition chains ran $jobs jobs")
+    TextKit.releaseCaches()
+  }
+
+  /** 500 ten-node chains, q64's pair shape. */
+  private val chainEdges =
+    (0L until 5000L).filter(_ % 10 != 9).map(i => (i, i + 1))
+
+  /** `body`'s result and the Spark jobs it started. */
+  private def jobCount[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -254,16 +268,42 @@ class OpsSpec extends SparkSpec {
       }
     }
     spark.sparkContext.addSparkListener(l)
-    val labels =
-      try {
-        val out = Components.connectedComponentsStars(chains).collect()
-        Thread.sleep(1000) // listener bus is async
-        out
-      } finally spark.sparkContext.removeSparkListener(l)
-    assert(labels.length == 5000 &&
-      labels.forall(r => r.getLong(1) == r.getLong(0) / 10 * 10))
-    assert(jobs.get <= 40, // 36 measured; 126 with no local phase
-      s"star CC over one-partition chains ran ${jobs.get} jobs")
+    try {
+      val out = body
+      Thread.sleep(1000) // listener bus is async
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("connected components: chains spread over partitions fall back to " +
+      "the global rounds") {
+    // the same chains dealt round-robin over 4 partitions: each partition
+    // holds pieces of every chain, the local phase leaves paths of stars,
+    // and the star-forest check fails
+    val dealt = (0 until 4).map(p =>
+      chainEdges.indices.filter(_ % 4 == p).map(chainEdges))
+    val spread = spark.sparkContext.parallelize(dealt, 4).flatMap(s => s)
+      .toDF("doc_a", "doc_b")
+    val want = (0L until 5000L).map(i => i -> i / 10 * 10).toMap
+    // jobs with the rounds alone (no check), run alone: min-label 31-34
+    // across runs of this input, stars 126. With the check, stars ran 127
+    // alone and 128 in a full suite run, so both bounds keep one job of
+    // run-to-run jitter on top of the old count
+    for ((variant, oldJobs) <- Seq("min-label" -> 34, "stars" -> 127)) {
+      def cc(maxIters: Int) =
+        if (variant == "stars")
+          Components.connectedComponentsStars(spread, maxIters = maxIters)
+        else Components.connectedComponents(spread, maxIters = maxIters)
+      // no round allowed: only a passed check could answer
+      intercept[IllegalArgumentException](cc(maxIters = 0))
+      val (labels, jobs) = jobCount(cc(maxIters = 50).collect())
+      // the one-partition labels
+      assert(labels.map(r => r.getLong(0) -> r.getLong(1)).toMap == want,
+        variant)
+      // a failed check costs at most one job over the rounds alone
+      assert(jobs <= oldJobs + 1,
+        s"$variant CC over spread chains ran $jobs jobs")
+    }
     TextKit.releaseCaches()
   }
 

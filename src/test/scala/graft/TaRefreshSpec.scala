@@ -143,6 +143,19 @@ class TaRefreshSpec extends SparkSpec {
     }
   }
 
+  test("csvFidelity: a tag append into an empty tags directory is the " +
+      "table's first write") {
+    val root = Files.createTempDirectory("graft-emptytags").toString
+    Files.createDirectories(java.nio.file.Paths.get(Lake.tagsPath(root)))
+    val tags = graft.ingest.TaIngest.tags(tagSource(), Seq("CostCenter"))
+    Lake.writeTags(tags, root, csvFidelity = true)
+    val csv = filesUnder(Lake.tagsPath(root)).filter(_.endsWith(".csv"))
+    assert(csv.size == 1, s"tag files: $csv")
+    val header = Files.readAllLines(java.nio.file.Paths.get(csv.head)).get(0)
+    assert(header.split(",").toSeq ==
+      tags.columns.toSeq.filterNot(Seq("year", "month", "day").contains))
+  }
+
   test("a failing write task appends nothing to any table") {
     val specs = Seq(CheckRegistry.lowUtilEc2, CheckRegistry.idleLb)
     def day1(root: String, withTags: Boolean): Unit =
