@@ -53,6 +53,14 @@ object Pipeline {
     *
     * [[ingestStream]] runs this once per micro-batch. */
   def ingest(raw: DataFrame, tagObs: Option[DataFrame], cfg: Config): Unit = {
+    val (routed, targets) = ingestTables(raw, tagObs, cfg)
+    Lake.writeTables(routed, targets, cfg.csvFidelity)
+  }
+
+  /** What [[ingest]] hands [[Lake.writeTables]]: the routed frame of
+    * every table and each table's lake path. */
+  private[graft] def ingestTables(raw: DataFrame, tagObs: Option[DataFrame],
+      cfg: Config): (DataFrame, Map[String, String]) = {
     val checks = TaIngest.routed(TaIngest.parsed(raw), cfg.specs, cfg.maskPii)
     val tags = tagObs.map { obs =>
       val t = TaIngest.tags(obs, cfg.tagKeys)
@@ -63,9 +71,8 @@ object Pipeline {
       cfg.specs.map(s => s.tableName -> Lake.detailsPath(cfg.lakeRoot, s)) ++
         Seq(TaIngest.SummaryTable -> Lake.summaryPath(cfg.lakeRoot)) ++
         tags.map(_ => "tags" -> Lake.tagsPath(cfg.lakeRoot))
-    Lake.writeTables(
-      tags.fold(checks)(checks.unionByName(_, allowMissingColumns = true)),
-      targets.toMap, cfg.csvFidelity)
+    (tags.fold(checks)(checks.unionByName(_, allowMissingColumns = true)),
+      targets.toMap)
   }
 
   /** Register lake tables + build views (entry point B). Returns the

@@ -1,10 +1,15 @@
 package graft.lake
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptContext, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -39,7 +44,9 @@ import graft.sources.TaCheckResultSource
   * the one write path: a whole ingest — every check table, the summary
   * and the tags — is one REBALANCE and one fan-out write job, the
   * reference's Step Functions `Map` fan-out over (account, check) as one
-  * Spark stage; the single-table writers are its one-table calls.
+  * Spark stage; the single-table writers are its one-table calls. A write
+  * ships one Hadoop job conf, not one per table, and on the local file
+  * system sets modes without forking `chmod` ([[ForklessLocalFileSystem]]).
   */
 object Lake {
 
@@ -97,47 +104,60 @@ object Lake {
     * by). A failed job moves nothing: no table gains a file or, if it
     * had none, a directory. K6
     * empty-relation elision (extract-ta-data-lambda.py:153,187): a table
-    * with no rows gets no file and no directory. */
+    * with no rows gets no file and no directory.
+    *
+    * The job ships ONE Hadoop job conf, the session's plus the format
+    * options, as a broadcast (one copy per executor, as Spark's file scans
+    * ship theirs); each sink carries only the few keys its format's
+    * `prepareWrite` set ([[FanoutSink.prepare]]). On the local file system
+    * that conf selects [[ForklessLocalFileSystem]] unless the session
+    * names its own `fs.file.impl`, so no new directory, file or `.crc`
+    * forks a `chmod`. It also turns the `file:` FS cache off:
+    * `FileSystem.get` caches by scheme, authority and user, not by conf,
+    * so with the cache on the tasks and the commit would get the JVM's
+    * cached `file:` FS (with Hive on the classpath, a forking
+    * `ProxyLocalFileSystem`). The driver's commit takes one file system
+    * per sink from the same conf. */
   def writeTables(routed: DataFrame, targets: Map[String, String],
       csvFidelity: Boolean): Unit = {
     val spark = routed.sparkSession
-    val sinks = targets.toSeq.sortBy(_._1).map { case (table, path) =>
-      FanoutSink.prepare(spark, table, path,
-        routed.schema(table).dataType.asInstanceOf[StructType], csvFidelity)
-    }.toArray
+    val (conf, sinks) = FanoutSink.prepare(routed, targets, csvFidelity)
     // the row layout the write tasks read (FanoutSink.writeTask)
     val rows = routed.select(Seq(col(TaIngest.TableCol)) ++
       ymd(col("date")) ++ sinks.map(s => col(s"`${s.table}`")): _*)
     val job = java.util.UUID.randomUUID.toString
     val qe = rows.hint("rebalance", col(TaIngest.TableCol), col("year"),
       col("month"), col("day")).queryExecution
-    val conf = spark.sparkContext.hadoopConfiguration
+    val fss = sinks.map(s => new Path(s.path).getFileSystem(conf))
+    val shared = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     try {
       val staged = SQLExecution.withNewExecutionId(qe, Some("lake write")) {
-        qe.toRdd.mapPartitionsWithIndex(FanoutSink.writeTask(job, sinks))
+        qe.toRdd.mapPartitionsWithIndex(FanoutSink.writeTask(job, shared, sinks))
           .collect()
       }
       staged.foreach { f =>
         val leaf = new Path(sinks(f.sink).path, f.leaf)
-        val fs = leaf.getFileSystem(conf)
+        val fs = fss(f.sink)
         fs.mkdirs(leaf)
         val to = new Path(leaf, f.name)
         if (!fs.rename(new Path(f.staged), to))
           throw new java.io.IOException(s"lake write: cannot move ${f.staged} to $to")
       }
       staged.map(_.sink).distinct.foreach { i =>
-        val marker = new Path(sinks(i).path, "_SUCCESS")
-        marker.getFileSystem(conf).create(marker, true).close()
+        fss(i).create(new Path(sinks(i).path, "_SUCCESS"), true).close()
       }
-    } finally sinks.foreach { s =>
-      val table = new Path(s.path)
-      val fs = table.getFileSystem(conf)
-      fs.delete(new Path(table, s"_temporary/$job"), true)
-      // the shared `_temporary`, then a table dir that only this job's
-      // staging created (a failed first write), go once they are empty
-      Seq(new Path(table, "_temporary"), table).foreach { d =>
-        if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+    } finally {
+      sinks.indices.foreach { i =>
+        val table = new Path(sinks(i).path)
+        val fs = fss(i)
+        fs.delete(new Path(table, s"_temporary/$job"), true)
+        // the shared `_temporary`, then a table dir that only this job's
+        // staging created (a failed first write), go once they are empty
+        Seq(new Path(table, "_temporary"), table).foreach { d =>
+          if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+        }
       }
+      shared.destroy()
     }
   }
 
@@ -394,11 +414,11 @@ object Lake {
 }
 
 /** One table of a [[Lake.writeTables]] job, as its write tasks see it:
-  * its data schema, and the output-writer factory and job conf Spark's
-  * file format prepared for it. */
+  * its data schema, the output-writer factory Spark's file format prepared
+  * for it, and the entries its job conf sets over the write's shared one. */
 private[lake] final case class FanoutSink(table: String, path: String,
     schema: StructType, factory: OutputWriterFactory,
-    conf: SerializableConfiguration)
+    jobConf: Map[String, String])
 
 /** A file one write task staged: its sink's index, the leaf it belongs
   * in, its staged path and its file name. */
@@ -407,30 +427,56 @@ private[lake] final case class StagedFile(sink: Int, leaf: String,
 
 private[lake] object FanoutSink {
 
-  /** The sink of `table`, prepared as `DataFrameWriter` prepares a
-    * partitioned append to `path`: the header-CSV or parquet format's
-    * `prepareWrite` over a job conf of its own. */
-  def prepare(spark: SparkSession, table: String, path: String,
-      schema: StructType, csv: Boolean): FanoutSink = {
+  private val FileImpl = "fs.file.impl"
+
+  /** The sinks of one [[Lake.writeTables]] of `routed` to `targets`, in
+    * key order — each table prepared as `DataFrameWriter` prepares a
+    * partitioned append to its path: the header-CSV or parquet format's
+    * `prepareWrite` over a job conf of its own — and the one job conf
+    * they share: the session's Hadoop conf with the format options and,
+    * on a platform with unix modes and no `fs.file.impl` of the
+    * session's, [[ForklessLocalFileSystem]] with its FS cache off (see
+    * [[Lake.writeTables]]). A sink keeps only the
+    * entries of its job conf that differ from the shared one — the
+    * output dir, the parquet write schema and the like: 15 keys for
+    * parquet and 3 for CSV, of the session conf's 1,100. */
+  def prepare(routed: DataFrame, targets: Map[String, String],
+      csv: Boolean): (Configuration, Array[FanoutSink]) = {
+    val spark = routed.sparkSession
     val options =
       if (csv) Map("header" -> "true") else Map.empty[String, String]
-    val job = Job.getInstance(
-      spark.sessionState.newHadoopConfWithOptions(options))
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[InternalRow])
-    FileOutputFormat.setOutputPath(job, new Path(path))
-    val format = if (csv) new CSVFileFormat else new ParquetFileFormat
-    FanoutSink(table, path, schema,
-      format.prepareWrite(spark, job, options, schema),
-      new SerializableConfiguration(job.getConfiguration))
+    val shared = spark.sessionState.newHadoopConfWithOptions(options)
+    if (Option(shared.getTrimmed(FileImpl)).forall(_.isEmpty) &&
+        ForklessLocalFileSystem.usable) {
+      shared.set(FileImpl, classOf[ForklessLocalFileSystem].getName)
+      shared.setBoolean(s"$FileImpl.disable.cache", true)
+    }
+    def entries(c: Configuration): Map[String, String] =
+      c.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    val base = entries(shared)
+    val sinks = targets.toSeq.sortBy(_._1).map { case (table, path) =>
+      val schema = routed.schema(table).dataType.asInstanceOf[StructType]
+      val job = Job.getInstance(shared)
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      FileOutputFormat.setOutputPath(job, new Path(path))
+      val format = if (csv) new CSVFileFormat else new ParquetFileFormat
+      val factory = format.prepareWrite(spark, job, options, schema)
+      FanoutSink(table, path, schema, factory, entries(job.getConfiguration)
+        .filter { case (k, v) => !base.get(k).contains(v) })
+    }.toArray
+    (shared, sinks)
   }
 
   /** One write task: each row goes to the writer of its (table, leaf),
-    * opened at the leaf's first row, under the attempt's staging dir.
+    * opened at the leaf's first row, under the attempt's staging dir. A
+    * sink's job conf is built when its first writer opens: the shared
+    * conf with the sink's own entries set over it.
     * Returns the staged files once every writer closed. Rows are
     * (table key, year, month, day, then sink i's struct at ordinal 4 + i),
     * the layout [[Lake.writeTables]] selects. */
-  def writeTask(job: String, sinks: Array[FanoutSink])(part: Int,
+  def writeTask(job: String, shared: Broadcast[SerializableConfiguration],
+      sinks: Array[FanoutSink])(part: Int,
       rows: Iterator[InternalRow]): Iterator[StagedFile] = {
     val task = TaskContext.get()
     val attempt = new TaskAttemptID(new TaskID(new JobID(job, task.stageId()),
@@ -443,8 +489,11 @@ private[lake] object FanoutSink {
       .empty[(Int, Seq[Any]), (OutputWriter, StagedFile)]
     def openWriter(i: Int, values: Seq[Any]): (OutputWriter, StagedFile) = {
       val s = sinks(i)
-      if (contexts(i) == null)
-        contexts(i) = new TaskAttemptContextImpl(s.conf.value, attempt)
+      if (contexts(i) == null) {
+        val conf = new JobConf(shared.value.value)
+        s.jobConf.foreach { case (k, v) => conf.set(k, v) }
+        contexts(i) = new TaskAttemptContextImpl(conf, attempt)
+      }
       val leaf = Lake.partitionCols.zip(values).map { case (c, v) =>
         ExternalCatalogUtils.getPartitionPathString(c,
           if (v == null) null else v.toString)

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
@@ -17,23 +19,8 @@ import graft.sources.{TaCheckResultSource, TaFetchStub}
   * readers rely on, and catalog registration takes each detail/summary
   * schema from the ingest projection (no footer job) while keeping the
   * crawler's schema. */
-class TaRefreshSpec extends SparkSpec {
+class TaRefreshSpec extends TaSourceSpec {
   import spark.implicits._
-
-  private val accounts =
-    "123456789012:Acme:ops@acme.example,999988887777:Beta:eng@beta.example"
-
-  private def taSource(checks: Seq[String], date: String = "01-15-2024") =
-    spark.read.format("graft.sources.TaCheckResultSource")
-      .option("accounts", accounts).option("checks", checks.mkString(","))
-      .option("date", date).load()
-
-  private def tagSource(date: String = "01-15-2024") =
-    spark.read.format("graft.sources.TagObservationSource")
-      .option("accounts", accounts)
-      .option("resourceTypes", "ec2:instance,ec2:volume")
-      .option("regions", "us-east-1,eu-west-1")
-      .option("date", date).load()
 
   /** Runs `body` with `listener` attached, letting the async bus drain. */
   private def listening[T](listener: SparkListener)(body: => T): T = {
@@ -46,15 +33,6 @@ class TaRefreshSpec extends SparkSpec {
   private def lakeTables(root: String): Seq[(String, String)] =
     CheckRegistry.supported.map(s => s.tableName -> Lake.detailsPath(root, s)) :+
       ("summary" -> Lake.summaryPath(root))
-
-  private def filesUnder(root: String): Set[String] = {
-    val it = Files.walk(java.nio.file.Paths.get(root))
-    try {
-      val b = Set.newBuilder[String]
-      it.forEach(p => b += p.toString)
-      b.result()
-    } finally it.close()
-  }
 
   test("Pipeline.ingest sweeps the tag source once") {
     // the TA documents come from a local frame, so every DataSourceRDD
@@ -224,6 +202,38 @@ class TaRefreshSpec extends SparkSpec {
     assert(jobs.get <= 4, s"ingest ran ${jobs.get} Spark jobs")
     (lakeTables(root).map(_._2) :+ Lake.tagsPath(root)).foreach { p =>
       assert(new java.io.File(p, "year=2024/month=1/day=15").isDirectory, p)
+    }
+  }
+
+  /** The command lines of the `chmod` processes this JVM started while
+    * `body` ran, from an in-process JFR recording of `jdk.ProcessStart`.
+    * Other commands are not counted: another thread may start one. */
+  private def chmodsDuring(body: => Unit): Seq[String] = {
+    val recording = new jdk.jfr.Recording()
+    val dump = Files.createTempFile("graft-procs", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      try body finally recording.stop()
+      recording.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(_.getString("command"))
+        .filter(_.split(' ').head.split('/').last == "chmod")
+    } finally { recording.close(); Files.delete(dump) }
+  }
+
+  test("an ingest starts no chmod process, on parquet and in csvFidelity " +
+      "mode") {
+    Seq(false, true).foreach { csv =>
+      val root = Files.createTempDirectory("graft-nofork").toString
+      val chmods = chmodsDuring {
+        Pipeline.ingest(taSource(CheckRegistry.supported.map(_.id)),
+          Some(tagSource()), Pipeline.Config(root,
+            tagKeys = Seq("CostCenter", "Env"), csvFidelity = csv))
+      }
+      assert(new java.io.File(Lake.tagsPath(root), "_SUCCESS").isFile)
+      assert(chmods.isEmpty, s"csvFidelity=$csv: ${chmods.size} chmod " +
+        s"processes, e.g. ${chmods.take(3).mkString("; ")}")
     }
   }
 
